@@ -20,11 +20,16 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Managed-table warehouse location — static config, so it is fixed once
-    * per JVM at session build (a fresh temp dir keeps test runs isolated;
-    * a real deployment overrides via -Dspark.sql.warehouse.dir). */
+    * per JVM at session build (a fresh temp dir keeps test runs isolated
+    * and is removed when the JVM exits; a real deployment overrides via
+    * -Dspark.sql.warehouse.dir). */
   lazy val warehouseDir: String =
-    sys.props.getOrElse("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+    sys.props.getOrElse("spark.sql.warehouse.dir", {
+      val d = java.nio.file.Files.createTempDirectory("graft_warehouse")
+      sys.addShutdownHook(
+        scala.util.Try(graft.emulator.Catalog.deleteRecursively(d)))
+      d.toString
+    })
 
   /** Shuffle/spill scratch directory. An explicit `-Dspark.local.dir` always
     * wins; otherwise prefer RAM-backed /dev/shm when it is writable —
@@ -87,7 +92,7 @@ object GraftSession {
     * or standalone master build their command from
     * `spark.executor.extraJavaOptions`, not from sbt, so the list must
     * also ship through the conf. */
-  private val jdk17AddOpens: Seq[String] = Seq(
+  private[graft] val jdk17AddOpens: Seq[String] = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",

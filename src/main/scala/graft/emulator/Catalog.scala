@@ -1,6 +1,7 @@
 package graft.emulator
 
-import java.nio.file.{Files, Path}
+import java.io.IOException
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -110,17 +111,50 @@ final class Catalog(val spark: SparkSession) {
       if (!orReplace) throw SnowflakeError.alreadyExists(
         s"table ${r.database}.${r.schema}.${r.table} already exists")
     }
-    createDatabase(r.database)
-    createSchema(r.database, r.schema, ifNotExists = true)
     val struct = StructType(columns.map(c =>
       org.apache.spark.sql.types.StructField(
         c.name, TypeMapper.toSparkType(c.snowflakeType), c.nullable)))
+    install(r, struct, TableMeta(r.database, r.schema, r.table, "BASE TABLE",
+      columns, clusterKey = clusterKey))
+  }
+
+  /** Create the physical table with `struct` (one write of the empty frame,
+    * which leaves a schema-carrying empty file unless the table is
+    * bucketed) and register `meta` for it. */
+  private def install(r: TableNaming.Ref, struct: StructType, meta: TableMeta): Unit = {
+    createDatabase(r.database)
+    createSchema(r.database, r.schema, ifNotExists = true)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], struct)
-    write(empty, clusterKey).mode(SaveMode.Overwrite)
+    write(empty, meta.clusterKey).mode(SaveMode.Overwrite)
       .saveAsTable(sparkTableName(r))
-    tables.put(tKey(r), TableMeta(r.database, r.schema, r.table, "BASE TABLE",
-      columns, clusterKey = clusterKey))
+    tables.put(tKey(r), meta)
+  }
+
+  /** CREATE TABLE ... CLONE: the new table's files are hard links to the
+    * source's current files, with their names — Spark's bucket ids among
+    * them, so a clustered clone keeps its buckets. They replace the empty
+    * file the create wrote. The clone takes the source's physical schema,
+    * which a CTAS table's catalog types do not always round-trip to. Both
+    * tables are locked, in key order, so that neither a write to the
+    * source nor one to an existing destination lands mid-clone. A table
+    * cloned onto itself keeps its content. */
+  def cloneTable(src: TableNaming.Ref, dst: TableNaming.Ref): Unit = {
+    val meta = getTable(src).getOrElse(throw SnowflakeError.notFound(
+      s"table ${src.database}.${src.schema}.${src.table} does not exist"))
+    val Seq(first, second) = Seq(src, dst).sortBy(tKey)
+    if (src != dst) lockFor(first).synchronized(lockFor(second).synchronized {
+      val df = tableDf(src)
+      install(dst, df.schema, TableMeta(dst.database, dst.schema, dst.table,
+        "BASE TABLE", meta.columns, clusterKey = meta.clusterKey))
+      val loc = Paths.get(spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(sparkTableName(dst))).location)
+      val written = Files.list(loc)
+      try written.iterator().asScala.toSeq.foreach(Files.delete)
+      finally written.close()
+      dataFiles(df).foreach(f => linkOrCopy(f, loc.resolve(f.getFileName)))
+      spark.catalog.refreshTable(sparkTableName(dst))
+    })
   }
 
   /** Snowflake CLUSTER BY -> Spark bucketed table: joins/aggregations on
@@ -197,6 +231,31 @@ final class Catalog(val spark: SparkSession) {
       } finally deleteRecursively(tmp)
     }
 
+  /** Snapshot a table's current data files into a new directory under
+    * `root` without copying them: Spark never rewrites a parquet file in
+    * place (an overwrite only unlinks directory entries), so a hard link
+    * keeps this version's bytes for as long as the snapshot holds it. Runs
+    * under the table lock, so a concurrent overwrite cannot unlink a file
+    * between the listing and the link. The snapshot keeps the table's
+    * schema: files written before an ADD COLUMN lack the column, and a
+    * table without files (an empty bucketed one) has no footer at all.
+    * None, and no directory, when the files exceed `maxBytes`. */
+  def snapshotTable(r: TableNaming.Ref, root: Path,
+      maxBytes: Long = Long.MaxValue): Option[Snapshot] =
+    lockFor(r).synchronized {
+      val df = tableDf(r)
+      val files = dataFiles(df)
+      if (files.map(Files.size).sum > maxBytes) None
+      else {
+        val dir = Files.createTempDirectory(root, "s")
+        files.foreach(f => linkOrCopy(f, dir.resolve(f.getFileName)))
+        Some(Snapshot(dir, df.schema))
+      }
+    }
+
+  private def dataFiles(df: DataFrame): Seq[Path] =
+    df.inputFiles.toSeq.map(f => Paths.get(new java.net.URI(f)))
+
   def appendToTable(r: TableNaming.Ref, df: DataFrame): Unit =
     lockFor(r).synchronized {
       write(df, getTable(r).flatMap(_.clusterKey))
@@ -249,15 +308,30 @@ final class Catalog(val spark: SparkSession) {
 
   def listFileFormats(db: String): Seq[FileFormatMeta] =
     fileFormats.values.asScala.filter(_.database == up(db)).toSeq.sortBy(_.name)
+}
 
-  private def deleteRecursively(p: Path): Unit = {
+object Catalog {
+  /** A table's data files at one point, linked into `dir`, with the
+    * table's schema at that point ([[Catalog.snapshotTable]]). */
+  final case class Snapshot(dir: Path, schema: StructType) {
+    def read(spark: SparkSession): DataFrame =
+      spark.read.schema(schema).parquet(dir.toString)
+    def delete(): Unit = deleteRecursively(dir)
+  }
+
+  /** Hard-link `dst` to `src`; where the filesystem refuses (`dst` on
+    * another filesystem, or one without hard links), copy the file. */
+  private[emulator] def linkOrCopy(src: Path, dst: Path,
+      link: (Path, Path) => Unit = (d, s) => { Files.createLink(d, s); () }): Unit =
+    try link(dst, src)
+    catch { case _: IOException | _: UnsupportedOperationException => Files.copy(src, dst) }
+
+  private[graft] def deleteRecursively(p: Path): Unit = {
     val s = Files.walk(p)
     try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     finally s.close()
   }
-}
 
-object Catalog {
   final case class ColumnDef(
       name: String, snowflakeType: String, nullable: Boolean = true,
       default: Option[String] = None, primaryKey: Boolean = false)

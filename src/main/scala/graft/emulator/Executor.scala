@@ -133,17 +133,19 @@ final class Executor(
     * offset bookkeeping. */
   private final case class StreamMeta(name: String,
       @volatile var table: TableNaming.Ref,
-      @volatile var baseline: java.nio.file.Path, appendOnly: Boolean = false,
+      @volatile var baseline: Catalog.Snapshot, appendOnly: Boolean = false,
       @volatile var stale: Boolean = false)
   private val streams = new ConcurrentHashMap[String, StreamMeta]()
 
   /** Time Travel: per-table ring of content versions, one recorded after
     * each write statement (queryId, snapshot path, wall time). AT/BEFORE
-    * clauses resolve against this ring. Snowflake snapshots metadata
-    * zero-copy; the emulator copies parquet — a production port would
-    * record file manifests instead. Bounded at 8 versions per table. */
+    * clauses resolve against this ring. Like Snowflake's metadata over
+    * immutable micro-partitions, a version is a directory of hard links to
+    * the table's parquet files at that statement ([[Catalog.snapshotTable]]):
+    * no data is copied, and a version only keeps alive the files later
+    * writes unlinked from the table. Bounded at 8 versions per table. */
   private final case class TableVersion(queryId: String,
-      path: java.nio.file.Path, atMillis: Long)
+      snapshot: Catalog.Snapshot, atMillis: Long)
   private val tableVersions =
     new ConcurrentHashMap[String, java.util.ArrayDeque[TableVersion]]()
   private val MaxVersionsPerTable = 8
@@ -151,42 +153,43 @@ final class Executor(
   private def tableKey(r: TableNaming.Ref) =
     s"${r.database}.${r.schema}.${r.table}"
 
-  /** Tables above this on-disk size are not versioned (the snapshot would
-    * double every DML's write cost); AT/BEFORE then reports time travel
-    * unavailable — the honest trade-off for a copying emulator. */
+  /** Tables above this on-disk size are not versioned: a version costs no
+    * write, but it pins the table's replaced files on disk until it is
+    * evicted, up to 8 table sizes per table. AT/BEFORE then reports time
+    * travel unavailable. The same cap bounds the UNDROP retention. */
   private val TimeTravelMaxBytes: Long =
     Dials.long("graft.timeTravelMaxBytes")
       .getOrElse(1024L * 1024 * 1024)
 
-  /** Streams must snapshot their source as the CDC baseline; above this
-    * size the copy is refused (CREATE STREAM errors; a later advance past
-    * the cap marks the stream stale) instead of silently doubling storage
-    * per consumed DML — the same honest trade-off as time travel. */
+  /** Streams snapshot their source as the CDC baseline; above this size
+    * the snapshot is refused (CREATE STREAM errors; a later advance past
+    * the cap marks the stream stale) instead of pinning the source's
+    * replaced files without bound — the same trade-off as time travel. */
   private val StreamSnapshotMaxBytes: Long =
     Dials.long("graft.streamSnapshotMaxBytes")
       .getOrElse(8L * 1024 * 1024 * 1024)
 
-  /** On-disk bytes of a table — fs-metadata only, no data scan. */
-  private def tableBytes(ref: TableNaming.Ref): Long =
-    catalog.tableDf(ref).inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).length()).sum
+  /** Every snapshot directory (versions, stream baselines, UNDROP
+    * retention, transaction snapshots) lives under this root, which
+    * [[close]] deletes. */
+  private val snapshotRoot = Files.createTempDirectory("graft_snapshots")
 
   /** Snapshot a table's current content as the post-state of `queryId`. */
   private def recordVersion(ref: TableNaming.Ref, queryId: String): Unit =
-    if (catalog.tableExists(ref)) {
-      val df = catalog.tableDf(ref)
-      val bytes = tableBytes(ref)
-      if (bytes <= TimeTravelMaxBytes) {
-        val tmp = Files.createTempDirectory("graft_tt")
-        df.write.mode("overwrite").parquet(tmp.toString)
+    if (catalog.tableExists(ref))
+      catalog.snapshotTable(ref, snapshotRoot, TimeTravelMaxBytes).foreach { snap =>
         val ring = tableVersions.computeIfAbsent(tableKey(ref),
           _ => new java.util.ArrayDeque[TableVersion]())
         ring.synchronized {
-          ring.addLast(TableVersion(queryId, tmp, System.currentTimeMillis()))
-          while (ring.size() > MaxVersionsPerTable) deleteDir(ring.removeFirst().path)
+          ring.addLast(TableVersion(queryId, snap, System.currentTimeMillis()))
+          while (ring.size() > MaxVersionsPerTable) ring.removeFirst().snapshot.delete()
         }
       }
-    }
+
+  /** Delete every snapshot this executor holds; the server calls it when
+    * it stops, after which the executor takes no more statements. */
+  def close(): Unit =
+    if (Files.exists(snapshotRoot)) Catalog.deleteRecursively(snapshotRoot)
 
   /** Identity bookkeeping when a table is dropped or replaced: streams on
     * it go stale (Snowflake: the stream can no longer resolve its source's
@@ -197,7 +200,7 @@ final class Executor(
     streams.asScala.values.foreach(sm => if (sm.table == ref) sm.stale = true)
     Option(tableVersions.remove(tableKey(ref))).foreach { ring =>
       ring.synchronized {
-        while (!ring.isEmpty) deleteDir(ring.removeFirst().path)
+        while (!ring.isEmpty) ring.removeFirst().snapshot.delete()
       }
     }
   }
@@ -212,13 +215,13 @@ final class Executor(
   }
 
   /** Drop-retention for UNDROP TABLE: the last 20 dropped tables' metadata
-    * and a parquet snapshot of their content at drop time. */
+    * and a snapshot of their content at drop time. */
   private val droppedTables =
-    new java.util.LinkedHashMap[String, (Catalog.TableMeta, java.nio.file.Path)](
+    new java.util.LinkedHashMap[String, (Catalog.TableMeta, Catalog.Snapshot)](
       16, 0.75f, false) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Catalog.TableMeta, java.nio.file.Path)]) = {
-        if (size() > 20) { deleteDir(e.getValue._2); true } else false
+          e: java.util.Map.Entry[String, (Catalog.TableMeta, Catalog.Snapshot)]) = {
+        if (size() > 20) { e.getValue._2.delete(); true } else false
       }
     }
 
@@ -541,7 +544,7 @@ final class Executor(
         s"Time travel data is not available for table ${ref.table} at the requested point"))
       n += 1
       val view = s"graft_tt_$n"
-      spark.read.parquet(v.path.toString).createOrReplaceTempView(view)
+      v.snapshot.read(spark).createOrReplaceTempView(view)
       java.util.regex.Matcher.quoteReplacement(s"`$view`")
     })
   }
@@ -567,7 +570,7 @@ final class Executor(
               s"Stream ${sm.name} is stale: source table " +
                 s"${sm.table.table} was dropped or replaced")
           val cur = catalog.tableDf(sm.table)
-          val base = spark.read.parquet(sm.baseline.toString)
+          val base = sm.baseline.read(spark)
           val inserted = cur.exceptAll(base)
             .withColumn("METADATA$ACTION", org.apache.spark.sql.functions.lit("INSERT"))
           // APPEND_ONLY streams surface inserts only (cheaper: one
@@ -605,17 +608,16 @@ final class Executor(
       if (key.startsWith(s"${norm(ctx.database)}.${norm(ctx.schema)}.") &&
         !sm.stale && catalog.tableExists(sm.table) &&
         mentionsOutsideQuotes(sql, streamNameRe(sm.name))) {
-        if (tableBytes(sm.table) > StreamSnapshotMaxBytes) {
-          // the DML already succeeded; refusing the copy must not fail it.
-          // The stream can no longer track its source within the cap, so
-          // it goes stale (subsequent reads raise the stale error).
-          sm.stale = true
-        } else {
-          val tmp = Files.createTempDirectory("graft_stream")
-          catalog.tableDf(sm.table).write.mode("overwrite").parquet(tmp.toString)
-          val old = sm.baseline
-          sm.baseline = tmp
-          deleteDir(old)
+        catalog.snapshotTable(sm.table, snapshotRoot, StreamSnapshotMaxBytes) match {
+          case Some(snap) =>
+            val old = sm.baseline
+            sm.baseline = snap
+            old.delete()
+          case None =>
+            // the DML already succeeded; refusing the snapshot must not
+            // fail it. The stream can no longer track its source within
+            // the cap, so it goes stale (later reads raise the stale error).
+            sm.stale = true
         }
       }
     }
@@ -1360,16 +1362,15 @@ final class Executor(
           throw SnowflakeError.notFound(s"table $tableName does not exist")
         val appendOnly = appendOpt != null &&
           appendOpt.toUpperCase(java.util.Locale.ROOT).contains("TRUE")
-        if (tableBytes(srcRef) > StreamSnapshotMaxBytes)
+        val baseline = catalog.snapshotTable(srcRef, snapshotRoot,
+          StreamSnapshotMaxBytes).getOrElse(
           throw SnowflakeError.compilation(
             s"Cannot create stream on $tableName: source exceeds the " +
               s"$StreamSnapshotMaxBytes-byte baseline snapshot cap " +
-              "(-Dgraft.streamSnapshotMaxBytes to raise)")
-        val tmp = Files.createTempDirectory("graft_stream")
-        catalog.tableDf(srcRef).write.mode("overwrite").parquet(tmp.toString)
+              "(-Dgraft.streamSnapshotMaxBytes to raise)"))
         val old = streams.put(s"${ref.database}.${ref.schema}.${ref.table}",
-          StreamMeta(ref.table, srcRef, tmp, appendOnly))
-        if (old != null) deleteDir(old.baseline)
+          StreamMeta(ref.table, srcRef, baseline, appendOnly))
+        if (old != null) old.baseline.delete()
         status(queryId, s"Stream ${ref.table} successfully created.")
       case createFileFormatRe(name, optionsText) =>
         val tpe = """(?is)TYPE\s*=\s*'?(\w+)'?""".r
@@ -1377,22 +1378,19 @@ final class Executor(
         catalog.createFileFormat(ctx.database, ctx.schema, name, tpe, optionsText)
         status(queryId, s"File format ${name.toUpperCase} successfully created.")
       // CREATE TABLE ... CLONE: schema + cluster key + DATA snapshot.
-      // Snowflake's clone is zero-copy metadata; the emulator's
-      // equivalent is one parquet copy at clone time — same user-visible
-      // semantics (independent table, point-in-time content), the
-      // storage trick is out of scope for a single-node emulator.
+      // Zero-copy like Snowflake's: the clone's files are hard links to
+      // the source's (Catalog.cloneTable). Both tables stay independent,
+      // since a later write to either replaces files, never edits them.
       case createCloneRe(orReplace, name, srcName) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         val srcRef = TableNaming.parse(srcName, ctx.database, ctx.schema)
-        val src = catalog.getTable(srcRef).getOrElse(
-          throw SnowflakeError.notFound(s"table $srcName does not exist"))
+        if (!catalog.tableExists(srcRef))
+          throw SnowflakeError.notFound(s"table $srcName does not exist")
         if (catalog.tableExists(ref) && orReplace == null)
           throw SnowflakeError.alreadyExists(s"table ${ref.table} already exists")
         beforeWrite(ctx, ref, created = !catalog.tableExists(ref))
         if (catalog.tableExists(ref)) invalidateTableIdentity(ref)
-        catalog.createTable(ref, src.columns, orReplace = true,
-          clusterKey = src.clusterKey)
-        catalog.overwriteTable(ref, catalog.tableDf(srcRef))
+        catalog.cloneTable(srcRef, ref)
         recordVersion(ref, queryId)
         status(queryId, s"Table ${ref.table} successfully created.")
       case createLikeRe(name, srcName) =>
@@ -1499,15 +1497,15 @@ final class Executor(
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         val key = s"${ref.database}.${ref.schema}.${ref.table}"
         val entry = droppedTables.synchronized(Option(droppedTables.remove(key)))
-        val (meta, tmp) = entry.getOrElse(throw SnowflakeError.notFound(
+        val (meta, snap) = entry.getOrElse(throw SnowflakeError.notFound(
           s"table $name does not exist or was not recently dropped"))
         if (catalog.tableExists(ref)) {
-          droppedTables.synchronized(droppedTables.put(key, (meta, tmp)))
+          droppedTables.synchronized(droppedTables.put(key, (meta, snap)))
           throw SnowflakeError.alreadyExists(s"table ${ref.table} already exists")
         }
         catalog.restoreMeta(meta)
-        catalog.overwriteTable(ref, spark.read.parquet(tmp.toString))
-        deleteDir(tmp)
+        catalog.overwriteTable(ref, snap.read(spark))
+        snap.delete()
         status(queryId, s"Table ${ref.table} successfully restored.")
       case _ =>
         throw SnowflakeError.compilation(s"unsupported UNDROP statement: $sql")
@@ -1536,14 +1534,12 @@ final class Executor(
           // emulator keeps the last few drops instead of a 24 h clock)
           // same cap as time travel: an over-sized table is dropped
           // without an UNDROP snapshot (UNDROP then reports not-found)
-          // rather than silently duplicating it on disk
-          if (tableBytes(ref) <= TimeTravelMaxBytes) {
-            val meta = catalog.getTable(ref).get
-            val tmp = Files.createTempDirectory("graft_undrop")
-            catalog.tableDf(ref).write.mode("overwrite").parquet(tmp.toString)
+          // rather than keeping its files on disk
+          val meta = catalog.getTable(ref).get
+          catalog.snapshotTable(ref, snapshotRoot, TimeTravelMaxBytes).foreach { snap =>
             droppedTables.synchronized {
               droppedTables.put(s"${ref.database}.${ref.schema}.${ref.table}",
-                (meta, tmp))
+                (meta, snap))
             }
           }
           invalidateTableIdentity(ref)
@@ -1555,7 +1551,7 @@ final class Executor(
         val removed = streams.remove(s"${ref.database}.${ref.schema}.${ref.table}")
         if (removed == null && !ifExists)
           throw SnowflakeError.notFound(s"stream $name does not exist")
-        if (removed != null) deleteDir(removed.baseline)
+        if (removed != null) removed.baseline.delete()
       case "STAGE" => stages.dropStage(name.toUpperCase(java.util.Locale.ROOT))
       case "FILE FORMAT" =>
         catalog.dropFileFormat(ctx.database, ctx.schema, name, ifExists)
@@ -2071,7 +2067,7 @@ final class Executor(
   // ------------------------------------------------------------------
 
   private final class Txn {
-    val snapshots = new ConcurrentHashMap[String, (TableNaming.Ref, java.nio.file.Path, Catalog.TableMeta)]()
+    val snapshots = new ConcurrentHashMap[String, (TableNaming.Ref, Catalog.Snapshot, Catalog.TableMeta)]()
     val created = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val createdRefs = new ConcurrentHashMap[String, TableNaming.Ref]()
   }
@@ -2088,9 +2084,8 @@ final class Executor(
       txn.createdRefs.put(k, ref)
     } else if (!txn.snapshots.containsKey(k) && !txn.created.contains(k)
         && catalog.tableExists(ref)) {
-      val tmp = Files.createTempDirectory("graft_txn")
-      catalog.tableDf(ref).write.mode("overwrite").parquet(tmp.toString)
-      txn.snapshots.put(k, (ref, tmp, catalog.getTable(ref).get))
+      txn.snapshots.put(k,
+        (ref, catalog.snapshotTable(ref, snapshotRoot).get, catalog.getTable(ref).get))
     }
   }
 
@@ -2100,7 +2095,7 @@ final class Executor(
       status(queryId, "Statement executed successfully.")
     } else if (Classifier.isCommit(sql)) {
       Option(transactions.remove(ctx.sessionId)).foreach { txn =>
-        txn.snapshots.values.asScala.foreach { case (_, tmp, _) => deleteDir(tmp) }
+        txn.snapshots.values.asScala.foreach(_._2.delete())
       }
       status(queryId, "Statement executed successfully.")
     } else { // ROLLBACK
@@ -2110,13 +2105,13 @@ final class Executor(
   }
 
   private def rollbackTxn(txn: Txn): Unit = {
-    txn.snapshots.values.asScala.foreach { case (ref, tmp, meta) =>
+    txn.snapshots.values.asScala.foreach { case (ref, snap, meta) =>
       // a DROP/REPLACE inside the txn removed the catalog entry;
       // re-install the snapshotted meta first so the restoring write
       // re-buckets with the original cluster key (ADVICE r1 #4)
       catalog.restoreMeta(meta)
-      catalog.overwriteTable(ref, spark.read.parquet(tmp.toString))
-      deleteDir(tmp)
+      catalog.overwriteTable(ref, snap.read(spark))
+      snap.delete()
     }
     txn.createdRefs.values.asScala.foreach(r =>
       catalog.dropTable(r, ifExists = true))
@@ -2124,12 +2119,6 @@ final class Executor(
 
   def inTransaction(sessionId: String): Boolean =
     transactions.containsKey(sessionId)
-
-  private def deleteDir(p: java.nio.file.Path): Unit = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally s.close()
-  }
 
   // ------------------------------------------------------------------
   // stage listing / removal (Snowflake LIST/REMOVE statements; the
@@ -2274,7 +2263,9 @@ final class Executor(
     Result(meta, rows, statementTypeId, rowsAffected, queryId)
   }
 
-  private def newQueryId(): String =
+  /** A fresh query id; a protocol layer takes one ahead of [[execute]] to
+    * tag the statement's Spark jobs with it. */
+  def newQueryId(): String =
     "01" + UUID.randomUUID().toString.replace("-", "")
 }
 

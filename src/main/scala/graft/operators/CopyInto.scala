@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -106,13 +106,20 @@ object CopyInto {
         } else df
       case "JSON" =>
         // STRIP_OUTER_ARRAY=TRUE -> one row per array element (Spark's
-        // multiLine mode reads a top-level array exactly that way);
-        // default JSON-lines otherwise (copy_processor.go:378-445).
+        // JSON parser reads a top-level array exactly that way, so each
+        // file is read whole); default JSON-lines otherwise
+        // (copy_processor.go:378-445). Spark matches JSON keys to schema
+        // fields case-sensitively; Snowflake matches them to columns
+        // case-insensitively, as the PARQUET branch does, so each record's
+        // keys are respelled as the table's columns before the parse.
+        val columns = schema.fieldNames
+        val records = spark.read.option("wholetext", opts.stripOuterArray)
+          .text(files: _*).as(Encoders.STRING)
+          .map(respellKeys(_, columns))(Encoders.STRING)
         spark.read.schema(readSchema)
-          .option("multiLine", opts.stripOuterArray.toString)
           .option("mode", mode)
           .option("columnNameOfCorruptRecord", CorruptCol)
-          .json(files: _*)
+          .json(records)
       case "PARQUET" =>
         // Beyond-parity (the reference loads CSV/JSON only): parquet is
         // self-describing, so columns are matched to the target table BY
@@ -136,6 +143,48 @@ object CopyInto {
         else out
       case other => throw new IllegalArgumentException(s"unsupported format $other")
     }
+  }
+
+  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
+
+  /** `record` with the keys of its top-level object — or of each object
+    * of a top-level array — respelled as the `columns` entry they match
+    * case-insensitively; every other character is kept. Text that does not
+    * parse is returned as it is, so the reader still rejects it. */
+  private[operators] def respellKeys(record: String, columns: Array[String]): String = {
+    import com.fasterxml.jackson.core.JsonToken._
+    val edits = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
+    val p = jsonFactory.createParser(record)
+    try {
+      var depth = 0
+      var recordDepth = 1
+      var t = p.nextToken()
+      while (t != null) {
+        t match {
+          case START_OBJECT | START_ARRAY =>
+            if (depth == 0) recordDepth = if (t == START_ARRAY) 2 else 1
+            depth += 1
+          case END_OBJECT | END_ARRAY => depth -= 1
+          case FIELD_NAME if depth == recordDepth && !columns.contains(p.currentName()) =>
+            columns.find(_.equalsIgnoreCase(p.currentName())).foreach(c =>
+              edits += ((p.currentTokenLocation().getCharOffset.toInt, p.currentName(), c)))
+          case _ =>
+        }
+        t = p.nextToken()
+      }
+    } catch { case _: java.io.IOException => return record }
+    finally p.close()
+    if (edits.isEmpty) return record
+    val out = new java.lang.StringBuilder(record.length)
+    var copied = 0
+    edits.foreach { case (at, key, column) =>
+      // a key written with escapes keeps its spelling
+      if (record.startsWith("\"" + key + "\"", at)) {
+        out.append(record, copied, at).append('"').append(column).append('"')
+        copied = at + key.length + 2
+      }
+    }
+    out.append(record, copied, record.length).toString
   }
 
   /** Load the matching staged files and return (rows ready to append,

@@ -20,11 +20,13 @@ final class EmulatorServer(
     val executor: Executor,
     val sessions: SessionManager,
     val statements: StatementManager,
-    port: Int = 0) {
+    port: Int = 0,
+    ownedStageRoot: Option[java.nio.file.Path] = None) {
 
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  private val server = EmulatorServer.newHttpServer(port)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+  server.setExecutor(pool)
 
   // session variables / parameters / open transactions live in the
   // executor keyed by token: release them when the session closes or
@@ -59,7 +61,16 @@ final class EmulatorServer(
     respond(exchange, 200, obj(o => o.put("success", true)))) // accepted+ignored
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+
+  /** Stop serving and delete what this server wrote to disk: the
+    * executor's snapshots and a stage root it created itself. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    executor.close()
+    ownedStageRoot.filter(java.nio.file.Files.exists(_))
+      .foreach(Catalog.deleteRecursively)
+  }
 
   private def handler(f: HttpExchange => Unit): com.sun.net.httpserver.HttpHandler =
     exchange =>
@@ -194,8 +205,13 @@ final class EmulatorServer(
       val bindings = parseBindings(body.get("bindings"))
       val ctx = Executor.Context(sess.token, sess.database, sess.schema,
         onUse = Some((d, s) => { sessions.use(sess.token, d, s); () }))
+      // the query id doubles as the Spark job group, as on REST v2, so the
+      // statement's jobs can be attributed to it
+      val queryId = executor.newQueryId()
+      val spark = executor.catalog.spark
       try {
-        val r = executor.execute(ctx, sqlText, bindings)
+        spark.sparkContext.setJobGroup(queryId, sqlText, interruptOnCancel = true)
+        val r = executor.execute(ctx, sqlText, bindings, queryId0 = Some(queryId))
         respond(exchange, 200, obj { o =>
           o.put("success", true)
           val d = o.putObject("data")
@@ -215,7 +231,7 @@ final class EmulatorServer(
       } catch {
         case t: Throwable =>
           respond(exchange, 200, gosnowflakeError(SnowflakeError.fromThrowable(t)))
-      }
+      } finally spark.sparkContext.clearJobGroup()
     }
 
   /** POST /queries/v1/abort-request — a stub in the reference
@@ -828,10 +844,24 @@ final class EmulatorServer(
 }
 
 object EmulatorServer {
-  /** Wire up a complete emulator (session factory + managers + server). */
+  // The JDK server writes a response's headers and body as two segments;
+  // with Nagle on, the body waits for the client's delayed ACK of the
+  // headers (40 ms on Linux) on every small response. The server reads
+  // this property once, when it loads its configuration at the first
+  // HttpServer.create, so it is set here, ahead of that; a value the user
+  // set explicitly wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def newHttpServer(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+
+  /** Wire up a complete emulator (session factory + managers + server).
+    * Without a `stageRoot` the server makes a temporary one and deletes it
+    * when it stops. */
   def apply(spark: org.apache.spark.sql.SparkSession, port: Int = 0,
-      stageRoot: java.nio.file.Path =
-        java.nio.file.Files.createTempDirectory("graft_stages")): EmulatorServer = {
+      stageRoot: Option[java.nio.file.Path] = None): EmulatorServer = {
+    val root = stageRoot.getOrElse(java.nio.file.Files.createTempDirectory("graft_stages"))
     val catalog = new Catalog(spark)
     // history persists under the warehouse dir (the reference keeps its
     // _metadata_query_history table in the same DuckDB file as the data),
@@ -839,8 +869,9 @@ object EmulatorServer {
     val historyFile = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "_graft_query_history.jsonl")
-    val executor = new Executor(catalog, new graft.stage.StageManager(stageRoot),
+    val executor = new Executor(catalog, new graft.stage.StageManager(root),
       new WarehouseManager(), new QueryHistory(persistPath = Some(historyFile)))
-    new EmulatorServer(executor, new SessionManager(), new StatementManager(), port)
+    new EmulatorServer(executor, new SessionManager(), new StatementManager(), port,
+      ownedStageRoot = if (stageRoot.isEmpty) Some(root) else None)
   }
 }

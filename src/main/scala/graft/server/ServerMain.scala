@@ -21,6 +21,7 @@ object ServerMain {
       } else graft.GraftSession.local(cpus)
     val server = EmulatorServer(spark, port)
     server.start()
+    sys.addShutdownHook(server.stop())
     println(s"graft emulator listening on 127.0.0.1:${server.actualPort}")
     Thread.currentThread().join()
   }

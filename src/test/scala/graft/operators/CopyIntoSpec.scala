@@ -89,6 +89,53 @@ class CopyIntoSpec extends SparkSpecBase {
     assert(df2.count() == 2)
   }
 
+  test("JSON keys match columns case-insensitively: lower, upper and mixed case load alike") {
+    // the emulator's catalog columns are upper-case
+    val upper = StructType(schema.fields.map(f => f.copy(name = f.name.toUpperCase)))
+    def load(keys: (String, String, String), onError: CopyInto.OnError) = {
+      val (id, name, bal) = keys
+      val dir = Files.createTempDirectory("copy_json_case")
+      writeFile(dir, "a.json",
+        s"""{"$id":1,"$name":"a","$bal":1.5}""" + "\n" + "{{{nope\n" +
+          s"""{"$id":2,"$name":null,"$bal":2.5}""")
+      CopyInto.load(spark, dir, upper, CopyInto.Options(format = "JSON", onError = onError))
+    }
+    val spellings = Seq(("id", "name", "bal"), ("ID", "NAME", "BAL"), ("Id", "nAmE", "Bal"))
+    val loaded = spellings.map { k =>
+      val (df, res) = load(k, CopyInto.Continue)
+      assert(res.rowsLoaded == 2 && res.errorsSeen == 1, (k, res))
+      assert(df.columns.toSeq == Seq("ID", "NAME", "BAL"), k)
+      df.orderBy("ID").collect().toSeq.map(_.toSeq)
+    }
+    assert(loaded.head == Seq(Seq(1, "a", 1.5), Seq(2, null, 2.5)), loaded.head)
+    assert(loaded.forall(_ == loaded.head), loaded)
+    // ABORT still fails fast on the corrupt line, whatever the key case
+    intercept[Exception] { load(spellings.head, CopyInto.Abort)._1.collect() }
+  }
+
+  test("JSON key spellings may change from row to row, from file to file and inside an outer array") {
+    val upper = StructType(schema.fields.map(f => f.copy(name = f.name.toUpperCase)))
+    val expected = Seq(Seq(1, "a", 1.5), Seq(2, "b", 2.5), Seq(3, "c", 3.5))
+    val dir = Files.createTempDirectory("copy_json_mixed")
+    writeFile(dir, "a.json", """{"id":1,"name":"a","bal":1.5}""" + "\n" +
+      """{"ID":2,"Name":"b","BAL":2.5}""")
+    writeFile(dir, "b.json", """{"iD":3,"NAME":"c","bal":3.5,"extra":{"id":9}}""")
+    val (df, res) = CopyInto.load(spark, dir, upper, CopyInto.Options(format = "JSON"))
+    assert(res.rowsLoaded == 3, res)
+    assert(df.orderBy("ID").collect().toSeq.map(_.toSeq) == expected)
+    val arr = Files.createTempDirectory("copy_json_array")
+    writeFile(arr, "a.json", """[{"id":1,"name":"a","bal":1.5},""" + "\n" +
+      """ {"ID":2,"Name":"b","BAL":2.5}, {"Id":3,"nAme":"c","bAl":3.5}]""")
+    val (df2, _) = CopyInto.load(spark, arr, upper,
+      CopyInto.Options(format = "JSON", stripOuterArray = true))
+    assert(df2.orderBy("ID").collect().toSeq.map(_.toSeq) == expected)
+    // only top-level keys are respelled, and nothing else in the text moves
+    val cols = Array("ID", "NAME")
+    assert(CopyInto.respellKeys("""{ "id" : 1.50, "meta": {"name": 2}, "Name":"id"}""", cols) ==
+      """{ "ID" : 1.50, "meta": {"name": 2}, "NAME":"id"}""")
+    assert(CopyInto.respellKeys("{{{nope", cols) == "{{{nope")
+  }
+
   test("ON_ERROR=SKIP_FILE drops bad files and reports errors") {
     val dir = Files.createTempDirectory("copy_skip")
     writeFile(dir, "good.json", """{"id":1,"name":"a","bal":1.0}""")

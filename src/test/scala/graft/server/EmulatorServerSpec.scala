@@ -58,6 +58,21 @@ class EmulatorServerSpec extends AnyFunSuite {
     assert(code == 200 && body.get("status").asText() == "ok")
   }
 
+  test("small responses do not wait for a delayed ACK: 50 keep-alive /health round trips, p50 < 20 ms") {
+    // headers and body leave as two segments; with Nagle on, each body
+    // waits out the client's delayed ACK (>= 40 ms on Linux)
+    val keepAlive = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(base + "/health")).GET().build()
+    keepAlive.send(req, HttpResponse.BodyHandlers.ofString()) // connect
+    val ms = (1 to 50).map { _ =>
+      val t0 = System.nanoTime()
+      val resp = keepAlive.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(25) < 20.0, s"p50 ${ms(25)} ms; sorted round trips: $ms")
+  }
+
   test("login issues tokens and default parameters") {
     val (_, body) = post("/session/v1/login-request",
       """{"data":{"LOGIN_NAME":"u2","PASSWORD":"p"}}""")
@@ -411,6 +426,19 @@ class EmulatorServerSpec extends AnyFunSuite {
       s"SELECT COUNT(*) AS n FROM TABLE(RESULT_SCAN('$qid'))")
     assert(scan.get("success").asBoolean(), scan)
     assert(scan.get("data").get("rowset").get(0).get(0).asText() == "2")
+  }
+
+  test("a gosnowflake statement's Spark jobs carry its queryId as their job group") {
+    query("CREATE TABLE jg_t (id INTEGER)")
+    query("INSERT INTO jg_t VALUES (1), (2), (3)")
+    var qid = ""
+    val groups = graft.SparkJobs.groupsDuring(server.executor.catalog.spark) {
+      val (_, s) = query("SELECT SUM(id) AS s FROM jg_t")
+      assert(s.get("success").asBoolean(), s)
+      assert(s.get("data").get("rowset").get(0).get(0).asText() == "6")
+      qid = s.get("data").get("queryId").asText()
+    }
+    assert(qid.nonEmpty && groups.contains(qid), s"queryId $qid, job groups $groups")
   }
 
   test("concurrent sessions over real sockets: isolated DDL/DML + serialized shared-table writes") {

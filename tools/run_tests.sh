@@ -3,7 +3,9 @@
 # tail-piped sbt log lost the one failing test's name, and the close
 # notes then cited a stale mid-round tally).
 #
-#   tools/run_tests.sh            # run `sbt -batch test`, tee full log
+#   tools/run_tests.sh            # run `sbt -batch test` and the perfbench
+#                                 # unit tests, tee full log; either failing
+#                                 # fails the script
 #
 # Artifacts, per run:
 #   target/test-logs/full_<utc>.log   — the complete sbt output
@@ -23,8 +25,12 @@ ts="$(date -u +%Y%m%dT%H%M%SZ)"
 log="target/test-logs/full_${ts}.log"
 sbt -batch test 2>&1 | tee "$log"
 rc=${PIPESTATUS[0]}
+# the benchmark's own tests: generator determinism, each check rejecting a
+# corrupted result
+python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tee -a "$log"
+py_rc=${PIPESTATUS[0]}
 {
-  echo "run: $ts  exit: $rc  log: $log"
+  echo "run: $ts  exit: $rc  perfbench unittest exit: $py_rc  log: $log"
   echo "reports (target/test-reports/*.xml — dir cleared pre-run, so these are THIS run's):"
   for f in target/test-reports/TEST-*.xml; do
     [ -e "$f" ] || continue
@@ -47,4 +53,5 @@ for p in glob.glob("target/test-reports/TEST-*.xml"):
 print(f"TOTAL: {tot - fail}/{tot} passing")
 EOF
 } | tee target/test-logs/last_summary.txt
-exit "$rc"
+[ "$rc" -ne 0 ] && exit "$rc"
+exit "$py_rc"
