@@ -14,11 +14,11 @@ import scala.jdk.CollectionConverters._
   * parquet tables. Our own metadata rows (comments, column defs, schema
   * list) live in memory the way the reference keeps `_metadata_*` tables.
   *
-  * Physical writes that replace table content go through a temp-parquet
-  * swap (`overwriteTable`) because Spark refuses to overwrite a table from
-  * a plan that reads it; mirrors the reference's write safety, where all
-  * writes are serialized (`pkg/connection/manager.go:39-63`) — here a
-  * per-table lock.
+  * Writes that replace table content (`overwriteTable`) write the new rows
+  * once into a staging table and rename it into the table's place, since
+  * Spark refuses to overwrite a table from a plan that reads it. The
+  * reference serializes all writes (`pkg/connection/manager.go:39-63`);
+  * here each table has a lock.
   */
 final class Catalog(val spark: SparkSession) {
   import Catalog._
@@ -216,19 +216,30 @@ final class Catalog(val spark: SparkSession) {
     spark.table(sparkTableName(r))
   }
 
-  /** Replace table content atomically-per-table: materialize the new rows
-    * to a temp parquet dir first (the plan may read the table being
-    * replaced), then overwrite under the table lock. */
-  def overwriteTable(r: TableNaming.Ref, df: DataFrame): Unit =
+  /** Replace a table's content with `content`, evaluated under the table
+    * lock, so a read-modify-write commits over the version it read. One
+    * write, then a metadata swap: the rows go into a staging table beside
+    * the table (a name clash fails, it never replaces), the table is
+    * dropped and the staging table renamed into its place. Since the write
+    * targets another table, `content` may read the table it replaces. A
+    * failed write leaves the table as it was, with no staging table or
+    * directory behind. */
+  def overwriteTable(r: TableNaming.Ref)(content: => DataFrame): Unit =
     lockFor(r).synchronized {
-      val ck = getTable(r).flatMap(_.clusterKey)
-      val tmp = Files.createTempDirectory("graft_cow")
-      try {
-        df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        write(spark.read.parquet(tmp.toString), ck)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(sparkTableName(r))
-      } finally deleteRecursively(tmp)
+      val id = java.util.UUID.randomUUID().toString.replace("-", "")
+      val staging = sparkTableName(r.copy(table = s"${r.table}__GRAFT_STAGE_$id"))
+      val ident = spark.sessionState.sqlParser.parseTableIdentifier(staging)
+      try write(content, getTable(r).flatMap(_.clusterKey))
+        .mode(SaveMode.ErrorIfExists).saveAsTable(staging)
+      catch {
+        case e: Throwable if !spark.sessionState.catalog.tableExists(ident) =>
+          val dir = Paths.get(spark.sessionState.catalog.defaultTablePath(ident))
+          if (Files.exists(dir)) deleteRecursively(dir)
+          throw e
+      }
+      spark.sql(s"DROP TABLE IF EXISTS ${sparkTableName(r)}")
+      spark.sql(s"ALTER TABLE $staging RENAME TO ${sparkTableName(r)}")
+      spark.catalog.refreshTable(sparkTableName(r))
     }
 
   /** Snapshot a table's current data files into a new directory under

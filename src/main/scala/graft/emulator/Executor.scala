@@ -252,7 +252,7 @@ final class Executor(
     } catch {
       case t: Throwable =>
         val err = SnowflakeError.fromThrowable(t)
-        history.failure(queryId, bound, err.getMessage, t0)
+        history.failure(queryId, err.getMessage, t0)
         throw err
     }
   }
@@ -1415,7 +1415,7 @@ final class Executor(
         val df = queryDf(ctx, select)
         catalog.createDatabase(ref.database)
         catalog.createSchema(ref.database, ref.schema, ifNotExists = true)
-        catalog.overwriteTable(ref, df)
+        catalog.overwriteTable(ref)(df)
         catalog.registerExisting(ref)
         recordVersion(ref, queryId)
         // after the write materialized: a stream read by the CTAS is
@@ -1504,7 +1504,7 @@ final class Executor(
           throw SnowflakeError.alreadyExists(s"table ${ref.table} already exists")
         }
         catalog.restoreMeta(meta)
-        catalog.overwriteTable(ref, snap.read(spark))
+        catalog.overwriteTable(ref)(snap.read(spark))
         snap.delete()
         status(queryId, s"Table ${ref.table} successfully restored.")
       case _ =>
@@ -1652,8 +1652,8 @@ final class Executor(
             "cannot drop a clustering key column; drop the clustering key first")
         beforeWrite(ctx, ref, created = false)
         catalog.lockFor(ref).synchronized {
-          catalog.overwriteTable(ref,
-            df.select(remaining.map(org.apache.spark.sql.functions.col).toSeq: _*))
+          catalog.overwriteTable(ref)(catalog.tableDf(ref)
+            .select(remaining.map(org.apache.spark.sql.functions.col).toSeq: _*))
           catalog.registerExisting(ref)
         }
         status(queryId, "Statement executed successfully.")
@@ -1690,7 +1690,7 @@ final class Executor(
             "cannot rename a clustering key column; drop the clustering key first")
         beforeWrite(ctx, ref, created = false)
         catalog.lockFor(ref).synchronized {
-          catalog.overwriteTable(ref, df.withColumnRenamed(from, to))
+          catalog.overwriteTable(ref)(catalog.tableDf(ref).withColumnRenamed(from, to))
           catalog.registerExisting(ref)
         }
         status(queryId, "Statement executed successfully.")
@@ -1728,7 +1728,7 @@ final class Executor(
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         beforeWrite(ctx, ref, created = false)
         catalog.lockFor(ref).synchronized {
-          catalog.overwriteTable(ref, catalog.tableDf(ref).limit(0))
+          catalog.overwriteTable(ref)(catalog.tableDf(ref).limit(0))
           dml(ctx, s"INSERT INTO $name$rest", queryId)
         }
       case insertRe(name) =>
@@ -1759,37 +1759,43 @@ final class Executor(
       case updateRe(name, sets, where) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         beforeWrite(ctx, ref, created = false)
-        val df = catalog.tableDf(ref)
         val cond = Option(where).map(expr).getOrElse(lit(true))
-        // resolve SET keys case-insensitively against the physical schema —
-        // catalog columns are upper-cased, SQL references usually aren't
-        val setMap = MergeParser.splitTopLevel(sets).map { kv =>
-          val eq = kv.indexOf('=')
-          if (eq < 0) throw SnowflakeError.compilation(s"invalid SET clause: $kv")
-          val key = kv.substring(0, eq).trim
-          df.columns.find(_.equalsIgnoreCase(key)).getOrElse(
-            throw SnowflakeError.compilation(s"invalid identifier '$key'")) ->
-            expr(kv.substring(eq + 1).trim)
-        }.toMap
-        val affected = MutableOps.affectedCount(df, cond)
-        catalog.overwriteTable(ref, MutableOps.update(df, cond, setMap))
+        // read, count and write back under the table lock, so that a
+        // write committed in between is not lost
+        val affected = catalog.lockFor(ref).synchronized {
+          val df = catalog.tableDf(ref)
+          // resolve SET keys case-insensitively against the physical schema —
+          // catalog columns are upper-cased, SQL references usually aren't
+          val setMap = MergeParser.splitTopLevel(sets).map { kv =>
+            val eq = kv.indexOf('=')
+            if (eq < 0) throw SnowflakeError.compilation(s"invalid SET clause: $kv")
+            val key = kv.substring(0, eq).trim
+            df.columns.find(_.equalsIgnoreCase(key)).getOrElse(
+              throw SnowflakeError.compilation(s"invalid identifier '$key'")) ->
+              expr(kv.substring(eq + 1).trim)
+          }.toMap
+          val n = MutableOps.affectedCount(df, cond)
+          catalog.overwriteTable(ref)(MutableOps.update(df, cond, setMap))
+          n
+        }
         recordVersion(ref, queryId)
         dmlResult(queryId, "number of rows updated", affected)
       case deleteRe(name, where) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         beforeWrite(ctx, ref, created = false)
-        val df = catalog.tableDf(ref)
         val cond = Option(where).map(expr).getOrElse(lit(true))
-        val affected = MutableOps.affectedCount(df, cond)
-        catalog.overwriteTable(ref, MutableOps.delete(df, cond))
+        val affected = catalog.lockFor(ref).synchronized {
+          val df = catalog.tableDf(ref)
+          val n = MutableOps.affectedCount(df, cond)
+          catalog.overwriteTable(ref)(MutableOps.delete(df, cond))
+          n
+        }
         recordVersion(ref, queryId)
         dmlResult(queryId, "number of rows deleted", affected)
       case truncateRe(name) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         beforeWrite(ctx, ref, created = false)
-        val df = catalog.tableDf(ref)
-        val affected = df.count()
-        catalog.overwriteTable(ref, df.limit(0))
+        catalog.overwriteTable(ref)(catalog.tableDf(ref).limit(0))
         recordVersion(ref, queryId)
         status(queryId, "Statement executed successfully.")
       case other =>
@@ -1978,9 +1984,8 @@ final class Executor(
   private def mergeInto(ctx: Context, sql: String, queryId: String): Result = {
     val stmt = MergeParser.parse(sql)
     val targetRef = TableNaming.parse(stmt.targetTable, ctx.database, ctx.schema)
-    val targetDf0 = catalog.tableDf(targetRef)
+    val targetCols = catalog.tableDf(targetRef).columns
     val tAlias = stmt.targetAlias.getOrElse(targetRef.table.toLowerCase)
-    val target = targetDf0.alias(tAlias)
 
     val (source0, sDefault) =
       if (stmt.source.startsWith("("))
@@ -2006,7 +2011,7 @@ final class Executor(
     def targetCol(c: String): String = {
       val dot = c.indexOf('.')
       val bare = if (dot > 0) c.substring(dot + 1) else c
-      targetDf0.columns.find(_.equalsIgnoreCase(bare)).getOrElse(
+      targetCols.find(_.equalsIgnoreCase(bare)).getOrElse(
         throw SnowflakeError.compilation(s"invalid identifier '$bare'"))
     }
 
@@ -2023,7 +2028,7 @@ final class Executor(
     val notMatched = stmt.whenClauses.filterNot(_.isMatched).map { w =>
       val (cols, vals) = w.action match {
         case MergeParser.InsertAction(cs, vs) =>
-          (if (cs.nonEmpty) cs.map(targetCol) else targetDf0.columns.toSeq, vs)
+          (if (cs.nonEmpty) cs.map(targetCol) else targetCols.toSeq, vs)
         case _ => throw SnowflakeError.compilation(
           "only INSERT is valid in WHEN NOT MATCHED")
       }
@@ -2037,10 +2042,15 @@ final class Executor(
     val condition = expr(stmt.onCondition)
     beforeWrite(ctx, targetRef, created = false)
     // single-pass: one persisted join feeds the nondeterminism check, the
-    // counts, and the written result (VERDICT r1 "What's wrong" #2)
+    // counts, and the written result (VERDICT r1 "What's wrong" #2). The
+    // target is read under the lock that commits the result, so that a
+    // write committed in between is not lost.
     val counts =
-      try MergeInto.run(target, source, condition, matched, notMatched) { result =>
-        catalog.overwriteTable(targetRef, result)
+      try catalog.lockFor(targetRef).synchronized {
+        MergeInto.run(catalog.tableDf(targetRef).alias(tAlias), source, condition,
+            matched, notMatched) { result =>
+          catalog.overwriteTable(targetRef)(result)
+        }
       } catch {
         case e: MergeInto.NondeterministicMergeException =>
           throw SnowflakeError.execution(e.getMessage)
@@ -2110,7 +2120,7 @@ final class Executor(
       // re-install the snapshotted meta first so the restoring write
       // re-buckets with the original cluster key (ADVICE r1 #4)
       catalog.restoreMeta(meta)
-      catalog.overwriteTable(ref, snap.read(spark))
+      catalog.overwriteTable(ref)(snap.read(spark))
       snap.delete()
     }
     txn.createdRefs.values.asScala.foreach(r =>

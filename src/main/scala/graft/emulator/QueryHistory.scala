@@ -58,10 +58,11 @@ final class QueryHistory(capacity: Int = 10000,
     System.nanoTime()
   }
 
+  /** `sql` is unused; `perfbench/agent/TraceMain.java` calls this form. */
   def success(queryId: String, sql: String, rows: Long, t0Nanos: Long): Unit =
     complete(queryId, "SUCCESS", rows, t0Nanos, "")
 
-  def failure(queryId: String, sql: String, err: String, t0Nanos: Long): Unit =
+  def failure(queryId: String, err: String, t0Nanos: Long): Unit =
     complete(queryId, "FAILED", 0, t0Nanos, err)
 
   private def complete(queryId: String, status: String, rows: Long,

@@ -171,8 +171,8 @@ case class SimHash64(child: Expression)
   * Semantics are pinned to the expression chain it replaces, bit for
   * bit: the similarity is [[CosineSimilarity]]'s exact arithmetic
   * (double accumulation in index order, 0.0 on a zero norm), ordering
-  * is (csim DESC, cell ASC) with NaN ranked GREATEST similarity (the
-  * simDescCmp contract / DuckDB's ORDER BY sim DESC) and -0.0 == 0.0
+  * is (csim DESC, cell ASC) with NaN ranked GREATEST similarity (as
+  * DuckDB's ORDER BY sim DESC) and -0.0 == 0.0
   * (Spark's SQL double ordering; sims are normalized so the tie falls
   * through to the cell like the `>`-based comparator did). Input
   * element layout: STRUCT(cell BIGINT, cv ARRAY<FLOAT>); output:
@@ -295,10 +295,10 @@ case class TopCells(vec: Expression, idx: Expression, k: Expression)
 
 /** Nearest PQ sub-centroid for one (subvector, subspace): the fused
   * form of `array_min(transform(filter(pidx, c -> c.sub = sub), c ->
-  * (l2(sv, c.cv), c.cell)))` with the exact sparkL2Sq arithmetic —
+  * (l2(sv, c.cv), c.cell)))` with squared L2 as three dot products —
   * three separate double accumulations in index order combined as
   * ((daa - (2*dab)) + dbb) — and (d ASC, cell ASC) ordering with NaN
-  * ranked GREATEST (the distAscCmp contract). NULL when no entry
+  * ranked GREATEST (as DuckDB's ORDER BY d ASC). NULL when no entry
   * matches the subspace (the empty-filter NULL the old form produced).
   * Input element layout: STRUCT(sub INT, cell BIGINT, cv ARRAY<FLOAT>);
   * output: STRUCT(d DOUBLE, cell BIGINT). Eval-only (CodegenFallback).
@@ -365,7 +365,7 @@ case class NearestSubCell(sv: Expression, pidx: Expression, sub: Expression)
       if (row.getInt(0) == wantSub) {
         val cell = row.getLong(1)
         val cv = row.getArray(2)
-        // sparkL2Sq composes three dot_products with DIFFERENT bounds:
+        // the L2 composes three dot_products with DIFFERENT bounds:
         // dot(a,a) over full |a|, dot(b,b) over full |b|, dot(a,b) over
         // min — mirror each accumulation exactly
         val e = cv.numElements()

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * counts (reference `pkg/query/executor.go:298-356`). Parquet-backed Spark
   * tables have no in-place mutation, so the engine expresses both as pure
   * transformations — `when(cond, new).otherwise(old)` / `filter(!cond)` —
-  * that the table layer then writes back atomically (write temp, swap; see
-  * GraftTable). At scale this is one full scan + one write, embarrassingly
-  * parallel, with no shuffle at all.
+  * that the table layer then writes back in one write, into a staging table
+  * renamed into the table's place (`Catalog.overwriteTable`). At scale this
+  * is one full scan + one write, embarrassingly parallel, with no shuffle.
   */
 object MutableOps {
 
@@ -34,7 +34,9 @@ object MutableOps {
 
   /** Affected-row count for an UPDATE/DELETE predicate (Spark DML returns
     * no counts; the reference surfaces RowsAffected — `result.go:29-32`).
+    * One job summing per-partition counts: `Dataset.count` plans an
+    * aggregate whose shuffle stage runs as a job of its own.
     */
   def affectedCount(df: DataFrame, cond: Column): Long =
-    df.filter(coalesce(cond, lit(false))).count()
+    df.filter(coalesce(cond, lit(false))).select().rdd.count()
 }

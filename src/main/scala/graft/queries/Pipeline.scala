@@ -1290,27 +1290,6 @@ object Pipeline {
             m -> slice(embedding, m * (size(embedding) div $pqM) + 1,
                        size(embedding) div $pqM))"""))
 
-  /** Squared L2 distance as the three-dot composition — each dot is an
-    * index-order double accumulation (the codegen'd [[graft.functions]]
-    * DotProduct kernel / DuckDB's list comprehension), and the explicit
-    * parenthesization is shared verbatim by both engines, so the
-    * resulting doubles are bit-identical. PQ fits on L2 (the codebook
-    * approximates the subvector itself; cosine of a subvector is
-    * meaningless), while ADC scoring recombines dots into cosine. */
-  private def sparkL2Sq(a: String, b: String): String =
-    s"((dot_product($a, $a) - (CAST(2 AS DOUBLE) * dot_product($a, $b))) + dot_product($b, $b))"
-
-  /** Array-sort comparator `(dist asc, id asc)` — the L2 mirror of
-    * [[simDescCmp]]: NaN ranks as the GREATEST distance (last), exactly
-    * like the oracle's `ORDER BY d ASC` (DuckDB orders NaN above +inf). */
-  private def distAscCmp(d: String, id: String): String =
-    s"""(l, r) -> CASE WHEN isnan(l.$d) AND NOT isnan(r.$d) THEN 1
-                       WHEN isnan(r.$d) AND NOT isnan(l.$d) THEN -1
-                       WHEN l.$d < r.$d THEN -1
-                       WHEN l.$d > r.$d THEN 1
-                       WHEN l.$id < r.$id THEN -1
-                       WHEN l.$id > r.$id THEN 1 ELSE 0 END"""
-
   /** For every row of `e` (any cols + `sub` + `sv`), the nearest
     * codebook centroid OF THAT SUBSPACE by squared L2 — the zero-shuffle
     * broadcast argmin shape of [[nearestCells]]: the whole codebook
@@ -1327,8 +1306,8 @@ object Pipeline {
     val keep = e.columns.map(col).toSeq
     // fused argmin kernel (r17): one JVM loop over the codebook row per
     // (row, subspace) — no per-element lambda, no per-comparison
-    // comparator machinery; arithmetic/ordering pinned to sparkL2Sq +
-    // distAscCmp (see [[graft.functions.NearestSubCell]]).
+    // comparator machinery; arithmetic and ordering pinned in
+    // [[graft.functions.NearestSubCell]].
     e.crossJoin(broadcast(idx))
       .select(keep :+ expr("nearest_sub_cell(sv, pidx, sub)").as("pc"): _*)
       .select(keep ++ Seq(col("pc.cell").as("cell"), col("pc.d").as("d")): _*)
@@ -1523,8 +1502,8 @@ object Pipeline {
         col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
     val m = pqM
     val dsub = s"(size(embedding) div $m)"
-    // fused argmin kernel (r18) — arithmetic pinned to sparkL2Sq +
-    // distAscCmp, see [[graft.functions.NearestSubCell]]
+    // fused argmin kernel (r18) — arithmetic and ordering pinned in
+    // [[graft.functions.NearestSubCell]]
     df.crossJoin(broadcast(pidx))
       .withColumn("sse", expr(
         s"""CAST(aggregate(
@@ -1818,22 +1797,6 @@ object Pipeline {
     nearestCellsTwoLevel(e, cells, sc, cm, kTop, superProbe(ks, kAct, kTop))
   }
 
-  /** Array-sort comparator `(sim desc, id asc)` with EXPLICIT NaN
-    * handling: NaN ranks as the GREATEST similarity, exactly like the
-    * oracle's `ORDER BY sim DESC` (DuckDB orders NaN above +inf). Without
-    * the isnan branches both `>` and `<` are false for NaN and the
-    * comparator would fall through to the id tiebreak — a zero-norm
-    * vector (cosine 0/0 = NaN) would silently diverge the two engines.
-    * Explicit comparator rather than a sort on negated doubles, so
-    * -0.0/0.0 ordering can never diverge from ROW_NUMBER's either. */
-  private def simDescCmp(sim: String, id: String): String =
-    s"""(l, r) -> CASE WHEN isnan(l.$sim) AND NOT isnan(r.$sim) THEN -1
-                       WHEN isnan(r.$sim) AND NOT isnan(l.$sim) THEN 1
-                       WHEN l.$sim > r.$sim THEN -1
-                       WHEN l.$sim < r.$sim THEN 1
-                       WHEN l.$id < r.$id THEN -1
-                       WHEN l.$id > r.$id THEN 1 ELSE 0 END"""
-
   /** For every row of `e` (any columns + `embedding`), its `kTop` nearest
     * cells of the fitted index, as extra columns (crank 1..kTop, cell,
     * csim) — computed with ZERO shuffle: the whole index collapses to ONE
@@ -2038,7 +2001,6 @@ object Pipeline {
       // to the r6 8-plane family, so growing the pool only ADDS buckets
       Array.fill(lshMaxPlanes)(Array.fill(lshDim)(if (rnd.nextBoolean()) 1.0f else -1.0f))
     }
-  private val lshPlanes: Array[Array[Float]] = lshPlaneTables(0)
 
   /** Plane count for a corpus of n vectors — the r6 fix for the constant
     * 256-bucket problem: enough hyperplanes that the expected bucket
@@ -2109,8 +2071,10 @@ object Pipeline {
   private def duckDot(a: String, b: String): String =
     s"list_sum([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN range(1, len($a) + 1)])"
 
-  /** Squared L2 as the same three-dot composition as [[sparkL2Sq]] —
-    * identical parenthesization, identical IEEE evaluation order. */
+  /** Squared L2 as three index-order double dots combined as
+    * ((aa - (2*ab)) + bb) — the parenthesization and IEEE evaluation order
+    * of [[graft.functions.NearestSubCell]], so both engines' doubles are
+    * bit-identical. */
   private def duckL2Sq(a: String, b: String): String =
     s"((${duckDot(a, a)} - (CAST(2 AS DOUBLE) * ${duckDot(a, b)})) + ${duckDot(b, b)})"
 
@@ -6907,8 +6871,8 @@ ${duckAdcCtes("w", "v")},
         val dsub = s"(size(embedding) div $m)"
         // fused argmin kernel (r18): one JVM loop per (row, subspace)
         // instead of an interpreted lambda per codebook entry plus an
-        // interpreted comparator per sort comparison — arithmetic pinned
-        // to sparkL2Sq + distAscCmp (see [[graft.functions.NearestSubCell]])
+        // interpreted comparator per sort comparison — arithmetic and
+        // ordering pinned in [[graft.functions.NearestSubCell]]
         emb(s, dir).select(col("vec_id"), col("embedding"))
           .crossJoin(broadcast(pidx))
           .select(col("vec_id"), expr(
@@ -9152,7 +9116,7 @@ ${(1 to lexIters).map(duckLexIter).mkString(",\n")}
     // assignment (one broadcast index row), then ONE shuffle keyed on
     // cell for the per-cell window — no pairwise work at all, strictly
     // cheaper than p32. csim ties break on vec_id; both engines order
-    // NaN above +inf (zero-norm guard, see simDescCmp). ------------------
+    // NaN above +inf (zero-norm guard, see [[graft.functions.TopCells]]). -
     QDef("p88_proto_prune",
       (s, dir) => {
         val e = emb(s, dir)

@@ -313,7 +313,7 @@ class PureLogicSpec extends AnyFunSuite {
       val t0 = h1.start("q1", "SELECT 1")
       h1.success("q1", "SELECT 1", 7L, t0)
       val t1 = h1.start("q2", "SELECT broken")
-      h1.failure("q2", "SELECT broken", "boom", t1)
+      h1.failure("q2", "boom", t1)
       h1.start("q3", "SELECT runs_forever")
       // "process 2": a fresh instance over the same warehouse file
       val h2 = new QueryHistory(capacity = 100, persistPath = Some(file))

@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   */
 class AnnKernelsSpec extends SparkSpecBase {
 
-  // the comparator texts the kernels are pinned to (Pipeline.simDescCmp /
-  // distAscCmp, inlined here verbatim so this spec stays independent of
-  // Pipeline's private helpers)
+  // the comparator texts the kernels are pinned to: the array_sort
+  // comparators of the expression chains the kernels replaced
   private val simDesc =
     """(l, r) -> CASE WHEN isnan(l.csim) AND NOT isnan(r.csim) THEN -1
                       WHEN isnan(r.csim) AND NOT isnan(l.csim) THEN 1

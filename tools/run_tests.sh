@@ -26,7 +26,9 @@ log="target/test-logs/full_${ts}.log"
 sbt -batch test 2>&1 | tee "$log"
 rc=${PIPESTATUS[0]}
 # the benchmark's own tests: generator determinism, each check rejecting a
-# corrupted result
+# corrupted result. Their scratch directory is git-ignored, so a fresh
+# checkout lacks it until something creates it.
+mkdir -p .perfbench
 python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tee -a "$log"
 py_rc=${PIPESTATUS[0]}
 {
