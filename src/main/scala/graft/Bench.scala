@@ -144,6 +144,7 @@ object Bench {
           s""","memMs":${math.round(mm * 10) / 10.0}""" +
           s""","harnessMs":${math.round(harnessMs * 10) / 10.0}""")
     }
+    implicit val knobs: Knobs = Knobs.jvm
     val stageEntries = Seq(
       stageEntry("p00_shingle_stage") {
         queries.Pipeline.ShingleStage.load(spark, sfDir); ()
@@ -218,19 +219,14 @@ object Bench {
       // (the oracle measures their agreement in-row); production sets
       // `-Dgraft.sketchAgreement=off` and pays only the sketch side.
       // That production-path cost was previously invisible — hidden
-      // inside the dual-run lines — so each gate is re-timed here with
-      // the dial flipped for just this entry (the QDef builders read the
-      // dial at plan-build time; restored in finally so every other
-      // line, and the oracle contract, see the default). Results are
-      // NOT oracle-compared: the off-form's agreement columns are NULL
-      // by documented contract.
+      // inside the dual-run lines — so each gate is re-timed here from an
+      // inventory built over the same knobs with the dial off; every
+      // other line, and the oracle contract, keep the JVM's knobs.
+      // Results are NOT oracle-compared: the off-form's agreement
+      // columns are NULL by documented contract.
+      lazy val off = SparkEntry.queriesFor(Knobs.jvm.copy(sketchAgreement = false))
       def sketchOff(entry: String, qname: String) = stageEntry(entry) {
-        val prev = sys.props.put("graft.sketchAgreement", "off")
-        try { SparkEntry.queries(qname)(spark, sfDir).count(); () }
-        finally prev match {
-          case Some(v) => sys.props.update("graft.sketchAgreement", v)
-          case None => sys.props.remove("graft.sketchAgreement"); ()
-        }
+        off(qname)(spark, sfDir).count(); ()
       }
       Seq(
         sketchOff("p00m_p53c_sketch_off", "p53c_lm_buckets_sketch"),

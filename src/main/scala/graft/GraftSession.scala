@@ -59,13 +59,7 @@ object GraftSession {
     b.config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.sql.session.timeZone", "UTC")
-      // `-Dgraft.aqe=off` measurement dial (r18): most pipeline lines
-      // are k-row frames where AQE's per-stage re-planning round trips
-      // are pure driver latency; the dial exists to MEASURE that cost
-      // (see OPTIMIZATION_r18.md). Default stays ON — at 100 TB the
-      // skew-join splitting and partition coalescing are load-bearing.
-      .config("spark.sql.adaptive.enabled",
-        (!Dials.str("graft.aqe", Set("on", "off")).contains("off")).toString)
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
@@ -112,20 +106,18 @@ object GraftSession {
     *  - the application classes: executors fetch `spark.jars` from the
     *    driver's file server — `SPARK_GRAFT_JARS` points at the
     *    sbt-packaged jar;
-    *  - the JVM configuration: the JDK17 `--add-opens` list and every
-    *    `-Dgraft.*` dial live in the DRIVER's command line (build.sbt);
-    *    executor JVMs are launched by the worker and inherit neither, so
-    *    both are mirrored into `spark.executor.extraJavaOptions`.
+    *  - the JVM configuration: the JDK17 `--add-opens` list lives in the
+    *    DRIVER's command line (build.sbt); executor JVMs are launched by
+    *    the worker and do not inherit it, so it is mirrored into
+    *    `spark.executor.extraJavaOptions`. The `-Dgraft.*` knobs need no
+    *    mirroring: tasks read them from the plan, never from a property.
     */
   def forMain(cpus: Int): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder().master(master)
     sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
     if (!master.startsWith("local[")) {
-      val dials = sys.props.toSeq.sortBy(_._1)
-        .collect { case (k, v) if k.startsWith("graft.") => s"-D$k=$v" }
-      b.config("spark.executor.extraJavaOptions",
-        (jdk17AddOpens ++ dials).mkString(" "))
+      b.config("spark.executor.extraJavaOptions", jdk17AddOpens.mkString(" "))
       // the worker OFFERS the bracket's MB but executors still request
       // the spark.executor.memory default (1g) unless told otherwise:
       // size the request to the offer so local-cluster[2,8,8192] actually

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage-truncating materialization for iterative and multi-consumer
-  * plans, behind the `-Dgraft.checkpointMode` dial.
+  * plans, behind the `checkpointMode` knob ([[Knobs]]).
   *
   * Every round-materialization in the suite (connected-components
   * min-label rounds, k-means/PQ rounds, LexRank rounds, the p81/p85/p90b
@@ -54,12 +54,6 @@ object Materialize {
     * deployment's retention policy (explicit roots). */
   final case class Handle(df: DataFrame, release: () => Unit)
 
-  /** The active mode; malformed values fall back to `local` (the
-    * [[Dials]] defensive-parse discipline). */
-  def mode: String =
-    Dials.str("graft.checkpointMode", Set("local", "reliable", "stage"))
-      .getOrElse("local")
-
   /** JVM-lifetime temp root for `stage` mode (and the default reliable
     * checkpoint dir), preferring RAM-backed /dev/shm. NODE-LOCAL — the
     * single-process default; a cluster deployment MUST point
@@ -84,8 +78,8 @@ object Materialize {
     * Hadoop URI — parquet write creates the directory and [[rmFs]]
     * releases through the same filesystem), otherwise the node-local
     * temp root. */
-  private def stageRoot: String =
-    sys.props.getOrElse("graft.matStageDir", defaultTempRoot.toString)
+  private def stageRoot(implicit knobs: Knobs): String =
+    knobs.matStageDir.getOrElse(defaultTempRoot.toString)
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -94,12 +88,10 @@ object Materialize {
   /** Lazily point the context at a checkpoint dir if the deployment has
     * not already done so. `-Dgraft.checkpointDir` wins (a cluster sets
     * it to shared storage); otherwise the JVM-lifetime temp root. */
-  private def ensureCheckpointDir(s: SparkSession): Unit = synchronized {
+  private def ensureCheckpointDir(s: SparkSession)(implicit knobs: Knobs): Unit = synchronized {
     val sc = s.sparkContext
-    if (sc.getCheckpointDir.isEmpty) {
-      val dir = sys.props.getOrElse("graft.checkpointDir", s"$stageRoot/ck")
-      sc.setCheckpointDir(dir)
-    }
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(knobs.checkpointDir.getOrElse(s"$stageRoot/ck"))
   }
 
   /** The materialized RDD backing a checkpointed Dataset — read from
@@ -130,33 +122,34 @@ object Materialize {
   /** Materialize `df` eagerly under the active mode and return it with
     * its release handle. `tag` names the site in staged paths (and
     * nothing else) — diagnostics, not identity. */
-  def tracked(df: DataFrame, tag: String): Handle = mode match {
-    case "reliable" =>
-      val s = df.sparkSession
-      ensureCheckpointDir(s)
-      val ck = df.checkpoint(eager = true)
-      val rdd = planRdd(ck)
-      Handle(ck, () => rdd.foreach { r =>
-        // release = delete this RDD's checkpoint files; the unpersist is
-        // belt-and-braces (reliable checkpoints don't pin block memory)
-        r.getCheckpointFile.foreach(rmFs(s, _))
-        r.unpersist(blocking = false); ()
-      })
-    case "stage" =>
-      val s = df.sparkSession
-      // path uniqueness: counter disambiguates sites within this JVM, and
-      // the Spark applicationId disambiguates JVMs — two concurrent jobs
-      // sharing an explicit -Dgraft.matStageDir on different hosts can
-      // collide on (pid, counter) but never on applicationId (r14 ADVICE)
-      val out = s"$stageRoot/m_${tag}_${counter.getAndIncrement()}_" +
-        s.sparkContext.applicationId
-      df.write.mode("overwrite").parquet(out)
-      Handle(s.read.parquet(out), () => rmFs(s, out))
-    case _ =>
-      val ck = df.localCheckpoint(eager = true)
-      val rdd = planRdd(ck)
-      Handle(ck, () => rdd.foreach(_.unpersist(blocking = false)))
-  }
+  def tracked(df: DataFrame, tag: String)(implicit knobs: Knobs): Handle =
+    knobs.checkpointMode match {
+      case "reliable" =>
+        val s = df.sparkSession
+        ensureCheckpointDir(s)
+        val ck = df.checkpoint(eager = true)
+        val rdd = planRdd(ck)
+        Handle(ck, () => rdd.foreach { r =>
+          // release = delete this RDD's checkpoint files; the unpersist is
+          // belt-and-braces (reliable checkpoints don't pin block memory)
+          r.getCheckpointFile.foreach(rmFs(s, _))
+          r.unpersist(blocking = false); ()
+        })
+      case "stage" =>
+        val s = df.sparkSession
+        // path uniqueness: counter disambiguates sites within this JVM, and
+        // the Spark applicationId disambiguates JVMs — two concurrent jobs
+        // sharing an explicit -Dgraft.matStageDir on different hosts can
+        // collide on (pid, counter) but never on applicationId (r14 ADVICE)
+        val out = s"$stageRoot/m_${tag}_${counter.getAndIncrement()}_" +
+          s.sparkContext.applicationId
+        df.write.mode("overwrite").parquet(out)
+        Handle(s.read.parquet(out), () => rmFs(s, out))
+      case _ =>
+        val ck = df.localCheckpoint(eager = true)
+        val rdd = planRdd(ck)
+        Handle(ck, () => rdd.foreach(_.unpersist(blocking = false)))
+    }
 
   /** Fire-and-forget materialization: callers that hand the frame to a
     * lazily-consumed downstream plan (the p81/p85 shared fronts) cannot
@@ -164,5 +157,6 @@ object Materialize {
     * blocks stay pinned for the session (the documented caller-must-
     * clean contract); under `reliable`/`stage` nothing pins block
     * memory and files are reclaimed at JVM exit / by retention. */
-  def apply(df: DataFrame, tag: String): DataFrame = tracked(df, tag).df
+  def apply(df: DataFrame, tag: String)(implicit knobs: Knobs): DataFrame =
+    tracked(df, tag).df
 }

@@ -10,9 +10,7 @@ import graft.{queries => gq}
   */
 object SparkEntry {
 
-  // def, not val: Pipeline.defs re-reads the index knobs per access so the
-  // Spark closures and the oracle strings always observe the same values
-  private def allDefs: Seq[gq.QDef] =
+  private val allDefs: Seq[gq.QDef] =
     Relational.defs ++ Dml.defs ++ Pipeline.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -21,9 +19,18 @@ object SparkEntry {
     allDefs.head.fn(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allDefs.map { q =>
+  /** One entry per implemented operator from SURVEY.md §2, over the knobs
+    * the JVM started with. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    queriesOf(allDefs)
+
+  /** The same inventory over `knobs`. */
+  def queriesFor(knobs: Knobs): Map[String, (SparkSession, String) => DataFrame] =
+    if (knobs == Knobs.jvm) queries
+    else queriesOf(Relational.defs ++ Dml.defs ++ Pipeline.defsFor(knobs))
+
+  private def queriesOf(defs: Seq[gq.QDef]) =
+    defs.map { q =>
       q.name -> { (spark: SparkSession, dir: String) =>
         // idempotent: covers sessions built without GraftSession extensions
         functions.SnowflakeExtensions.register(spark)
@@ -33,6 +40,6 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     allDefs.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -5,7 +5,7 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit}
-import graft.Dials
+import graft.Knobs
 import graft.operators.{CopyInto, MergeInto, MutableOps}
 import graft.stage.StageManager
 import scala.jdk.CollectionConverters._
@@ -27,7 +27,8 @@ final class Executor(
     val catalog: Catalog,
     val stages: StageManager,
     val warehouses: WarehouseManager,
-    val history: QueryHistory) {
+    val history: QueryHistory,
+    val knobs: Knobs = Knobs.jvm) {
 
   import Executor._
 
@@ -153,21 +154,8 @@ final class Executor(
   private def tableKey(r: TableNaming.Ref) =
     s"${r.database}.${r.schema}.${r.table}"
 
-  /** Tables above this on-disk size are not versioned: a version costs no
-    * write, but it pins the table's replaced files on disk until it is
-    * evicted, up to 8 table sizes per table. AT/BEFORE then reports time
-    * travel unavailable. The same cap bounds the UNDROP retention. */
-  private val TimeTravelMaxBytes: Long =
-    Dials.long("graft.timeTravelMaxBytes")
-      .getOrElse(1024L * 1024 * 1024)
-
-  /** Streams snapshot their source as the CDC baseline; above this size
-    * the snapshot is refused (CREATE STREAM errors; a later advance past
-    * the cap marks the stream stale) instead of pinning the source's
-    * replaced files without bound — the same trade-off as time travel. */
-  private val StreamSnapshotMaxBytes: Long =
-    Dials.long("graft.streamSnapshotMaxBytes")
-      .getOrElse(8L * 1024 * 1024 * 1024)
+  /** The `TABLE(PIPELINE())` inventory over this executor's knobs. */
+  private lazy val pipelineEntries = graft.SparkEntry.queriesFor(knobs)
 
   /** Every snapshot directory (versions, stream baselines, UNDROP
     * retention, transaction snapshots) lives under this root, which
@@ -177,7 +165,7 @@ final class Executor(
   /** Snapshot a table's current content as the post-state of `queryId`. */
   private def recordVersion(ref: TableNaming.Ref, queryId: String): Unit =
     if (catalog.tableExists(ref))
-      catalog.snapshotTable(ref, snapshotRoot, TimeTravelMaxBytes).foreach { snap =>
+      catalog.snapshotTable(ref, snapshotRoot, knobs.timeTravelMaxBytes).foreach { snap =>
         val ring = tableVersions.computeIfAbsent(tableKey(ref),
           _ => new java.util.ArrayDeque[TableVersion]())
         ring.synchronized {
@@ -608,7 +596,7 @@ final class Executor(
       if (key.startsWith(s"${norm(ctx.database)}.${norm(ctx.schema)}.") &&
         !sm.stale && catalog.tableExists(sm.table) &&
         mentionsOutsideQuotes(sql, streamNameRe(sm.name))) {
-        catalog.snapshotTable(sm.table, snapshotRoot, StreamSnapshotMaxBytes) match {
+        catalog.snapshotTable(sm.table, snapshotRoot, knobs.streamSnapshotMaxBytes) match {
           case Some(snap) =>
             val old = sm.baseline
             sm.baseline = snap
@@ -868,7 +856,7 @@ final class Executor(
       def resolveDir(dirArg: Option[String]): String = dirArg.orElse {
         val ps = sessionParamsOf(ctx.sessionId)
         ps.synchronized(ps.get("GRAFT_PIPELINE_DIR"))
-      }.orElse(sys.props.get("graft.pipelineDir")).getOrElse(
+      }.orElse(knobs.pipelineDir).getOrElse(
         throw SnowflakeError.compilation(
           s"pipeline data directory not set: pass TABLE($fn(...'<dir>')) or " +
             "ALTER SESSION SET GRAFT_PIPELINE_DIR = '<dir>'"))
@@ -914,7 +902,7 @@ final class Executor(
           val dir = resolveDir(args.lift(1))
           val key = phrases.map(_.mkString("+")).mkString(" ") +
             s" all=$requireAll k=$k" + "\u0000" + dir
-          (graft.queries.Pipeline.bm25Search(spark, dir, phrases, requireAll, k),
+          (graft.queries.Pipeline.bm25Search(spark, dir, phrases, requireAll, k)(knobs),
             "bm25_" + java.lang.Integer.toHexString(key.hashCode))
         } else {
           val (entry, dirArg) =
@@ -924,7 +912,7 @@ final class Executor(
               (args.head.toLowerCase(java.util.Locale.ROOT), args.lift(1))
             } else (pipelineAliases(fn), args.headOption)
           val dir = resolveDir(dirArg)
-          val fnImpl = graft.SparkEntry.queries.getOrElse(entry,
+          val fnImpl = pipelineEntries.getOrElse(entry,
             throw SnowflakeError.compilation(
               s"unknown pipeline entry '$entry' (see SparkEntry.queries)"))
           (fnImpl(spark, dir),
@@ -991,10 +979,11 @@ final class Executor(
     })
   }
 
-  /** Run a query and get the DataFrame (internal; used by MERGE USING
-    * subqueries and tests that want plans, not materialized rows). */
+  /** Run a query and get the DataFrame (internal; used by CTAS, MERGE
+    * USING subqueries and tests that want plans, not materialized rows). */
   def queryDf(ctx: Context, sql: String): DataFrame =
-    spark.sql(TableNaming.rewrite(rewriteStreams(ctx, sql), ctx.database, ctx.schema))
+    spark.sql(TableNaming.rewrite(rewriteStreams(ctx, rewriteGenerator(sql)),
+      ctx.database, ctx.schema))
 
   private def show(ctx: Context, sql0: String, queryId: String): Result = {
     // LIKE '<pattern>' filters on the object-name column (Snowflake
@@ -1363,10 +1352,10 @@ final class Executor(
         val appendOnly = appendOpt != null &&
           appendOpt.toUpperCase(java.util.Locale.ROOT).contains("TRUE")
         val baseline = catalog.snapshotTable(srcRef, snapshotRoot,
-          StreamSnapshotMaxBytes).getOrElse(
+          knobs.streamSnapshotMaxBytes).getOrElse(
           throw SnowflakeError.compilation(
             s"Cannot create stream on $tableName: source exceeds the " +
-              s"$StreamSnapshotMaxBytes-byte baseline snapshot cap " +
+              s"${knobs.streamSnapshotMaxBytes}-byte baseline snapshot cap " +
               "(-Dgraft.streamSnapshotMaxBytes to raise)"))
         val old = streams.put(s"${ref.database}.${ref.schema}.${ref.table}",
           StreamMeta(ref.table, srcRef, baseline, appendOnly))
@@ -1536,7 +1525,7 @@ final class Executor(
           // without an UNDROP snapshot (UNDROP then reports not-found)
           // rather than keeping its files on disk
           val meta = catalog.getTable(ref).get
-          catalog.snapshotTable(ref, snapshotRoot, TimeTravelMaxBytes).foreach { snap =>
+          catalog.snapshotTable(ref, snapshotRoot, knobs.timeTravelMaxBytes).foreach { snap =>
             droppedTables.synchronized {
               droppedTables.put(s"${ref.database}.${ref.schema}.${ref.table}",
                 (meta, snap))
@@ -1736,7 +1725,8 @@ final class Executor(
         beforeWrite(ctx, ref, created = false)
         // a stream read inside INSERT .. SELECT resolves to its delta view
         // and is consumed (baseline advanced) once the insert succeeds
-        val streamSql = rewriteStreams(ctx, sql)
+        val genSql = rewriteGenerator(sql)
+        val streamSql = rewriteStreams(ctx, genSql)
         val r = catalog.lockFor(ref).synchronized {
           // rows-affected without scanning the target (VERDICT r1 #3):
           // VALUES -> tuple count from the text, INSERT..SELECT -> count the
@@ -1754,7 +1744,7 @@ final class Executor(
           }
         }
         recordVersion(ref, queryId)
-        if (streamSql ne sql) advanceConsumedStreams(ctx, sql)
+        if (streamSql ne genSql) advanceConsumedStreams(ctx, sql)
         r
       case updateRe(name, sets, where) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
@@ -2241,7 +2231,7 @@ final class Executor(
     // SELECT * over a 100 TB table must fail with a clean Snowflake-shaped
     // error instead of OOMing the shared server JVM. Fetching cap+1 rows
     // detects overflow without counting the full result.
-    val cap = Executor.maxResultRows
+    val cap = knobs.maxResultRows
     val fetched = df.limit(
       if (cap < Int.MaxValue) cap + 1 else Int.MaxValue).collect()
     if (fetched.length > cap)
@@ -2280,14 +2270,6 @@ final class Executor(
 }
 
 object Executor {
-  /** Protocol-edge result cap (rows), read per query so tests and live
-    * reconfiguration work: the reference materializes results unbounded
-    * (`pkg/query/executor.go:99-119`), but a shared server JVM needs the
-    * escape hatch SURVEY §4 calls for. Default 1M rows — generous for an
-    * emulator protocol edge, far below heap death. */
-  private[emulator] def maxResultRows: Int =
-    Dials.int("graft.maxResultRows").getOrElse(1000000)
-
   /** Character spans of '...' literals and "..." quoted identifiers, so
     * name rewrites can skip text the parser would treat as data. Doubled
     * quotes ('' / "") scan as two adjacent literals, which still lands
@@ -2342,7 +2324,6 @@ object Executor {
         java.util.regex.Matcher.quoteReplacement(m.matched)
       else f(m))
   }
-
 
   /** Split a multi-statement text on top-level semicolons — quote-,
     * paren- AND comment-aware (a `;` inside a string literal, quoted

@@ -26,6 +26,7 @@ object SnowflakeError {
   val CodeInternalError = "000001"
   val CodeInvalidParameter = "000002"
   val CodePermissionDenied = "000003"
+  val CodeQueryCanceled = "000604"
 
   val SQLStateSuccess = "00000"
   val SQLStateAuthenticationFailed = "28000"
@@ -34,6 +35,7 @@ object SnowflakeError {
   val SQLStateNoData = "02000"
   val SQLStateTableExists = "42S01"
   val SQLStateGeneralError = "HY000"
+  val SQLStateQueryCanceled = "57014"
 
   /** Code -> SQL state (reference `error.go:42-58`). */
   def sqlStateFor(code: String): String = code match {
@@ -43,6 +45,7 @@ object SnowflakeError {
     case CodeSQLExecutionError => SQLStateDataException
     case CodeObjectNotFound => SQLStateNoData
     case CodeObjectAlreadyExists => SQLStateTableExists
+    case CodeQueryCanceled => SQLStateQueryCanceled
     case _ => SQLStateGeneralError
   }
 

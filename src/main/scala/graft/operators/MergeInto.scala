@@ -173,18 +173,26 @@ object MergeInto {
     deduped.filter(survives).select(outCols: _*)
   }
 
-  private def countsOf(tg: Tagged): Counts = {
+  /** One aggregation over the tagged join: the fan-out probe (the most
+    * matches, and the most applying matches, of one target row) and the
+    * per-action counts. Matched rows group by their target row; every
+    * other row falls into one NULL group, which partial aggregation
+    * collapses map-side. */
+  private def probe(tg: Tagged): (Long, Long, Counts) = {
     import tg._
     def cnt(cond: Column): Column = sum(when(cond, 1L).otherwise(0L))
     def in(c: Column, idxs: Set[Int]): Column =
       if (idxs.isEmpty) lit(false)
       else c.isin(idxs.toSeq.map(_.asInstanceOf[Any]): _*)
-    val row = joined.agg(
-      cnt(sourceOnly && insertIdx =!= lit(Keep)).as("ins"),
-      cnt(isMatched && in(matchedIdx, updateIdxs)).as("upd"),
-      cnt(isMatched && in(matchedIdx, deleteIdxs)).as("del")).collect()(0)
+    val row = joined.groupBy(when(isMatched, col(TId)))
+      .agg(cnt(isMatched).as("m"), cnt(applied).as("ap"),
+        cnt(sourceOnly && insertIdx =!= lit(Keep)).as("ins"),
+        cnt(isMatched && in(matchedIdx, updateIdxs)).as("upd"),
+        cnt(isMatched && in(matchedIdx, deleteIdxs)).as("del"))
+      .agg(max("m"), max("ap"), sum("ins"), sum("upd"), sum("del"))
+      .collect()(0)
     def l(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-    Counts(l(0), l(1), l(2))
+    (l(0), l(1), Counts(l(2), l(3), l(4)))
   }
 
   /** Execute the merge and return the new target content (same schema as
@@ -208,7 +216,7 @@ object MergeInto {
       condition: Column,
       matched: Seq[WhenMatched] = Nil,
       notMatched: Seq[WhenNotMatched] = Nil): Counts =
-    countsOf(tag(target, source, condition, matched, notMatched))
+    probe(tag(target, source, condition, matched, notMatched))._3
 
   /** Statement-path execution: ONE join, persisted, feeding (a) the
     * nondeterminism check, (b) the per-action counts, and (c) the written
@@ -223,17 +231,8 @@ object MergeInto {
     val cached = tg.joined.persist(StorageLevel.MEMORY_AND_DISK)
     val tgc = tg.copy(joined = cached)
     try {
-      // fanout probe: max matches / max applying matches per target row
-      val fan = cached.filter(tgc.isMatched)
-        .groupBy(col(TId))
-        .agg(count(lit(1)).as("m"),
-          sum(when(tgc.applied, 1L).otherwise(0L)).as("ap"))
-        .agg(coalesce(max(col("m")), lit(0L)),
-          coalesce(max(col("ap")), lit(0L)))
-        .collect()(0)
-      val (maxMatches, maxApplies) = (fan.getLong(0), fan.getLong(1))
+      val (maxMatches, maxApplies, c) = probe(tgc)
       if (maxApplies > 1) throw new NondeterministicMergeException
-      val c = countsOf(tgc)
       write(finish(tgc, target, matched, notMatched,
         dedupeFanout = maxMatches > 1))
       c

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Dials, Materialize}
+import graft.{Knobs, Materialize}
 import graft.queries.Q._
 
 /** LLM-training-data pipeline operators over `documents` / `embeddings` /
@@ -33,9 +33,8 @@ object Pipeline {
     * split, so a production deployment sets 0 and skips the shuffle —
     * the scale-dependent setting stays a dial with a local default, per
     * the optimization contract. Values are repartition-invariant. */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame = {
-    val w = Dials.int("graft.explodeSpread")
-      .getOrElse(s.sparkContext.defaultParallelism)
+  private def spread(s: SparkSession, df: DataFrame)(implicit knobs: Knobs): DataFrame = {
+    val w = knobs.explodeSpread.getOrElse(s.sparkContext.defaultParallelism)
     if (w <= 0) df
     else {
       // scale-adaptive (r18): a many-file / multi-row-group table
@@ -93,8 +92,8 @@ object Pipeline {
     /** Resolved per call (not once-per-JVM) so a deployment can point
       * different runs at different staged locations; the explicit dir is
       * never deleted on exit. */
-    private def root: java.nio.file.Path =
-      sys.props.get("graft.shingleStageDir") match {
+    private def root(implicit knobs: Knobs): java.nio.file.Path =
+      knobs.shingleStageDir match {
         case Some(p) =>
           val d = java.nio.file.Paths.get(p)
           java.nio.file.Files.createDirectories(d)
@@ -112,7 +111,7 @@ object Pipeline {
       * for the life of a run; an explicit staging dir carries its own
       * retention policy, so deleting it is how you invalidate.) */
     private[graft] def stage(s: SparkSession, dir: String, tag: String)(
-        build: => DataFrame): DataFrame = {
+        build: => DataFrame)(implicit knobs: Knobs): DataFrame = {
       val path = synchronized {
         val canonical = new java.io.File(dir).getCanonicalPath
         val r = root
@@ -222,7 +221,7 @@ object Pipeline {
       * the downstream joins need). Schema: (doc_id, h, df) — h is the
       * engine-portable 60-bit md5 of the shingle text; the text itself is
       * dropped at staging. */
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       stage(s, dir, "sh") {
         spread(s, docs(s, dir)
             .select(col("doc_id"), split(col("text"), " ").as("arr"))
@@ -267,7 +266,7 @@ object Pipeline {
     * rebuilds instead of failing every consumer's `inter` select with
     * AnalysisException. Any future schema change bumps the tag again. */
   private[graft] object PairStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, "pr2")(buildRawPairs(s, dir))
   }
 
@@ -283,14 +282,14 @@ object Pipeline {
     * against a small parquet table. The exact-baseline scale guard moves
     * here: it fires when the truth is BUILT (the only expensive moment),
     * at validation scale only — a 100 TB corpus measures recall on a
-    * sampled validation slice, never all-pairs ([[evalQueriesDial]] IS
+    * sampled validation slice, never all-pairs (`knobs.evalQueries` IS
     * that slice: with `-Dgraft.evalQueries=m` the query side is the
     * m-vector hash sample and the build costs m*n, not n^2). Same
     * commit protocol / lifecycle as [[ShingleStage]]; the sample size
     * is part of the staging tag (a fit dial — the p91 lesson). */
   private[graft] object TruthStage {
     /** Exact top-5 cosine neighbors: (qid, neighbor_id, rank, sim_r). */
-    def loadKnn(s: SparkSession, dir: String): DataFrame =
+    def loadKnn(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, evalTag(s, dir, "tk")) {
         guardExactBaseline(s, dir, "p05_knn_exact (truth stage)",
           "p06_knn_lsh / p16_knn_ivf")
@@ -313,10 +312,10 @@ object Pipeline {
       }
 
     /** Exact near-dup pair truth: (a_id, b_id, sim_r), cosine >= 0.4.
-      * Under [[evalQueriesDial]] the slice is "pairs whose a-side (the
+      * Under `knobs.evalQueries` the slice is "pairs whose a-side (the
       * smaller id) is sampled" — recall over it stays well-defined for
       * every consumer because each joins candidates AGAINST this truth. */
-    def loadPairs(s: SparkSession, dir: String): DataFrame =
+    def loadPairs(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, evalTag(s, dir, "tp")) {
         guardExactBaseline(s, dir, "p14_embedding_neardup (truth stage)",
           "p06_knn_lsh")
@@ -342,7 +341,7 @@ object Pipeline {
     * stop-shingle hygiene). The document frequency is precomputed in the
     * staged table, so the guard is a plain literal filter on the staged
     * scan; the doc count is a one-row aggregate-pushdown parquet read. */
-  private def shingles(s: SparkSession, dir: String): DataFrame = {
+  private def shingles(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val nDocs = docsCount(s, dir)
     ShingleStage.load(s, dir)
       .filter(col("df").cast("double") <= lit(math.max(5.0, nDocs * 0.01)))
@@ -377,44 +376,24 @@ object Pipeline {
   // the sketch CONTENTS (not just the final answers) are reproducible
   // cross-engine and can themselves be oracle-pinned (p38b).
 
-  /** Bloom filter dials, JVM-start knobs mirrored into both engines the
-    * way `-Dgraft.lshTables` is (defs, read when the QDef Seq is built,
-    * so the Spark plan and the oracle SQL always observe one value):
-    * `-Dgraft.bloomBits` = bitset size, rounded DOWN to a power of two
-    * and clamped to [2^12, 2^24] (positions are mask-extracted hash
-    * slices, so the size must be a power of two); `-Dgraft.bloomProbes`
-    * = probe count k, clamped to [1, 8]. Defaults 2^16 / 4 — at those
-    * dials the derived shifts are the frozen r8 family (0, 11, 22, 33).
-    * Sizing rule for a 100 TB run: bits ≈ 16-20x the benchmark's
-    * distinct-shingle count keeps the false-positive rate ≤ ~0.2%
-    * (k=4), and the prescreen stays result-invariant at ANY dial — the
-    * verify join kills false positives; p21's shared oracle pins that. */
-  private[graft] def bloomLogBits: Int =
-    Dials.long("graft.bloomBits")
-      .map(v => math.min(24, math.max(12,
-        63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, v)))))
-      .getOrElse(16)
-  private[graft] def bloomProbes: Int =
-    Dials.int("graft.bloomProbes")
-      .map(v => math.min(8, math.max(1, v))).getOrElse(4)
-
   /** Bloom probe positions: w-bit slices of the 60-bit hash at evenly
     * spaced shifts (Kirsch-Mitzenmacher-style derivation of k probes
     * from one strong hash; slice i uses bits [i·step, i·step+w) ⊂
     * [0, 60), step = (60−w) div k — at the defaults, [11i, 11i+16)).
     * The bits pack into 32-bit words kept in signed longs so neither
     * engine's `<<` ever touches the sign bit. */
-  private def bloomHashShifts: Seq[Int] = {
-    val step = (60 - bloomLogBits) / bloomProbes
-    (0 until bloomProbes).map(_ * step)
+  private def bloomHashShifts(implicit knobs: Knobs): Seq[Int] = {
+    val step = (60 - knobs.bloomLogBits) / knobs.bloomProbes
+    (0 until knobs.bloomProbes).map(_ * step)
   }
-  private def bloomMask: Int = (1 << bloomLogBits) - 1
-  private def bloomPosSpark(h: String, s: Int) = s"(shiftright($h, $s) & $bloomMask)"
-  private def bloomPosDuck(h: String, s: Int) = s"(($h >> $s) & $bloomMask)"
+  private def bloomMask(implicit knobs: Knobs): Int = (1 << knobs.bloomLogBits) - 1
+  private def bloomPosSpark(h: String, s: Int)(
+      implicit knobs: Knobs) = s"(shiftright($h, $s) & $bloomMask)"
+  private def bloomPosDuck(h: String, s: Int)(implicit knobs: Knobs) = s"(($h >> $s) & $bloomMask)"
 
   /** Fold a set of 60-bit hashes into the (word, bits) Bloom bitset —
     * ≤2048 rows, map-side-combined bit_or, broadcastable as one row. */
-  private def bloomBits(hashes: DataFrame): DataFrame = hashes
+  private def bloomBits(hashes: DataFrame)(implicit knobs: Knobs): DataFrame = hashes
     .select(explode(array(bloomHashShifts.map(sh =>
       expr(bloomPosSpark("h", sh))): _*)).as("pos"))
     .groupBy(expr("CAST(shiftright(pos, 5) AS INT)").as("word"))
@@ -446,35 +425,19 @@ object Pipeline {
   private def hllEstConstSql: String =
     s"CAST('${java.lang.Double.toString(hllEstConst)}' AS DOUBLE)"
 
-  /** Count-min dials, mirrored like the Bloom knobs above:
-    * `-Dgraft.cmsWidth` = cells per row, rounded DOWN to a power of two
-    * and clamped to [2^8, 2^20]; `-Dgraft.cmsDepth` = independent rows,
-    * clamped to [1, 8]. Defaults 8192 / 4 — the derived shifts are then
-    * the frozen r8 family (0, 13, 26, 39). Sketch state is
-    * depth × width × 8 B per task (256 KiB at the defaults) — constant
-    * in the corpus size; expected overcount ≈ N_instances/width per row
-    * before the min, so a 100 TB run dials width to the stream's
-    * instance count, not its cardinality. */
-  private[graft] def cmsLogWidth: Int =
-    Dials.long("graft.cmsWidth")
-      .map(v => math.min(20, math.max(8,
-        63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, v)))))
-      .getOrElse(13)
-  private[graft] def cmsDepth: Int =
-    Dials.int("graft.cmsDepth")
-      .map(v => math.min(8, math.max(1, v))).getOrElse(4)
-
   /** Count-min row positions: w-bit slices of the hash at evenly spaced
     * shifts (slice j uses bits [j·step, j·step+w) ⊂ [0, 60), step =
     * min(w, (60−w) div max(1, d−1)) — at the defaults, [13j, 13j+13)). */
-  private def cmsShifts: Seq[Int] = {
-    val step = math.min(cmsLogWidth,
-      (60 - cmsLogWidth) / math.max(1, cmsDepth - 1))
-    (0 until cmsDepth).map(_ * step)
+  private def cmsShifts(implicit knobs: Knobs): Seq[Int] = {
+    val step = math.min(knobs.cmsLogWidth,
+      (60 - knobs.cmsLogWidth) / math.max(1, knobs.cmsDepth - 1))
+    (0 until knobs.cmsDepth).map(_ * step)
   }
-  private def cmsMask: Int = (1 << cmsLogWidth) - 1
-  private def cmsPosSpark(h: String, j: Int) = s"(shiftright($h, ${cmsShifts(j)}) & $cmsMask)"
-  private def cmsPosDuck(h: String, j: Int) = s"(($h >> ${cmsShifts(j)}) & $cmsMask)"
+  private def cmsMask(implicit knobs: Knobs): Int = (1 << knobs.cmsLogWidth) - 1
+  private def cmsPosSpark(h: String, j: Int)(implicit knobs: Knobs) =
+    s"(shiftright($h, ${cmsShifts.apply(j)}) & $cmsMask)"
+  private def cmsPosDuck(h: String, j: Int)(implicit knobs: Knobs) =
+    s"(($h >> ${cmsShifts.apply(j)}) & $cmsMask)"
 
   /** Per-row text → distinct-3-gram-shingle → HLL register update
     * projection: the same shingle front [[ShingleStage]] stages and the
@@ -511,7 +474,7 @@ object Pipeline {
     * sketch row: count-merging per (j, pos) — batch agg or streaming
     * stateful agg — yields the identical ≤ depth·width cell table
     * ([[graft.streaming.EventStreams.bigramCellsStream]]). */
-  private[graft] def cmsCellUpdates(docs: DataFrame): DataFrame =
+  private[graft] def cmsCellUpdates(docs: DataFrame)(implicit knobs: Knobs): DataFrame =
     bigramHashes(docs)
       .select(posexplode(array(cmsShifts.indices.map(j =>
         expr(cmsPosSpark("h", j))): _*)).as(Seq("j", "pos")))
@@ -552,7 +515,7 @@ object Pipeline {
   /** Every document's near-dup component label (min doc_id in its
     * connected component; singletons label themselves) — p20's result,
     * shared with the dedup-yield report (p59). */
-  private def dedupComponents(s: SparkSession, dir: String): DataFrame = {
+  private def dedupComponents(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val fix = minLabelComponents(s,
       jaccardPairs(s, dir).select(col("a_id"), col("b_id")))
     docs(s, dir)
@@ -614,34 +577,13 @@ object Pipeline {
     }
   }
 
-  /** Above this edge count the connected-components solve stays fully
-    * distributed; at or below it, the edge list is collected and solved
-    * with union-find on the driver. Near-dup pair graphs are tiny BY
-    * CONSTRUCTION (pairs already passed a similarity threshold), so the
-    * driver path is the common case even at corpus scale — 5M edges is
-    * ~80 MB driver RAM, while the distributed loop pays O(log diameter)
-    * full scheduling rounds. Override: -Dgraft.ccDriverMaxEdges. */
-  private[graft] def ccDriverMaxEdges: Long =
-    Dials.long("graft.ccDriverMaxEdges").getOrElse(5000000L)
-
-  /** `-Dgraft.sketchAgreement=off` drops the exact-global-rank
-    * validation side of the agreement entries (p53c / p55c / p87c /
-    * p90b), emitting the histogram-sketch side alone with the
-    * agreement columns NULL — the 100 TB production form, where the
-    * corpus-through-one-reducer rank sort the exact side needs is the
-    * cost the sketch exists to avoid. Default ON: the oracle gate
-    * measures sketch-vs-exact agreement in-row, and the DuckDB mirrors
-    * assume it. */
-  private[graft] def sketchAgreementOn: Boolean =
-    !Dials.str("graft.sketchAgreement", Set("on", "off")).contains("off")
-
   /** Connected components over an undirected pair graph, restricted to
     * the edge-connected vertex set. Returns (doc_id, comp) for every
     * vertex that appears in `pairs`, comp = min vertex id in the
     * component.
     *
     * Two physical strategies behind one contract:
-    *  - edge list <= `driverMaxEdges`: collect the pairs and run
+    *  - edge list <= `knobs.ccDriverMaxEdges`: collect the pairs and run
     *    union-find (path-halving) on the driver. One job, no iteration,
     *    immune to scheduler/codegen variance — the right plan whenever
     *    the thresholded pair graph fits in driver memory.
@@ -661,13 +603,13 @@ object Pipeline {
     * checkpoint/parquet — mandatory durability on a preemptible
     * cluster, see Materialize's scaladoc). */
   private[graft] def minLabelComponents(
-      s: SparkSession, pairs: DataFrame, maxIter: Int = 200,
-      driverMaxEdges: Long = ccDriverMaxEdges): DataFrame = {
+      s: SparkSession, pairs: DataFrame, maxIter: Int = 200)(
+      implicit knobs: Knobs): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sc = s.sparkContext
     val p2 = pairs.toDF("a_id", "b_id")
     val nPairs = p2.count()
-    if (nPairs <= driverMaxEdges) {
+    if (nPairs <= knobs.ccDriverMaxEdges) {
       val rows = p2.collect()
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
@@ -785,14 +727,14 @@ object Pipeline {
     * max(5, 1%·docs) entries, so the per-shingle expansion is O(cap²)
     * constant work — one shuffle on `shingle` total, versus the self-join's
     * two full shuffles of the exploded index plus the join itself. */
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
+  private def jaccardPairs(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
     PairStage.load(s, dir)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sza") + col("szb") - col("inter")))
       .filter(col("jaccard") >= 0.5)
       .select(col("a_id"), col("b_id"), col("jaccard"))
 
-  private def buildRawPairs(s: SparkSession, dir: String): DataFrame = {
+  private def buildRawPairs(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val sh = shingles(s, dir)
     val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // the posting-list shuffle keys on the staged 60-bit hash, not the
@@ -825,25 +767,6 @@ object Pipeline {
       .select(col("a_id"), col("b_id"), col("inter"), col("sza"), col("szb"))
   }
 
-  /** p05/p14 are DECLARED exact all-pairs baselines — quadratic by
-    * definition. This guard refuses to build them above a row threshold
-    * so they cannot be invoked at 100 TB by accident; p06 (LSH) and p16
-    * (IVF) are the scale paths for the same shapes. The threshold is
-    * overridable via -Dgraft.exactBaselineMaxRows (tests use a tiny one).
-    * The count is one aggregate-pushdown parquet scan, negligible next
-    * to the O(n^2) work it gates. */
-  def exactBaselineMaxRows: Long =
-    Dials.long("graft.exactBaselineMaxRows").getOrElse(200000L)
-
-  /** Largest pair-front (rows) the suite will HINT into a broadcast —
-    * fronts are bounded by the corpus near-dup rate, which is a corpus
-    * property, not a constant; above this the join runs unhinted
-    * (shuffle on the id keys) instead of forcing a driver-sized
-    * broadcast. ~24 B/row → the default caps the broadcast near 25 MB.
-    * Override: -Dgraft.broadcastFrontMaxRows. */
-  private[graft] def broadcastFrontMaxRows: Long =
-    Dials.long("graft.broadcastFrontMaxRows").getOrElse(1000000L)
-
   /** p91's cached broadcast decision, keyed on (staged-pair dir, cap):
     * the staged table is written once per (JVM, dir) and immutable, so
     * the counted guard never needs re-running for the same dir — but the
@@ -852,33 +775,6 @@ object Pipeline {
     * stale verdict. */
   private val p91BroadcastByDirCap =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Boolean]()
-
-  /** p23's deterministic packing parallelism — doc_id % packBuckets. The
-    * local default matches the test core count; a cluster run raises it
-    * to executor width. Read once so the Spark plan and the oracle SQL
-    * always share one value. */
-  private val packBuckets: Int =
-    Dials.int("graft.packBuckets").getOrElse(32)
-
-  /** Eval-query sample: `-Dgraft.evalQueries` = target query count m for
-    * the ANN evaluation family — the truth stage (p00g) and every entry
-    * whose contract is "query with each corpus vector" (p05/p14 published
-    * truths, the p42/p43/p46/p47 ADC query side, p68b's projected
-    * all-pairs, and therefore every p35 recall row and the p83 judged
-    * frame). That contract is quadratic in SF — the sf1 run measured the
-    * family at 38.8x for 10x data while every production family stayed
-    * at or below linear (SCALE.md r16). With the dial set, the query set
-    * is the deterministic hash sample md560(vec_id) < (2^60 div n)*m
-    * (the kmeansFitPoints selection rule: a per-row filter, no global
-    * sort, integer-exact in both engines), so truth build and eval cost
-    * drop from n^2 to m*n while measuring the same statistics over a
-    * uniform validation slice — the 100 TB form the TruthStage scaladoc
-    * promises. Unset (the default), the full-corpus query set and every
-    * published hash are unchanged. A JVM-start knob like the index
-    * dials: the Spark plan and the oracle SQL both read it when the
-    * QDef Seq is built, so the two engines always observe one value. */
-  private[graft] def evalQueriesDial: Option[Long] =
-    Dials.long("graft.evalQueries").map(v => math.max(1L, v))
 
   /** Auto-slice derivations already announced (one line per corpus size
     * per JVM — the derivation is deterministic, repeating it is noise). */
@@ -891,7 +787,7 @@ object Pipeline {
     *  - explicit `-Dgraft.evalQueries=m` wins (identity when m >= n:
     *    the full corpus was asked for);
     *  - UNSET, when the unsampled build would exceed the exact-baseline
-    *    guard product (n² > cap², cap = [[exactBaselineMaxRows]] — i.e.
+    *    guard product (n² > cap², cap = `knobs.exactBaselineMaxRows` — i.e.
     *    n > cap), the slice auto-derives as m = max(1, cap²/n), the
     *    largest m the guard's q·n <= cap² admission formula accepts,
     *    and the derivation is logged once. The auto m is always < n
@@ -904,11 +800,11 @@ object Pipeline {
     * and the staged truths bake the effective m into their tag
     * ([[evalTag]]), so an auto-derived slice re-keys its artifacts
     * exactly like an explicit dial (the p91 lesson). */
-  private[graft] def effectiveEvalM(n: Long): Option[Long] =
-    evalQueriesDial match {
+  private[graft] def effectiveEvalM(n: Long)(implicit knobs: Knobs): Option[Long] =
+    knobs.evalQueries match {
       case Some(m) => Some(m).filter(_ < n)
       case None =>
-        val cap = exactBaselineMaxRows
+        val cap = knobs.exactBaselineMaxRows
         if (n > cap) {
           val m = math.max(1L,
             ((BigInt(cap) * BigInt(cap)) / BigInt(math.max(n, 1L))).toLong)
@@ -926,7 +822,7 @@ object Pipeline {
     * (mirroring the oracle's `m >= n OR hash < threshold` disjunct: at
     * m >= n the integer threshold can land at 2^60 - 1 and would
     * spuriously drop a max-hash row). */
-  private def evalSampleFilter(df: DataFrame, n: Long): DataFrame =
+  private def evalSampleFilter(df: DataFrame, n: Long)(implicit knobs: Knobs): DataFrame =
     effectiveEvalM(n)
       .map(m => df.filter(
         md560(col("vec_id").cast("string")) < lit((1L << 60) / math.max(n, 1L) * m)))
@@ -944,17 +840,17 @@ object Pipeline {
     * every row — Spark's side treats m >= n as the identity); unset →
     * `n <= cap OR hash < thr(max(1, cap²//n))`, the auto-slice rule,
     * which folds to TRUE at every gate scale (n <= cap). */
-  private def duckEvalAnd(vecId: String): String = {
+  private def duckEvalAnd(vecId: String)(implicit knobs: Knobs): String = {
     val n = "(SELECT COUNT(*) FROM embeddings)"
     def thr(mExpr: String) =
       s"""${duckMd560(s"CAST($vecId AS VARCHAR)")}
          |      < ((CAST(1 AS BIGINT) << 60) // greatest($n, 1)) * ($mExpr)""".stripMargin
-    evalQueriesDial match {
+    knobs.evalQueries match {
       case Some(m) =>
         s""" AND ($m >= $n
            |   OR ${thr(s"least(CAST($m AS BIGINT), greatest($n, 1))")})""".stripMargin
       case None =>
-        val cap = exactBaselineMaxRows
+        val cap = knobs.exactBaselineMaxRows
         val capSq = BigInt(cap) * BigInt(cap)
         // the same least(·, n) clamp: when the n <= cap disjunct already
         // admits the row, cap²//n >= n and the unclamped multiplier
@@ -974,7 +870,7 @@ object Pipeline {
     * per row — the sf1 gate measured the ON-clause form stalling p68b's
     * oracle for hours while the WHERE-over-a-scan form ([[duckEvalAnd]]
     * in the probes CTEs) stayed fast. */
-  private def duckEvalFrom(src: String, alias: String): String =
+  private def duckEvalFrom(src: String, alias: String)(implicit knobs: Knobs): String =
     s"(SELECT * FROM $src WHERE TRUE${duckEvalAnd("vec_id")}) $alias"
 
   /** Per-dir embedding count for [[evalTag]] — the tag is consulted on
@@ -1009,11 +905,11 @@ object Pipeline {
     * explicit m >= n) keep the bare tag, so full-corpus runs reuse
     * previously staged truths instead of duplicating them under
     * `-e<m>`. */
-  private def evalTag(s: SparkSession, dir: String, base: String): String =
+  private def evalTag(s: SparkSession, dir: String, base: String)(implicit knobs: Knobs): String =
     effectiveEvalM(embCount(s, dir)).map(m => s"$base-e$m").getOrElse(base)
 
   private def guardExactBaseline(s: SparkSession, dir: String,
-      name: String, scalePath: String): Unit = {
+      name: String, scalePath: String)(implicit knobs: Knobs): Unit = {
     val n = embCount(s, dir)
     // cost model: q*n pair evaluations, q = the eval-query sample size
     // (= n unsampled, where the test reduces to the original n > cap).
@@ -1021,11 +917,11 @@ object Pipeline {
     // dial (or the auto-derived slice, which picks exactly m = cap^2/n)
     // is what makes the truth build legal at scale.
     val q = effectiveEvalM(n).getOrElse(n)
-    val cap = exactBaselineMaxRows.toDouble
+    val cap = knobs.exactBaselineMaxRows.toDouble
     if (q.toDouble * n.toDouble > cap * cap)
       throw new IllegalStateException(
         s"$name is an exact all-pairs baseline and was refused at $n rows " +
-          s"(eval queries $q, limit ${exactBaselineMaxRows}); use $scalePath " +
+          s"(eval queries $q, limit ${knobs.exactBaselineMaxRows}); use $scalePath " +
           "at this scale, or sample the validation slice with -Dgraft.evalQueries")
   }
 
@@ -1035,19 +931,11 @@ object Pipeline {
     * linearly the way any fixed-k quantizer's would. sqrt and ceil are
     * correctly-rounded IEEE ops, so the JVM and DuckDB compute the
     * identical k from the identical n. */
-  private[graft] def ivfK(n: Long): Int =
-    Dials.int("graft.ivfCells").map(v => math.max(1, v))
-      .getOrElse(math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
+  private[graft] def ivfK(n: Long)(implicit knobs: Knobs): Int =
+    knobs.ivfCells.getOrElse(math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** Fixed k-means iteration count — part of the cross-engine contract
-    * (the oracle unrolls exactly this many assign/recompute rounds at
-    * init, so `-Dgraft.kmeansIters` is a JVM-start knob like the other
-    * index parameters). Default 4: measured on the p35 recall entry,
-    * rounds beyond 4 changed recall by <0.2 pt (converged), while 4 vs 2
-    * bought +1.4 pt IVF recall@5 and +3.4 pt near-dup cell colocation —
-    * and the fit is a bounded-sample, staged, once-per-corpus cost. */
-  private[graft] def kmeansIters: Int =
-    Dials.int("graft.kmeansIters").getOrElse(4)
+  /** A pinned count dial as it appears in staging keys. */
+  private def auto(v: Option[Int]): String = v.fold("auto")(_.toString)
 
   /** The fitted coarse quantizer shared by p16 (IVF ANN), p32 (SemDeDup)
     * and p34 (hard negatives), staged once per input dir like the shingle
@@ -1058,7 +946,7 @@ object Pipeline {
     *  - Seeds: the k vectors with the smallest md5(vec_id) — a stratified
     *    deterministic sample (md5 scatters ids uniformly), selected via
     *    orderBy+limit = TakeOrderedAndProject, never a global sort.
-    *  - [[kmeansIters]] rounds of assign (zero-shuffle broadcast top-1,
+    *  - `knobs.kmeansIters` rounds of assign (zero-shuffle broadcast top-1,
     *    see [[nearestCells]]) + decimal-exact mean recompute (the p07
     *    trick), so the DuckDB oracle reproduces the fitted centroids
     *    bit-for-bit and every consumer stays hash-matched.
@@ -1067,18 +955,18 @@ object Pipeline {
     * p00c line read the fitted index instead of re-fitting it — at 100 TB
     * re-fitting per query would triple the family's dominant cost. */
   private[graft] object CellStage {
-    private def tag: String = {
+    private[graft] def tag(implicit knobs: Knobs): String = {
       // the fitted index depends on the index knobs, not just the
       // corpus: bake them into the staging key so two runs sharing one
       // staging root with different k / iteration / sample settings can
       // never silently read each other's index
-      val params = s"${sys.props.getOrElse("graft.ivfCells", "auto")}" +
-        s"-$kmeansIters-$kmeansFitPoints"
+      val params = s"${auto(knobs.ivfCells)}" +
+        s"-${knobs.kmeansIters}-${knobs.kmeansFitPoints}"
       val ph = java.security.MessageDigest.getInstance("MD5")
         .digest(params.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
       s"cl$ph"
     }
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, tag)(buildKmeansCells(s, dir))
 
     /** The fitted index's cell count, memoized per (staging key, dir):
@@ -1087,7 +975,7 @@ object Pipeline {
       * serialized job per call that can never change for an immutable
       * staged artifact (r17; the [[embCount]] discipline). */
     private val cnt = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def count(s: SparkSession, dir: String): Long =
+    def count(s: SparkSession, dir: String)(implicit knobs: Knobs): Long =
       cnt.computeIfAbsent(s"$tag|${new java.io.File(dir).getCanonicalPath}",
         _ => load(s, dir).count())
   }
@@ -1103,12 +991,9 @@ object Pipeline {
     * same index. Selection is a per-row hash-threshold filter
     * (md560(vec_id) < (2⁶⁰ div n)·m) — fully parallel, no global sort,
     * and integer-exact in both engines. */
-  private[graft] def kmeansFitPoints: Long =
-    Dials.long("graft.kmeansFitPoints")
-      .map(v => math.max(1L, v)).getOrElse(256L)
 
-  private[graft] def kmeansFitSample(n: Long, k: Int): Long = {
-    val p = kmeansFitPoints
+  private[graft] def kmeansFitSample(n: Long, k: Int)(implicit knobs: Knobs): Long = {
+    val p = knobs.kmeansFitPoints
     math.min(n, math.max(p * k, 64L * p))
   }
 
@@ -1118,7 +1003,8 @@ object Pipeline {
     * is the initial (cell, cv) index; the result is the converged index
     * in the same shape. Means are decimal-exact (the p07 trick) so the
     * DuckDB oracle reproduces every round bit-for-bit. */
-  private def kmeansRounds(fit: DataFrame, seed: DataFrame, iters: Int): DataFrame = {
+  private def kmeansRounds(fit: DataFrame, seed: DataFrame, iters: Int)(
+      implicit knobs: Knobs): DataFrame = {
     var cent = seed
     for (i <- 1 to iters) {
       val assigned = nearestCells(fit, cent, 1)
@@ -1143,7 +1029,7 @@ object Pipeline {
     cent
   }
 
-  private def buildKmeansCells(s: SparkSession, dir: String): DataFrame = {
+  private def buildKmeansCells(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val e = emb(s, dir)
     val n = embCount(s, dir)
     val k = ivfK(n)
@@ -1155,7 +1041,7 @@ object Pipeline {
     val seed = e.select(col("vec_id").as("cell"), col("embedding").as("cv"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(k)
-    kmeansRounds(fit, seed, kmeansIters)
+    kmeansRounds(fit, seed, knobs.kmeansIters)
   }
 
   /** Super-cell count over a fitted index of `k` cells: max(2, ceil(
@@ -1165,9 +1051,8 @@ object Pipeline {
     * centroids plus the members of the probed super-cells (~sqrt(k)
     * each) instead of all k — at n = 1e9, k ≈ 32k that cuts the
     * dominant cost of p16/p32/p34 ~8-90x depending on probe width. */
-  private[graft] def superKFor(k: Long): Int =
-    Dials.int("graft.ivfSuperCells").map(v => math.max(1, v))
-      .getOrElse(math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt))
+  private[graft] def superKFor(k: Long)(implicit knobs: Knobs): Int =
+    knobs.ivfSuperCells.getOrElse(math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt))
 
   /** Coarse probe width: how many super-cells each vector descends into.
     *
@@ -1196,10 +1081,10 @@ object Pipeline {
     * is trivially cheap; staging just spares every consumer the
     * per-query re-fit jobs. */
   private[graft] object SuperStage {
-    def load(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-      val params = s"${sys.props.getOrElse("graft.ivfCells", "auto")}" +
-        s"-$kmeansIters-$kmeansFitPoints" +
-        s"-${sys.props.getOrElse("graft.ivfSuperCells", "auto")}"
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): (DataFrame, DataFrame) = {
+      val params = s"${auto(knobs.ivfCells)}" +
+        s"-${knobs.kmeansIters}-${knobs.kmeansFitPoints}" +
+        s"-${auto(knobs.ivfSuperCells)}"
       val ph = java.security.MessageDigest.getInstance("MD5")
         .digest(params.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
       // ONE staged table for both k-row artifacts (r17; tag sy = the
@@ -1228,14 +1113,14 @@ object Pipeline {
   /** Fit sqrt(k) super-centroids over the k fitted cell centroids — the
     * same deterministic machinery as the corpus fit (md5-ordered seeds,
     * [[kmeansRounds]]), with the CELLS as the training points. */
-  private def buildSuperCells(s: SparkSession, dir: String): DataFrame = {
+  private def buildSuperCells(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val cells = CellStage.load(s, dir)
     val ks = superKFor(CellStage.count(s, dir))
     val fit = cells.select(col("cell").as("cid0"), col("cv").as("embedding"))
     val seed = cells.select(col("cell"), col("cv"))
       .orderBy(md5(col("cell").cast("string")), col("cell"))
       .limit(ks)
-    kmeansRounds(fit, seed, kmeansIters)
+    kmeansRounds(fit, seed, knobs.kmeansIters)
       .select(col("cell").as("scell"), col("cv").as("scv"))
   }
 
@@ -1246,7 +1131,7 @@ object Pipeline {
     * member list — the small-k flat-probe rule in [[superProbe]] buys
     * the full flat recall instead, inside the same scored-cell bound.) */
   private def buildCellMap(s: SparkSession, dir: String,
-      supers: DataFrame): DataFrame =
+      supers: DataFrame)(implicit knobs: Knobs): DataFrame =
     nearestCells(
       CellStage.load(s, dir).select(col("cell").as("mcell"), col("cv").as("embedding")),
       supers.select(col("scell").as("cell"), col("scv").as("cv")), 1)
@@ -1262,33 +1147,14 @@ object Pipeline {
   //  Neighbor Search" (TPAMI 2011) — public provenance.
   // ====================================================================
 
-  /** PQ dials, JVM-start knobs mirrored into both engines like the index
-    * knobs (read when the QDef Seq is built, so the Spark plan and the
-    * oracle SQL always observe one value): `-Dgraft.pqSubspaces` = M,
-    * clamped [1, 16] (each subspace quantizes dim/M floats; the last
-    * subspace absorbs nothing — dims not divisible by M drop the
-    * remainder tail on BOTH engines identically via integer division);
-    * `-Dgraft.pqCodes` = codes per subspace k', clamped [2, 256] (one
-    * byte per subspace at the cap). Defaults 8 / 16: a 64-dim float
-    * vector (256 B) compresses 32x to 8 one-byte codes. Measured at
-    * sf0.01 (p35): ADC-only recall@5 0.161 / 0.215 / 0.252 / 0.385 at
-    * M,k' = 4,16 / 8,16 / 8,32 / 16,64 — the 8/16 default plus the p43
-    * exact re-rank recovers 0.416 of the 0.460 candidate-set ceiling. */
-  private[graft] def pqM: Int =
-    Dials.int("graft.pqSubspaces")
-      .map(v => math.min(16, math.max(1, v))).getOrElse(8)
-  private[graft] def pqK: Int =
-    Dials.int("graft.pqCodes")
-      .map(v => math.min(256, math.max(2, v))).getOrElse(16)
-
   /** (sub, sv) generator: the M subvectors of `embedding`, dim/M floats
     * each, sliced by expression (no driver-side dim probe — the plan
     * works for any dim). */
-  private def pqSubvecsCol =
+  private def pqSubvecsCol(implicit knobs: Knobs) =
     posexplode(expr(
-      s"""transform(sequence(0, ${pqM - 1}),
-            m -> slice(embedding, m * (size(embedding) div $pqM) + 1,
-                       size(embedding) div $pqM))"""))
+      s"""transform(sequence(0, ${knobs.pqM - 1}),
+            m -> slice(embedding, m * (size(embedding) div ${knobs.pqM}) + 1,
+                       size(embedding) div ${knobs.pqM}))"""))
 
   /** For every row of `e` (any cols + `sub` + `sv`), the nearest
     * codebook centroid OF THAT SUBSPACE by squared L2 — the zero-shuffle
@@ -1315,16 +1181,17 @@ object Pipeline {
 
   /** Fit the M per-subspace codebooks in ONE chain (`sub` is a column,
     * not a loop): the same deterministic recipe as [[buildKmeansCells]]
-    * — md5-ordered seed sample, [[kmeansIters]] rounds of zero-shuffle
+    * — md5-ordered seed sample, `knobs.kmeansIters` rounds of zero-shuffle
     * broadcast argmin + decimal-exact mean recompute — per subspace,
     * under L2. Codes are densely renumbered 0..k'-1 per subspace (stable
     * ROW_NUMBER over the surviving centroids' seed ids) so a code fits
     * one byte regardless of which seeds survived. `src` carries
     * (vec_id, embedding) — the raw corpus for p41, the per-vector cell
     * RESIDUALS for p45. */
-  private def buildPqCodebookFrom(s: SparkSession, src: DataFrame): DataFrame = {
+  private def buildPqCodebookFrom(s: SparkSession, src: DataFrame)(
+      implicit knobs: Knobs): DataFrame = {
     val n = src.count()
-    val m = kmeansFitSample(n, pqK)
+    val m = kmeansFitSample(n, knobs.pqK)
     val fitRows =
       if (m >= n) src.select(col("vec_id"), col("embedding"))
       else src.select(col("vec_id"), col("embedding"))
@@ -1344,10 +1211,10 @@ object Pipeline {
         .repartition(s.sparkContext.defaultParallelism), "pqfit")
     var cent = src.select(col("vec_id"), col("embedding"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(pqK)
+      .limit(knobs.pqK)
       .select(col("vec_id").as("cell"), pqSubvecsCol.as(Seq("sub", "cv")))
       .select(col("sub"), col("cell"), col("cv"))
-    for (_ <- 1 to kmeansIters) {
+    for (_ <- 1 to knobs.kmeansIters) {
       val assigned = nearestPqCell(fit, cent)
       // eager Materialize per round: measured FASTER than lazy chaining
       // here (unlike kmeansRounds) — the M-subspace state makes each
@@ -1375,7 +1242,7 @@ object Pipeline {
     * embeddings). Tie-break is on `code`, which is monotone in the seed
     * id per subspace, so it equals the fit's own seed-id tie-break. */
   private def buildPqCodesFrom(s: SparkSession, cb: DataFrame,
-      src: DataFrame): DataFrame = {
+      src: DataFrame)(implicit knobs: Knobs): DataFrame = {
     val sv = src.select(col("vec_id"), pqSubvecsCol.as(Seq("sub", "sv")))
       .repartition(s.sparkContext.defaultParallelism)
     nearestPqCell(sv, cb.select(col("sub"), col("code").as("cell"), col("cv")))
@@ -1388,7 +1255,7 @@ object Pipeline {
     * DOUBLE (exact for float32 inputs) and rounds back to FLOAT — both
     * correctly-rounded IEEE ops, so the oracle reproduces the residual
     * bit-for-bit. NEVER staged: the residual table is corpus-sized. */
-  private def residuals(s: SparkSession, dir: String): DataFrame = {
+  private def residuals(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val assigned = nearestCellsStaged(s, dir,
       emb(s, dir).select(col("vec_id"), col("embedding")), 1)
       .filter(col("crank") === 1)
@@ -1399,21 +1266,21 @@ object Pipeline {
         .as("embedding"))
   }
 
-  private def pqParamsHash(extra: String = ""): String = {
-    val params = s"$pqM-$pqK-$kmeansIters-$kmeansFitPoints$extra"
+  private def pqParamsHash(extra: String = "")(implicit knobs: Knobs): String = {
+    val params = s"${knobs.pqM}-${knobs.pqK}-${knobs.kmeansIters}-${knobs.kmeansFitPoints}$extra"
     java.security.MessageDigest.getInstance("MD5")
       .digest(params.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
   }
   /** The residual stages' staging key also covers the IVF index knobs:
     * residuals are defined AGAINST the fitted cells. */
-  private def pqResidualParams: String =
-    s"-${sys.props.getOrElse("graft.ivfCells", "auto")}" +
-      s"-${sys.props.getOrElse("graft.ivfSuperCells", "auto")}"
+  private def pqResidualParams(implicit knobs: Knobs): String =
+    s"-${auto(knobs.ivfCells)}" +
+      s"-${auto(knobs.ivfSuperCells)}"
 
   /** The fitted PQ codebook (sub, code, cell, cv), staged once per input
     * dir like CellStage — knobs baked into the staging key. */
   private[graft] object PqStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, s"pq${pqParamsHash()}")(
         buildPqCodebookFrom(s, emb(s, dir).select(col("vec_id"), col("embedding"))))
   }
@@ -1421,7 +1288,7 @@ object Pipeline {
   /** The encoded corpus (vec_id, sub, code), staged once — the
     * compressed vectors every ADC consumer reads. */
   private[graft] object PqCodesStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, s"pv${pqParamsHash()}")(
         buildPqCodesFrom(s, PqStage.load(s, dir),
           emb(s, dir).select(col("vec_id"), col("embedding"))))
@@ -1433,7 +1300,7 @@ object Pipeline {
     * so the same M×k' budget quantizes them much more faithfully — the
     * classical IVF-PQ design (Jegou et al. 2011, §IV). */
   private[graft] object PqResidualStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, s"rq${pqParamsHash(pqResidualParams)}")(
         // materialize the residual frame ONCE for the fit (r17): the
         // codebook build consumes its source three times (count for the
@@ -1447,7 +1314,7 @@ object Pipeline {
 
   /** The residual-encoded corpus (vec_id, sub, code), staged once. */
   private[graft] object PqResidualCodesStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, s"rv${pqParamsHash(pqResidualParams)}")(
         buildPqCodesFrom(s, PqResidualStage.load(s, dir), residuals(s, dir)))
   }
@@ -1461,7 +1328,7 @@ object Pipeline {
     * comparator, same tie-break on code), so in-stream codes equal the
     * staged codes for the same vector — the parity spec proves it. */
   private[graft] def streamSemanticPrep(s: SparkSession, dir: String,
-      docs: DataFrame): DataFrame = {
+      docs: DataFrame)(implicit knobs: Knobs): DataFrame = {
     val cells = CellStage.load(s, dir)
     val cb = PqStage.load(s, dir)
     val idx = cells.groupBy()
@@ -1471,7 +1338,7 @@ object Pipeline {
     val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
       .agg(collect_list(struct(col("sub").cast("int").as("sub"),
         col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
-    val m = pqM
+    val m = knobs.pqM
     val dsub = s"(size(embedding) div $m)"
     // fused kernels (r18): the stream path was the last interpreted
     // array_sort-comparator assignment site — same arithmetic/ordering
@@ -1495,12 +1362,12 @@ object Pipeline {
     * the same stream-static broadcast shape as [[streamSemanticPrep]]).
     * The streaming index-staleness monitor is built on this. */
   private[graft] def withPqSse(s: SparkSession, dir: String,
-      df: DataFrame): DataFrame = {
+      df: DataFrame)(implicit knobs: Knobs): DataFrame = {
     val cb = PqStage.load(s, dir)
     val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
       .agg(collect_list(struct(col("sub").cast("int").as("sub"),
         col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
-    val m = pqM
+    val m = knobs.pqM
     val dsub = s"(size(embedding) div $m)"
     // fused argmin kernel (r18) — arithmetic and ordering pinned in
     // [[graft.functions.NearestSubCell]]
@@ -1520,7 +1387,7 @@ object Pipeline {
     * streaming drift monitor compares arriving vectors against. One batch
     * aggregate over the corpus the index was fitted on; deterministic
     * (integer-scaled per-row errors, exact decimal mean). */
-  private[graft] def pqSseBaseline(s: SparkSession, dir: String): Double = {
+  private[graft] def pqSseBaseline(s: SparkSession, dir: String)(implicit knobs: Knobs): Double = {
     val row = withPqSse(s, dir, emb(s, dir).select(col("embedding")))
       .agg(avg(col("sse"))).collect()(0)
     if (row.isNullAt(0)) 0.0 else row.getDouble(0) // empty corpus -> 0
@@ -1532,7 +1399,7 @@ object Pipeline {
     * these, approximate cosine between two CODE vectors needs no float
     * vectors at all — the streaming dedup's whole state stays M bytes
     * per row. */
-  private[graft] def pqSdcTables(s: SparkSession, dir: String)
+  private[graft] def pqSdcTables(s: SparkSession, dir: String)(implicit knobs: Knobs)
       : (Int, Map[(Int, Int, Int), Double], Map[(Int, Int), Double]) = {
     val rows = PqStage.load(s, dir)
       .select(col("sub"), col("code"), col("cv")).collect()
@@ -1546,7 +1413,7 @@ object Pipeline {
     val dots = for (((sa, ca), va) <- vecs; ((sb, cbc), vb) <- vecs if sa == sb)
       yield ((sa, ca, cbc), dot(va, vb))
     val norms = vecs.map { case ((sub, code), v) => ((sub, code), dot(v, v)) }
-    (pqM, dots.toMap, norms)
+    (knobs.pqM, dots.toMap, norms)
   }
 
   /** Residual IVF-PQ ADC scoring (p46/p47): reconstruct x̂ = c + r̂
@@ -1565,12 +1432,12 @@ object Pipeline {
     * renumbered 0..k'_sub−1 per subspace by construction, so position
     * IS the code — an ADC consumer scores a candidate with M array
     * lookups instead of an M-fanout join. */
-  private def residualAdcScored(s: SparkSession, dir: String): DataFrame = {
+  private def residualAdcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val e = emb(s, dir)
     val n = embCount(s, dir)
     val nprobe = ivfNprobe(ivfK(n))
     val cells = CellStage.load(s, dir)
-    val m = pqM
+    val m = knobs.pqM
     // the query side honors the eval sample (the candidate/index side
     // never does — membership is a corpus property); qr/qn stay full
     // and are pruned by their joins on qid
@@ -1625,13 +1492,6 @@ object Pipeline {
       .select(col("qid"), col("cid"), col("ascore"))
   }
 
-  /** Refine shortlist width for p43 (ADC top-C, then exact re-rank):
-    * `-Dgraft.pqRerank`, clamped [5, 500], default 25 — 5x the output
-    * top-k, the FAISS refine convention. */
-  private[graft] def pqRerank: Int =
-    Dials.int("graft.pqRerank")
-      .map(v => math.min(500, math.max(5, v))).getOrElse(25)
-
   /** The shared ADC scoring plan (p42 ranks it; p43 shortlists + exact
     * re-ranks): candidates from the two-level descent at p16's probe
     * width, scored against the PQ codes via integer-scaled per-query
@@ -1639,7 +1499,7 @@ object Pipeline {
     * integers — embeddings appear only in the broadcast-side LUT build
     * and are projected away before any exchange. Output: (qid, cid,
     * ascore). */
-  private def adcScored(s: SparkSession, dir: String): DataFrame = {
+  private def adcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val e = emb(s, dir)
     val n = embCount(s, dir)
     val nprobe = ivfNprobe(ivfK(n))
@@ -1694,12 +1554,13 @@ object Pipeline {
   /** Shortlist top-C by ADC score, refine with exact cosine over just
     * those C full vectors — p43/p47's shared shape, same factoring
     * rationale as [[adcTop5]]. */
-  private def adcRefined(s: SparkSession, dir: String, scored: DataFrame): DataFrame = {
+  private def adcRefined(s: SparkSession, dir: String, scored: DataFrame)(
+      implicit knobs: Knobs): DataFrame = {
     val e = emb(s, dir)
     val rnA = Window.partitionBy(col("qid")).orderBy(col("ascore").desc, col("cid"))
     val short = scored
       .withColumn("arank", row_number().over(rnA))
-      .filter(col("arank") <= pqRerank)
+      .filter(col("arank") <= knobs.pqRerank)
       .select(col("qid"), col("cid"))
     val qv = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val cv = e.select(col("vec_id").as("cid"), col("embedding").as("cv2"))
@@ -1771,7 +1632,7 @@ object Pipeline {
     * scored) — the number KMeansCellsSpec asserts stays O(sqrt(k))
     * instead of k. */
   private[graft] def twoLevelScoredCounts(s: SparkSession, dir: String,
-      kTop: Int): DataFrame = {
+      kTop: Int)(implicit knobs: Knobs): DataFrame = {
     val cells = CellStage.load(s, dir)
     val (sc, cm) = SuperStage.load(s, dir)
     val kAct = CellStage.count(s, dir)
@@ -1789,7 +1650,7 @@ object Pipeline {
     * the fine probe width the consumer needs; the coarse width follows
     * via [[superProbe]]. */
   private def nearestCellsStaged(s: SparkSession, dir: String, e: DataFrame,
-      kTop: Int): DataFrame = {
+      kTop: Int)(implicit knobs: Knobs): DataFrame = {
     val cells = CellStage.load(s, dir)
     val (sc, cm) = SuperStage.load(s, dir)
     val kAct = CellStage.count(s, dir)
@@ -1824,27 +1685,23 @@ object Pipeline {
     * of 30k cells ≈ 6% of the corpus. `-Dgraft.ivfNprobe` (JVM-start,
     * mirrored into the oracle) pins it; the measured recall curve is in
     * SCALE.md. */
-  private[graft] def ivfNprobe(k: Int): Int =
-    Dials.int("graft.ivfNprobe").map(v => math.max(1, v))
-      .getOrElse(math.max(3, k / 16))
+  private[graft] def ivfNprobe(k: Int)(implicit knobs: Knobs): Int =
+    knobs.ivfNprobe.getOrElse(math.max(3, k / 16))
 
   /** The same probe width as DuckDB SQL over the kmeans `kk` CTE. */
-  private def duckNprobe: String =
-    Dials.int("graft.ivfNprobe")
-      .map(v => math.max(1, v).toString)
-      .getOrElse("greatest(3, kk.k // 16)")
+  private def duckNprobe(implicit knobs: Knobs): String =
+    knobs.ivfNprobe.map(_.toString).getOrElse("greatest(3, kk.k // 16)")
 
   /** The k expression as DuckDB SQL — a literal when `-Dgraft.ivfCells`
     * pins it, else the same max(16, ceil(sqrt(n))) the Spark side uses. */
-  private def duckKmeansK: String =
-    Dials.int("graft.ivfCells")
-      .map(v => math.max(1, v).toString).getOrElse(
+  private def duckKmeansK(implicit knobs: Knobs): String =
+    knobs.ivfCells.map(_.toString).getOrElse(
       "greatest(16, CAST(ceil(sqrt(CAST((SELECT COUNT(*) FROM embeddings) AS DOUBLE))) AS INTEGER))")
 
   /** The fitted k-means index as a DuckDB CTE chain mirroring
     * [[buildKmeansCells]] round for round; the final CTE is `cells`
     * (cell, cv) — a drop-in for the old per-label centroid CTEs. */
-  private def duckKmeansCells: String = {
+  private def duckKmeansCells(implicit knobs: Knobs): String = {
     val seed =
       s"""kk AS (SELECT $duckKmeansK AS k),
          |  seedr AS (
@@ -1854,15 +1711,15 @@ object Pipeline {
          |  cent0 AS (SELECT cell, cv FROM seedr, kk WHERE rn <= kk.k),
          |  knn AS (SELECT COUNT(*) AS n FROM embeddings),
          |  kmm AS (SELECT least(knn.n,
-         |            greatest(CAST($kmeansFitPoints AS BIGINT) * kk.k,
-         |                     ${64L * kmeansFitPoints})) AS m
+         |            greatest(CAST(${knobs.kmeansFitPoints} AS BIGINT) * kk.k,
+         |                     ${64L * knobs.kmeansFitPoints})) AS m
          |          FROM knn, kk),
          |  kfit AS (
          |    SELECT vec_id, embedding FROM embeddings, knn, kmm
          |    WHERE kmm.m >= knn.n
          |       OR ${duckMd560("CAST(vec_id AS VARCHAR)")}
          |            < ((CAST(1 AS BIGINT) << 60) // greatest(knn.n, 1)) * kmm.m)""".stripMargin
-    val iters = (1 to kmeansIters).map { it =>
+    val iters = (1 to knobs.kmeansIters).map { it =>
       s"""  kscored$it AS (
          |    SELECT e.vec_id, e.embedding, c.cell, ${duckCosine("e.embedding", "c.cv")} AS csim
          |    FROM kfit e CROSS JOIN cent${it - 1} c),
@@ -1882,14 +1739,13 @@ object Pipeline {
       // MATERIALIZED: the fitted index is referenced by the super layer
       // and every consumer CTE; DuckDB would otherwise inline (re-run)
       // the whole training chain per reference — measured 66x slower
-      s",\n  cells AS MATERIALIZED (SELECT cell, cv FROM cent$kmeansIters)"
+      s",\n  cells AS MATERIALIZED (SELECT cell, cv FROM cent${knobs.kmeansIters})"
   }
 
   /** The super-cell count as DuckDB SQL over the `ck` CTE (a literal when
     * `-Dgraft.ivfSuperCells` pins it) — mirrors [[superKFor]]. */
-  private def duckSuperKs: String =
-    Dials.int("graft.ivfSuperCells")
-      .map(v => math.max(1, v).toString)
+  private def duckSuperKs(implicit knobs: Knobs): String =
+    knobs.ivfSuperCells.map(_.toString)
       .getOrElse("greatest(2, CAST(ceil(sqrt(CAST(ck.k AS DOUBLE))) AS INTEGER))")
 
   /** The two-level index layer as DuckDB CTEs over `cells`, mirroring
@@ -1897,7 +1753,7 @@ object Pipeline {
     * assign/recompute rounds — the training points are the k centroids)
     * and [[buildCellMap]]. Final CTEs: `supercells` (scell, scv) and
     * `cellmap` (cell, scell). */
-  private def duckSuperLayer: String = {
+  private def duckSuperLayer(implicit knobs: Knobs): String = {
     val seed =
       s"""  ck AS (SELECT COUNT(*) AS k FROM cells),
          |  sks AS (SELECT $duckSuperKs AS ks FROM ck),
@@ -1906,7 +1762,7 @@ object Pipeline {
          |      ROW_NUMBER() OVER (ORDER BY md5(CAST(cell AS VARCHAR)), cell) AS rn
          |    FROM cells),
          |  scent0 AS (SELECT cell AS scell, cv AS scv FROM ssr, sks WHERE rn <= sks.ks)""".stripMargin
-    val iters = (1 to kmeansIters).map { it =>
+    val iters = (1 to knobs.kmeansIters).map { it =>
       s"""  sscored$it AS (
          |    SELECT e.cell, e.cv, c.scell, ${duckCosine("e.cv", "c.scv")} AS csim
          |    FROM cells e CROSS JOIN scent${it - 1} c),
@@ -1923,7 +1779,7 @@ object Pipeline {
          |  scent$it AS (SELECT scell, list(c ORDER BY pos) AS scv FROM scm$it GROUP BY scell)""".stripMargin
     }
     val map =
-      s"""  supercells AS MATERIALIZED (SELECT scell, scv FROM scent$kmeansIters),
+      s"""  supercells AS MATERIALIZED (SELECT scell, scv FROM scent${knobs.kmeansIters}),
          |  cellmap AS MATERIALIZED (
          |    SELECT cell, scell FROM (
          |      SELECT m.cell, s.scell,
@@ -1935,7 +1791,7 @@ object Pipeline {
 
   /** [[duckKmeansCells]] plus the two-level layer — the index prefix for
     * every two-level consumer's oracle (p16/p32/p34/p35). */
-  private def duckSuperCells: String =
+  private def duckSuperCells(implicit knobs: Knobs): String =
     duckKmeansCells + ",\n" + duckSuperLayer
 
   /** The per-vector two-level candidate ranking as DuckDB CTEs, mirroring
@@ -1981,19 +1837,13 @@ object Pipeline {
     * detail, the planes themselves are the contract, so the oracle can
     * hash-match instead of rows-only. */
   private val lshDim = 64
-  private val lshMaxPlanes = 24
+  private[graft] val lshMaxPlanes = 24
   private val lshTargetBucket = 64L
   /** Independent hash tables for the banded OR-construction (p37): one
     * plane family per table, seeded 42+t so table 0 is bit-identical to
     * the single-table p06 family (its contract is frozen). The pool is
-    * rendered at its max size; `-Dgraft.lshTables` picks L within it —
-    * a def (like ivfNprobe) so the Spark plan and the oracle SQL, both
-    * built inside one `defs` call, always observe the same value. */
+    * rendered at its max size; `knobs.lshTables` picks L within it. */
   private[graft] val lshMaxTables = 8
-  private[graft] def lshNumTables: Int =
-    Dials.int("graft.lshTables")
-      .map(v => math.min(lshMaxTables, math.max(1, v)))
-      .getOrElse(4)
   private val lshPlaneTables: Array[Array[Array[Float]]] =
     Array.tabulate(lshMaxTables) { t =>
       val rnd = new scala.util.Random(42 + t)
@@ -2015,13 +1865,8 @@ object Pipeline {
     * 2^p < ceil-div(n, target)) so the JVM and the oracle SQL can never
     * disagree the way float log2 around a power-of-two boundary could.
     * `-Dgraft.lshPlanes` pins it. */
-  private[graft] def lshNumPlanes(n: Long): Int =
-    Dials.int("graft.lshPlanes")
-      // clamp to the rendered plane pool: the oracle gates exactly
-      // lshMaxPlanes literal terms, so a larger override must not send
-      // the Spark side past the array while the SQL silently ignores it
-      .map(v => math.min(lshMaxPlanes, math.max(1, v)))
-      .getOrElse {
+  private[graft] def lshNumPlanes(n: Long)(implicit knobs: Knobs): Int =
+    knobs.lshPlanes.getOrElse {
         val m = (n + lshTargetBucket - 1) / lshTargetBucket
         math.max(2, (0 until lshMaxPlanes).count(p => (1L << p) < m))
       }
@@ -2046,15 +1891,13 @@ object Pipeline {
     * posexploded column pair — the banding shape p03 uses, with
     * hyperplane buckets as the band keys. */
   private def lshMultiBuckets(np: Int,
-      v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    posexplode(array((0 until lshNumTables).map(t => lshBucketColT(t, np, v)): _*))
+      v: org.apache.spark.sql.Column)(implicit knobs: Knobs): org.apache.spark.sql.Column =
+    posexplode(array((0 until knobs.lshTables).map(t => lshBucketColT(t, np, v)): _*))
 
   /** The same plane count as DuckDB SQL (a literal under -Dgraft.lshPlanes,
     * clamped identically to the Spark side). */
-  private def duckLshNp: String =
-    Dials.int("graft.lshPlanes")
-      .map(v => math.min(lshMaxPlanes, math.max(1, v)).toString)
-      .getOrElse(
+  private def duckLshNp(implicit knobs: Knobs): String =
+    knobs.lshPlanes.map(_.toString).getOrElse(
       s"""greatest(2, CAST((SELECT COUNT(*) FROM range(0, $lshMaxPlanes) r(p)
          |  WHERE (CAST(1 AS BIGINT) << CAST(p AS INTEGER))
          |    < ((SELECT COUNT(*) FROM embeddings) + ${lshTargetBucket - 1}) // $lshTargetBucket) AS INTEGER))""".stripMargin)
@@ -2083,14 +1926,14 @@ object Pipeline {
     * rule with k', same md5-ordered seeds, same decimal-exact means,
     * argmin ties on the seed id). Final CTE: `pqcb` (sub, cell, cv,
     * code) with codes densely renumbered per subspace. */
-  private def duckPqCodebookFrom(p: String, src: String): String = {
-    val m = pqM
+  private def duckPqCodebookFrom(p: String, src: String)(implicit knobs: Knobs): String = {
+    val m = knobs.pqM
     val seed =
       s"""${p}n AS (SELECT COUNT(*) AS n FROM $src),
          |  ${p}d AS (SELECT len(embedding) // $m AS ds FROM $src LIMIT 1),
          |  ${p}mm AS (SELECT least(${p}n.n,
-         |             greatest(CAST($kmeansFitPoints AS BIGINT) * $pqK,
-         |                      ${64L * kmeansFitPoints})) AS m FROM ${p}n),
+         |             greatest(CAST(${knobs.kmeansFitPoints} AS BIGINT) * ${knobs.pqK},
+         |                      ${64L * knobs.kmeansFitPoints})) AS m FROM ${p}n),
          |  ${p}fit AS (
          |    SELECT vec_id, embedding FROM $src, ${p}n, ${p}mm
          |    WHERE ${p}mm.m >= ${p}n.n
@@ -2107,8 +1950,8 @@ object Pipeline {
          |  ${p}cent0 AS (
          |    SELECT r.sub, vec_id AS cell,
          |      [embedding[i] FOR i IN range(r.sub * ${p}d.ds + 1, (r.sub + 1) * ${p}d.ds + 1)] AS cv
-         |    FROM ${p}seedr, ${p}d, range(0, $m) r(sub) WHERE rn <= $pqK)""".stripMargin
-    val iters = (1 to kmeansIters).map { it =>
+         |    FROM ${p}seedr, ${p}d, range(0, $m) r(sub) WHERE rn <= ${knobs.pqK})""".stripMargin
+    val iters = (1 to knobs.kmeansIters).map { it =>
       s"""  ${p}sc$it AS (
          |    SELECT f.vec_id, f.sub, f.sv, c.cell, ${duckL2Sq("f.sv", "c.cv")} AS d
          |    FROM ${p}sv f JOIN ${p}cent${it - 1} c ON f.sub = c.sub),
@@ -2128,20 +1971,20 @@ object Pipeline {
       s"""  ${p}cb AS MATERIALIZED (
          |    SELECT sub, cell, cv,
          |      CAST(ROW_NUMBER() OVER (PARTITION BY sub ORDER BY cell) - 1 AS INTEGER) AS code
-         |    FROM ${p}cent$kmeansIters)""".stripMargin
+         |    FROM ${p}cent${knobs.kmeansIters})""".stripMargin
     (seed +: iters :+ fin).mkString(",\n")
   }
 
-  private def duckPqCodebook: String = duckPqCodebookFrom("pq", "embeddings")
+  private def duckPqCodebook(implicit knobs: Knobs): String = duckPqCodebookFrom("pq", "embeddings")
 
   /** The corpus encode as DuckDB CTEs over `${p}cb`, mirroring
     * [[buildPqCodesFrom]] (argmin per (vec_id, sub), ties on code).
     * CTEs: `${p}all` (source subvectors) and `${p}codes`. */
-  private def duckPqCodesFrom(p: String, src: String): String =
+  private def duckPqCodesFrom(p: String, src: String)(implicit knobs: Knobs): String =
     s"""  ${p}all AS (
        |    SELECT vec_id, r.sub,
        |      [embedding[i] FOR i IN range(r.sub * ${p}d.ds + 1, (r.sub + 1) * ${p}d.ds + 1)] AS sv
-       |    FROM $src, ${p}d, range(0, $pqM) r(sub)),
+       |    FROM $src, ${p}d, range(0, ${knobs.pqM}) r(sub)),
        |  ${p}esc AS (
        |    SELECT a.vec_id, a.sub, c.code, ${duckL2Sq("a.sv", "c.cv")} AS d
        |    FROM ${p}all a JOIN ${p}cb c ON a.sub = c.sub),
@@ -2151,18 +1994,18 @@ object Pipeline {
        |        ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d ASC, code) AS rr
        |      FROM ${p}esc) WHERE rr = 1)""".stripMargin
 
-  private def duckPqCodes: String = duckPqCodesFrom("pq", "embeddings")
+  private def duckPqCodes(implicit knobs: Knobs): String = duckPqCodesFrom("pq", "embeddings")
 
   /** The residual ADC chain as DuckDB CTEs, mirroring
     * [[residualAdcScored]] — prefix `p` namespaces; `vp` is the
     * nprobe-descent prefix supplying probes. Requires upstream: `cells`,
     * `kk`, `${vp}cranked`, `rzcranked` (kTop=1 assignment), `rqd`,
     * `rqcb`, `rqcodes`. Final CTE: `${p}rk` (qid, cid, ascore, rank). */
-  private def duckResidualAdcCtes(p: String, vp: String): String =
+  private def duckResidualAdcCtes(p: String, vp: String)(implicit knobs: Knobs): String =
     s"""  ${p}qsv AS (
        |    SELECT vec_id, r.sub,
        |      [embedding[i] FOR i IN range(r.sub * rqd.ds + 1, (r.sub + 1) * rqd.ds + 1)] AS sv
-       |    FROM embeddings, rqd, range(0, $pqM) r(sub)),
+       |    FROM embeddings, rqd, range(0, ${knobs.pqM}) r(sub)),
        |  ${p}qc AS (
        |    SELECT t.vec_id AS qid, t.cell,
        |      CAST(floor(${duckDot("t.embedding", "c.cv")} * 100000000.0 + 0.5) AS BIGINT) AS qc_s
@@ -2236,7 +2079,7 @@ object Pipeline {
     * recombined from the exact integer sums. Prefix `p` namespaces the
     * CTEs; requires `pqcb`/`pqcodes`/`pqall` and `kk` upstream. Final
     * CTE: `${p}rk` (qid, cid, ascore, rank). */
-  private def duckAdcCtes(p: String, cr: String): String =
+  private def duckAdcCtes(p: String, cr: String)(implicit knobs: Knobs): String =
     s"""  ${p}assigned AS (SELECT vec_id AS cid, cell FROM ${cr}cranked WHERE crank = 1),
        |  ${p}probes AS (SELECT vec_id AS qid, cell FROM ${cr}cranked, kk
        |    WHERE crank <= $duckNprobe${duckEvalAnd("vec_id")}),
@@ -2287,29 +2130,14 @@ object Pipeline {
 
   /** The OR-construction's (t, bucket) table as a DuckDB CTE body: one
     * UNION ALL branch per plane table. */
-  private def duckLshMultiBuckets(vec: String): String =
-    (0 until lshNumTables).map { t =>
+  private def duckLshMultiBuckets(vec: String)(implicit knobs: Knobs): String =
+    (0 until knobs.lshTables).map { t =>
       s"""SELECT vec_id, $t AS t, ${duckLshBucketT(t, vec)} AS bucket
          |FROM embeddings, np""".stripMargin
     }.mkString("\nUNION ALL\n")
 
-  /** p63b band count: `-Dgraft.imageBands` ∈ {2, 4, 8} (must tile the
-    * two 32-bit fingerprint halves evenly); anything else → 4. Rendered
-    * into both engines so the recall contract stays matched. */
-  private[graft] def imageBands: Int =
-    Dials.int("graft.imageBands")
-      .filter(Set(2, 4, 8)).getOrElse(4)
-
-  /** p63b exact-hamming survivor threshold: `-Dgraft.imageHamming`,
-    * clamped [0, 16] (the 64-bit fingerprint's useful range). */
-  private[graft] def imageHamming: Int =
-    Dials.int("graft.imageHamming")
-      .map(v => math.min(16, math.max(0, v))).getOrElse(6)
-
-  /** The p63b plan with EXPLICIT dials — the QDef passes the parsed
-    * [[imageBands]]/[[imageHamming]] values; tests pass alternatives
-    * directly so dial coverage needs no global sys.props mutation
-    * (which would race against concurrently-building suites). */
+  /** The p63b plan with EXPLICIT dials — the QDef passes
+    * `knobs.imageBands`/`knobs.imageHamming`; tests pass alternatives. */
   private[graft] def imageNearDupPlan(s: SparkSession, dir: String,
       nb: Int, ham: Int): DataFrame = {
     val width = 64 / nb
@@ -2342,9 +2170,9 @@ object Pipeline {
   }
 
   /** The oracle's band-collision disjunction, generated from the SAME
-    * [[imageBands]] dial as the Spark plan's band structs. */
-  private def duckImageBandCollisions: String = {
-    val nb = imageBands; val width = 64 / nb
+    * `knobs.imageBands` dial as the Spark plan's band structs. */
+  private def duckImageBandCollisions(implicit knobs: Knobs): String = {
+    val nb = knobs.imageBands; val width = 64 / nb
     val mask = (1L << width) - 1; val perHalf = nb / 2
     (0 until nb).map { b =>
       val half = if (b < perHalf) "hi" else "lo"
@@ -2432,12 +2260,6 @@ object Pipeline {
   private[graft] val cdcGear: IndexedSeq[Long] =
     (0 until 256).map(c => md560Scala(s"gear_$c") % 1048576L)
 
-  /** p72 boundary mask width: `-Dgraft.cdcMaskBits`, clamped [4, 12]
-    * (expected chunk length 2^bits chars), default 7. */
-  private[graft] def cdcMaskBits: Int =
-    Dials.int("graft.cdcMaskBits")
-      .map(v => math.min(12, math.max(4, v))).getOrElse(7)
-
   /** The gear cut-position kernel, Spark dialect — references columns
     * `n` (length) and `gv` (the per-char gear values, precomputed in
     * ONE pass by [[cdcChunked]]: `substr(text, i, 1)` re-walks the
@@ -2445,8 +2267,8 @@ object Pipeline {
     * inside the position loop is O(len²·13) — splitting to a char
     * array once and reading `element_at(gv, i-j)` is O(len·13)).
     * Shared VERBATIM by batch p72 and the streaming `cdcChunkStream`. */
-  private[graft] def cdcCutsSql: String = {
-    val mod = 1L << cdcMaskBits
+  private[graft] def cdcCutsSql(implicit knobs: Knobs): String = {
+    val mod = 1L << knobs.cdcMaskBits
     val hsum = (0 until cdcWindow).map(j =>
       s"element_at(gv, i - $j) * ${1L << j}")
       .mkString(" + ")
@@ -2465,7 +2287,8 @@ object Pipeline {
 
   /** Applies the full Gear-CDC kernel: doc frame (incl. `text`) in,
     * exploded (original columns, chunk) out. */
-  private[graft] def cdcChunked(in: DataFrame, keep: Seq[String]): DataFrame =
+  private[graft] def cdcChunked(in: DataFrame, keep: Seq[String])(
+      implicit knobs: Knobs): DataFrame =
     in.withColumn("g", array(cdcGear.map(v => lit(v)): _*))
       .withColumn("n", length(col("text")))
       .withColumn("gv", expr(
@@ -2532,7 +2355,7 @@ object Pipeline {
     * pre-sanitize (the wire layer admits only `[a-z0-9_]+` tokens);
     * they are also deduplicated here. */
   private[graft] def bm25TopK(s: SparkSession, dir: String,
-      terms0: Seq[String], k: Int = 50): DataFrame =
+      terms0: Seq[String], k: Int = 50)(implicit knobs: Knobs): DataFrame =
     bm25Search(s, dir, terms0.map(Seq(_)), requireAll = false, k)
 
   /** The generalized form: each query unit is a PHRASE (word sequence;
@@ -2545,7 +2368,7 @@ object Pipeline {
     * The plan shape is identical to the term form: one corpus scan +
     * one broadcast one-row stats reduction + TakeOrderedAndProject. */
   private[graft] def bm25Search(s: SparkSession, dir: String,
-      phrases0: Seq[Seq[String]], requireAll: Boolean, k: Int): DataFrame = {
+      phrases0: Seq[Seq[String]], requireAll: Boolean, k: Int)(implicit knobs: Knobs): DataFrame = {
     val phrases = phrases0.filter(_.nonEmpty).distinct
     require(phrases.nonEmpty, "bm25Search: no query phrases")
     val base = spread(s, docs(s, dir).select(col("doc_id"), col("text")))
@@ -2634,27 +2457,12 @@ object Pipeline {
   // word filter guarantees the delimiters can never collide with symbol
   // text.
 
-  /** Chunk window size in whitespace tokens (p50/p50b):
-    * `-Dgraft.chunkTokens`, clamped [8, 4096], default 64. */
-  private[graft] def chunkTokens: Int =
-    Dials.int("graft.chunkTokens")
-      .map(v => math.min(4096, math.max(8, v))).getOrElse(64)
-
-  /** Chunk stride in tokens (p50/p50b): `-Dgraft.chunkStride`, clamped
-    * [1, chunkTokens] (stride past the window would skip tokens),
-    * default 48 — a 16-token overlap at the default window. */
-  private[graft] def chunkStride: Int =
-    // the clamp applies to the DEFAULT too: chunkTokens=16 with stride
-    // left at 48 would silently skip tokens 16..47 of every period
-    math.min(chunkTokens, Dials.int("graft.chunkStride")
-      .map(v => math.max(1, v)).getOrElse(48))
-
   /** The per-row chunk explode shared VERBATIM by p50/p50b and the
     * streaming chunk dedup (EventStreams.chunkDedupStream): carries the
     * input's other columns and adds (start, chunk_no, n_tok, fp); the
     * window TEXT dies here — only the md5 fingerprint leaves. */
-  private[graft] def chunkFingerprints(docs: DataFrame): DataFrame = {
-    val c = chunkTokens; val st = chunkStride
+  private[graft] def chunkFingerprints(docs: DataFrame)(implicit knobs: Knobs): DataFrame = {
+    val c = knobs.chunkTokens; val st = knobs.chunkStride
     docs.filter(col("text").isNotNull)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n", size(col("toks")))
@@ -2676,13 +2484,6 @@ object Pipeline {
       .select(expr("least(size(split(text, ' ')) div 16, 255)")
         .cast("int").as("bucket"))
 
-  /** BPE merge-learning depth: `-Dgraft.bpeMerges`, clamped [1, 12],
-    * default 6. Cross-engine contract: the oracle unrolls exactly this
-    * many count/argmax/merge rounds. */
-  private[graft] def bpeMerges: Int =
-    Dials.int("graft.bpeMerges")
-      .map(v => math.min(12, math.max(1, v))).getOrElse(6)
-
   // ---- unigram (SentencePiece-family) tokenizer segmentation: the
   // Viterbi half of Kudo 2018 — a frequency-scored piece lexicon and
   // per-word max-likelihood segmentation by dynamic programming. The
@@ -2692,10 +2493,6 @@ object Pipeline {
   // expression text is GENERATED once and rendered into both dialects.
   private[graft] val uniMaxWordLen = 12
   private[graft] val uniMaxPieceLen = 4
-  /** Piece-lexicon seed size: `-Dgraft.uniSeed`, clamped [50, 2000]. */
-  private[graft] def uniSeed: Int =
-    Dials.int("graft.uniSeed")
-      .map(v => math.min(2000, math.max(50, v))).getOrElse(200)
   /** Lookup-miss sentinel for DP candidates: more negative than any
     * reachable path sum (12 pieces × |score| ≤ ~12·ln(total)·1e8 ≪ 1e15)
     * yet safe from Long overflow across ≤ 12 additions. Rendered as a
@@ -2749,11 +2546,11 @@ object Pipeline {
 
   /** The piece lexicon: substrings of length 1..4 over the distinct
     * [a-z]+ word table (length ≤ 12), occurrence-weighted by word
-    * frequency; vocabulary = top [[uniSeed]] by (cnt DESC, piece ASC)
+    * frequency; vocabulary = top `knobs.uniSeed` by (cnt DESC, piece ASC)
     * plus ALL single-character pieces (coverage — every word position
     * is always reachable); score = sln(cnt) − sln(Σ cnt over the
     * vocabulary). Vocabulary-bounded at any corpus size. */
-  private[graft] def uniVocab(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def uniVocab(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val w = bpeWords(s, dir).filter(length(col("w")) <= uniMaxWordLen)
     val cnts = w.select(col("w"), col("freq"),
         explode(expr(
@@ -2761,7 +2558,7 @@ object Pipeline {
                 i -> transform(sequence(1, least($uniMaxPieceLen, length(w) - i + 1)),
                   l -> substring(w, i, l))))""")).as("p"))
       .groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
-    val top = cnts.orderBy(col("cnt").desc, col("p")).limit(uniSeed)
+    val top = cnts.orderBy(col("cnt").desc, col("p")).limit(knobs.uniSeed)
     val chars = cnts.filter(length(col("p")) === 1)
     val vocab0 = top.unionByName(chars).distinct()
     val tot = vocab0.agg(sum(col("cnt")).as("vt"))
@@ -2774,7 +2571,7 @@ object Pipeline {
     * candidate-grid explode + ONE broadcast vocab join pivoted to the
     * 42 cs_j_i score columns, then the generated DP columns — pure
     * per-row expressions, zero shuffles beyond the word aggregation. */
-  private[graft] def uniSegments(s: SparkSession, dir: String): DataFrame =
+  private[graft] def uniSegments(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
     uniSegmentsFrom(s, dir, uniVocab(s, dir))
 
   /** The same chain under a CALLER-SUPPLIED piece lexicon (p, score) —
@@ -2798,7 +2595,7 @@ object Pipeline {
     * DuckDB mirror ([[duckUniChain]], rendered from [[uniDpColumns]])
     * is untouched and the oracle gate proves the equivalence. */
   private[graft] def uniSegmentsFrom(s: SparkSession, dir: String,
-      vocab: DataFrame): DataFrame = {
+      vocab: DataFrame)(implicit knobs: Knobs): DataFrame = {
     val words = bpeWords(s, dir).filter(length(col("w")) <= uniMaxWordLen)
       .select(col("w"), col("freq"))
     val vmap = vocab.groupBy().agg(
@@ -2904,7 +2701,7 @@ object Pipeline {
         ${pfx}seg AS (SELECT w, freq, seg, ll FROM $lastDp)"""
   }
 
-  private[graft] def duckUniCtes: String = {
+  private[graft] def duckUniCtes(implicit knobs: Knobs): String = {
     s"""uwt AS (
           SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
           FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
@@ -2918,7 +2715,7 @@ object Pipeline {
           CROSS JOIN range(1, ${uniMaxPieceLen + 1}) l(l)
           WHERE i.i + l.l - 1 <= length(t.w)
           GROUP BY 1),
-        utop AS (SELECT p, cnt FROM uocc ORDER BY cnt DESC, p LIMIT $uniSeed),
+        utop AS (SELECT p, cnt FROM uocc ORDER BY cnt DESC, p LIMIT ${knobs.uniSeed}),
         uvoc0 AS (SELECT p, cnt FROM utop
           UNION SELECT p, cnt FROM uocc WHERE length(p) = 1),
         utot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS vt FROM uvoc0),
@@ -2948,7 +2745,7 @@ object Pipeline {
     * marks word-initial occurrences. Substrings of length 1..4 over
     * the distinct word table (length ≤ 12), frequency-weighted —
     * vocabulary-bounded at any corpus size. */
-  private[graft] def wpVocab(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def wpVocab(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val w = bpeWords(s, dir).filter(length(col("w")) <= uniMaxWordLen)
     val occ = w.select(col("freq"), explode(expr(
         s"""flatten(transform(sequence(1, length(w)),
@@ -3001,7 +2798,7 @@ object Pipeline {
     * broadcast vocab join (keyed (piece, init)) pivoted to presence
     * columns, then the generated walk — pure per-row expressions, zero
     * shuffles beyond the word aggregation. */
-  private[graft] def wpSegments(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def wpSegments(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val words = bpeWords(s, dir).filter(length(col("w")) <= uniMaxWordLen)
       .select(col("w"), col("freq"))
     val vocab = wpVocab(s, dir)
@@ -3118,8 +2915,8 @@ object Pipeline {
     // tag v2: the staged schema widened from (w, freq, seg) to carry
     // the exact Viterbi path score ll (p66c/p66d read it) — versioned
     // so a shared staging dir rebuilds instead of breaking consumers
-    def load(s: SparkSession, dir: String): DataFrame =
-      ShingleStage.stage(s, dir, s"us${uniSeed}v2") {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
+      ShingleStage.stage(s, dir, s"us${knobs.uniSeed}v2") {
         uniSegments(s, dir).repartition(1)
       }
   }
@@ -3130,8 +2927,8 @@ object Pipeline {
     * r12 bench's #1 line), and p66d unrolls round 3 from this copy.
     * Same versioned-tag/lifecycle discipline as [[UniSegStage]]. */
   private[graft] object UniSeg2Stage {
-    def load(s: SparkSession, dir: String): DataFrame =
-      ShingleStage.stage(s, dir, s"ue$uniSeed") {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
+      ShingleStage.stage(s, dir, s"ue${knobs.uniSeed}") {
         uniSegmentsFrom(s, dir, uniVocab2(s, dir)).repartition(1)
       }
   }
@@ -3156,11 +2953,11 @@ object Pipeline {
   }
 
   /** The round-2 lexicon: M-step over the staged round-1 segmentation. */
-  private[graft] def uniVocab2(s: SparkSession, dir: String): DataFrame =
+  private[graft] def uniVocab2(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
     uniNextVocab(uniVocab(s, dir), UniSegStage.load(s, dir))
 
   private[graft] object WpSegStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, s"ws$wpSeed") {
         wpSegments(s, dir).repartition(1)
       }
@@ -3179,7 +2976,7 @@ object Pipeline {
 
   /** The distinct lowercase-alpha word table with occurrence counts and
     * the per-symbol parenthesized encoding BPE iterates on. */
-  private[graft] def bpeWordsRaw(s: SparkSession, dir: String): DataFrame =
+  private[graft] def bpeWordsRaw(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
     spread(s, docs(s, dir).select(col("text")))
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(lowerAlphaOnly(col("w")))
@@ -3197,14 +2994,14 @@ object Pipeline {
     * outright). Values are identical by determinism; the oracles keep
     * deriving the same table from `documents` in SQL. */
   private[graft] object BpeWordsStage {
-    def load(s: SparkSession, dir: String): DataFrame =
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
       ShingleStage.stage(s, dir, "bw1") {
         bpeWordsRaw(s, dir).repartition(
           s.conf.get("spark.sql.shuffle.partitions").toInt, col("w"))
       }
   }
 
-  private[graft] def bpeWords(s: SparkSession, dir: String): DataFrame =
+  private[graft] def bpeWords(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
     BpeWordsStage.load(s, dir)
 
   /** Adjacent symbol pairs of the current encoding, frequency-weighted. */
@@ -3238,7 +3035,7 @@ object Pipeline {
       .drop("_l", "_r")
 
   /** The iterative merge fit with DRIVER-PACED rounds (r17): each
-    * round's argmax is a bounded 1-row collect (≤ [[bpeMerges]] ≤ 12
+    * round's argmax is a bounded 1-row collect (≤ `knobs.bpeMerges` ≤ 12
     * rows total per fit — the MergeInto 1-row-aggregate class, not a
     * data collect) applied to the next round's encoding as LITERAL
     * replace arguments (symbols are [a-z]+ by construction, so inlining
@@ -3254,10 +3051,10 @@ object Pipeline {
     * shape/schema). Merge choice and application are value-identical:
     * same count/tie-break argmax, same replace semantics, and an empty
     * round is a no-op exactly like [[bpeApply]]'s NULL branch. */
-  private[graft] def bpeFit(s: SparkSession, dir: String)
+  private[graft] def bpeFit(s: SparkSession, dir: String)(implicit knobs: Knobs)
       : (DataFrame, Seq[DataFrame]) = {
     var cur = bpeWords(s, dir)
-    val bests = (1 to bpeMerges).map { _ =>
+    val bests = (1 to knobs.bpeMerges).map { _ =>
       val bestDf = bpeBest(bpePairs(cur))
       bestDf.collect().headOption.foreach { row =>
         val l = row.getString(0)
@@ -3271,7 +3068,7 @@ object Pipeline {
   }
 
   /** The trained BPE word table's END-STATE (w, freq, enc after all
-    * [[bpeMerges]] rounds) staged once per corpus — p48b (trained
+    * `knobs.bpeMerges` rounds) staged once per corpus — p48b (trained
     * tokenizer applied) and p48c (fertility) both consume the same
     * fitted vocabulary, and the iterative fit is the expensive part;
     * re-deriving it per consumer triples the tokenizer family's
@@ -3279,9 +3076,9 @@ object Pipeline {
     * its inline chain — the per-round merge rows ARE its output. The
     * merge dial is baked into the staging key. */
   private[graft] object BpeStage {
-    def load(s: SparkSession, dir: String): DataFrame = {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
       val ph = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$bpeMerges".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
+        .digest(s"${knobs.bpeMerges}".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
       ShingleStage.stage(s, dir, s"bp$ph") {
         bpeFit(s, dir)._1.repartition(1)
       }
@@ -3296,7 +3093,7 @@ object Pipeline {
     * round (measured: a 6-round chain never finished); materialization
     * restores the once-per-CTE evaluation the Spark side gets from
     * ReuseExchange. */
-  private def duckBpeChain: String = {
+  private def duckBpeChain(implicit knobs: Knobs): String = {
     val sb = new StringBuilder
     sb.append("""bw0 AS MATERIALIZED (
           SELECT w, COUNT(*) AS freq,
@@ -3304,7 +3101,7 @@ object Pipeline {
           FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
           WHERE regexp_full_match(w, '[a-z]+')
           GROUP BY w)""")
-    (1 to bpeMerges).foreach { r =>
+    (1 to knobs.bpeMerges).foreach { r =>
       val prev = s"bw${r - 1}"
       sb.append(s""",
         bp$r AS MATERIALIZED (
@@ -3579,34 +3376,25 @@ object Pipeline {
     r.getLong(1).toDouble / r.getLong(0)
   }
 
-  /** DSIR feature-bucket count: `-Dgraft.dsirBuckets`, clamped
-    * [256, 1 << 20], default 8192. The hashed-feature space every
-    * importance weight lives in — bounded state regardless of corpus
-    * size (Xie et al. 2023 use 10k hash buckets). */
-  private[graft] def dsirBuckets: Int =
-    math.min(1 << 20, math.max(256,
-      Dials.int("graft.dsirBuckets")
-        .getOrElse(8192)))
-
   /** Hashed unigram+bigram features per document: (doc_id, lang, b) with
-    * b = md560(feature) mod [[dsirBuckets]] — the DSIR representation.
+    * b = md560(feature) mod `knobs.dsirBuckets` — the DSIR representation.
     * Feature text dies at the hash; downstream moves 8-byte ints. */
-  private def dsirFeatures(s: SparkSession, dir: String): DataFrame = {
+  private def dsirFeatures(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val uni = docs(s, dir)
       .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
-      .select(col("doc_id"), col("lang"), (md560(col("w")) % dsirBuckets).as("b"))
+      .select(col("doc_id"), col("lang"), (md560(col("w")) % knobs.dsirBuckets).as("b"))
     val bi = docBigrams(s, dir)
       .select(col("doc_id"), col("lang"),
-        (md560(concat(col("w1"), lit(" "), col("w2"))) % dsirBuckets).as("b"))
+        (md560(concat(col("w1"), lit(" "), col("w2"))) % knobs.dsirBuckets).as("b"))
     uni.unionAll(bi)
   }
 
   /** The DuckDB mirror of [[dsirFeatures]] (CTEs `tk`, `ft`; needs `bg`). */
-  private def duckDsirFeatures: String =
+  private def duckDsirFeatures(implicit knobs: Knobs): String =
     s"""tk AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents),
-      ft AS (SELECT doc_id, lang, (${duckMd560("w")}) % $dsirBuckets AS b FROM tk
+      ft AS (SELECT doc_id, lang, (${duckMd560("w")}) % ${knobs.dsirBuckets} AS b FROM tk
         UNION ALL
-        SELECT doc_id, lang, (${duckMd560("w1 || ' ' || w2")}) % $dsirBuckets AS b FROM bg)"""
+        SELECT doc_id, lang, (${duckMd560("w1 || ' ' || w2")}) % ${knobs.dsirBuckets} AS b FROM bg)"""
 
   // ---- trained quality classifier (p55/p55b): sparse logistic
   // regression over hashed n-gram features, the GPT-3/PaLM-style
@@ -3634,8 +3422,9 @@ object Pipeline {
 
   /** Per-(doc, bucket) integer-scaled tf features + the intercept
     * bucket (-1, tf = 10⁶): (doc_id, y, b, c). Bucket space is
-    * [[dsirBuckets]]; y = "is reference corpus" (the English slice). */
-  private[queries] def lrFeatures(s: SparkSession, dir: String): DataFrame = {
+    * `knobs.dsirBuckets`; y = "is reference corpus" (the English slice). */
+  private[queries] def lrFeatures(s: SparkSession, dir: String)(
+      implicit knobs: Knobs): DataFrame = {
     val raw = dsirFeatures(s, dir)
     val fdl = raw.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val tf = raw.groupBy(col("doc_id"), col("lang"), col("b"))
@@ -3665,12 +3454,12 @@ object Pipeline {
     * the DIAL, never the corpus, like the PQ SDC table) and shipped
     * back as a literal lookup map. Schema: (b, ws). */
   private[graft] object LrStage {
-    def load(s: SparkSession, dir: String): DataFrame = {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
       // the fitted weights depend on the bucket dial (and the fixed
       // schedule): bake it into the staging key so two runs sharing one
       // staging root with different dsirBuckets never read each other's
       // model (the CellStage/PqStage discipline)
-      val params = s"$dsirBuckets-$lrIters"
+      val params = s"${knobs.dsirBuckets}-$lrIters"
       val ph = java.security.MessageDigest.getInstance("MD5")
         .digest(params.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
       ShingleStage.stage(s, dir, s"lr$ph") {
@@ -3702,7 +3491,7 @@ object Pipeline {
       *     explode + map-side-combined bucket sum in the SAME job, so
       *     nothing corpus-sized is ever broadcast or re-shuffled. */
     private[graft] def fitWeights(s: SparkSession, dir: String,
-        forceDistributed: Boolean = false): Map[Long, Long] = {
+        forceDistributed: Boolean = false)(implicit knobs: Knobs): Map[Long, Long] = {
       // persist WITHOUT pre-partitioning (r17): the doc_id repartition
       // only pays off on the DISTRIBUTED path, where 12 rounds of
       // groupBy(doc_id) reuse the cached partitioning; the driver path
@@ -3716,8 +3505,7 @@ object Pipeline {
       try {
         val nDocs = docsCount(s, dir)
         val nRows = ftc.count()
-        val cap = Dials.long("graft.lrDriverRows")
-          .getOrElse(2000000L)
+        val cap = knobs.lrDriverRows
         var wm = Map.empty[Long, Long]
         if (!forceDistributed && nRows <= cap) {
           val docsF = ftc.select(col("doc_id"), col("y"), col("b"), col("c"))
@@ -3779,7 +3567,8 @@ object Pipeline {
     * (ct = cr = 0 in the smoothed formula — a bucket the fitted corpus
     * never produced). Bucket-bounded (≤ dsirBuckets rows), the
     * lmScoreMaps discipline. */
-  private[graft] def dsirWeightMaps(s: SparkSession, dir: String): (Map[Long, Long], Long) = {
+  private[graft] def dsirWeightMaps(s: SparkSession, dir: String)(
+      implicit knobs: Knobs): (Map[Long, Long], Long) = {
     val ft = dsirFeatures(s, dir)
     val ct = ft.filter(col("lang") === "en")
       .groupBy(col("b")).agg(count(lit(1)).as("tc"))
@@ -3790,13 +3579,13 @@ object Pipeline {
     val lw = cr.join(broadcast(ct), Seq("b"), "left")
       .crossJoin(broadcast(st))
       .withColumn("lwt", expr(
-        sln("coalesce(tc, 0) + 1") + s" - ${sln(s"nt + $dsirBuckets")}" +
-          s" - ${sln("rc + 1")} + ${sln(s"nr + $dsirBuckets")}"))
+        sln("coalesce(tc, 0) + 1") + s" - ${sln(s"nt + ${knobs.dsirBuckets}")}" +
+          s" - ${sln("rc + 1")} + ${sln(s"nr + ${knobs.dsirBuckets}")}"))
     val stRow = st.collect()(0)
     val (nt, nr) = (stRow.getLong(0), stRow.getLong(1))
     def slnL(x: Long): Long =
       math.floor(math.log(x.toDouble) * 100000000.0 + 0.5).toLong
-    val default = slnL(nr + dsirBuckets) - slnL(nt + dsirBuckets)
+    val default = slnL(nr + knobs.dsirBuckets) - slnL(nt + knobs.dsirBuckets)
     (lw.select(col("b"), col("lwt")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap, default)
   }
@@ -3804,7 +3593,7 @@ object Pipeline {
   /** Per-document classifier scores (doc_id, y, score_r) against the
     * STAGED weights — p55's scoring front, shared with the
     * Pareto-threshold sampler (p61). */
-  private def lrDocScores(s: SparkSession, dir: String): DataFrame = {
+  private def lrDocScores(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val w = LrStage.load(s, dir)
     lrFeatures(s, dir).join(broadcast(w), Seq("b"))
       .groupBy(col("doc_id"), col("y"))
@@ -3856,13 +3645,18 @@ object Pipeline {
     sb.toString
   }
 
-  /** A `def`, not a `val`: the oracle strings interpolate the index knobs
-    * (graft.ivfCells / ivfNprobe / kmeansIters / lshPlanes / ...) when the
-    * Seq is BUILT, while the Spark closures read the same sys.props when
-    * they RUN. Rebuilding the Seq per access keeps the two reads at the
-    * same instant, so a knob set programmatically after Pipeline
-    * class-init can never diverge the Spark plan from the oracle SQL. */
-  def defs: Seq[QDef] = Seq(
+  /** Entry `name` of the inventory over `knobs`, for entries built on
+    * another entry's result. */
+  private def entry(name: String)(implicit knobs: Knobs): QDef =
+    (if (knobs == Knobs.jvm) defs else defsFor).find(_.name == name).get
+
+  /** The inventory over the knobs the JVM started with, built once. */
+  lazy val defs: Seq[QDef] = defsFor(Knobs.jvm)
+
+  /** The inventory over `knobs`: every Spark plan, oracle string and
+    * staging key in it reads this one value, so the two engines always
+    * observe the same dials. */
+  def defsFor(implicit knobs: Knobs): Seq[QDef] = Seq(
 
     // ---- exact dedup: hash-groupBy, keep lowest doc_id. The group key
     // is the 128-bit md5 fingerprint, not the document text: at 100 TB
@@ -4429,7 +4223,7 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
     // same-band buckets, and only (id, hash) integers ever shuffle.
     // Oracle: the n² self-join with the SAME band-collision semantics. --
     QDef("p63b_image_neardup",
-      (s, dir) => imageNearDupPlan(s, dir, imageBands, imageHamming),
+      (s, dir) => imageNearDupPlan(s, dir, knobs.imageBands, knobs.imageHamming),
       Some(s"""WITH hx AS (
           SELECT doc_id, hex(encode(text)) AS h,
             COALESCE(octet_length(encode(text)), 0) AS nb
@@ -4461,7 +4255,7 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
             AS INTEGER) AS hamming
         FROM fp a JOIN fp b ON a.doc_id < b.doc_id
         WHERE (${duckImageBandCollisions})
-          AND bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= $imageHamming
+          AND bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= ${knobs.imageHamming}
         ORDER BY a_id, b_id""")),
 
     // ---- corpus filtering (C4-style): language whitelist + length band
@@ -4679,17 +4473,17 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         docs(s, dir)
           .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"))
-          .withColumn("bucket", (col("doc_id") % packBuckets).cast("int"))
+          .withColumn("bucket", (col("doc_id") % knobs.packBuckets).cast("int"))
           .withColumn("cum", sum(col("n_tokens")).over(w))
           .withColumn("pack_id",
             floor((col("cum") - col("n_tokens")) / lit(512)).cast("long"))
           .select(col("doc_id"), col("bucket"), col("n_tokens"), col("pack_id"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""SELECT doc_id, CAST(doc_id % $packBuckets AS INTEGER) AS bucket,
+      Some(s"""SELECT doc_id, CAST(doc_id % ${knobs.packBuckets} AS INTEGER) AS bucket,
           CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
           CAST(FLOOR((SUM(len(string_split(text, ' ')))
-              OVER (PARTITION BY doc_id % $packBuckets ORDER BY doc_id
+              OVER (PARTITION BY doc_id % ${knobs.packBuckets} ORDER BY doc_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
             - len(string_split(text, ' '))) / 512) AS BIGINT) AS pack_id
         FROM documents ORDER BY doc_id""")),
@@ -4717,7 +4511,7 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
         val w = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         pieces
-          .withColumn("bucket", (col("doc_id") % packBuckets).cast("int"))
+          .withColumn("bucket", (col("doc_id") % knobs.packBuckets).cast("int"))
           .withColumn("cum", sum(col("n_pieces")).over(w))
           .withColumn("pack_id",
             floor((col("cum") - col("n_pieces")) / lit(512)).cast("long"))
@@ -4735,10 +4529,10 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
               CAST(greatest(1, ceil(length(wl.w) / 4.0)) AS BIGINT))) AS BIGINT) AS n_pieces
           FROM wl LEFT JOIN wnp ON wnp.w = wl.w
           GROUP BY wl.doc_id)
-        SELECT doc_id, CAST(doc_id % $packBuckets AS INTEGER) AS bucket,
+        SELECT doc_id, CAST(doc_id % ${knobs.packBuckets} AS INTEGER) AS bucket,
           n_pieces,
           CAST(FLOOR((SUM(n_pieces)
-              OVER (PARTITION BY doc_id % $packBuckets ORDER BY doc_id
+              OVER (PARTITION BY doc_id % ${knobs.packBuckets} ORDER BY doc_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
             - n_pieces) / 512) AS BIGINT) AS pack_id
         FROM dp ORDER BY doc_id""")),
@@ -5526,7 +5320,7 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
           .orderBy(col("source"))
       },
       Some {
-        val mod = 1L << cdcMaskBits
+        val mod = 1L << knobs.cdcMaskBits
         val w = cdcWindow
         val gl = cdcGear.mkString("[", ", ", "]")
         val hsum = (0 until w).map(j =>
@@ -5863,7 +5657,7 @@ ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
         b69 AS (
           SELECT freq,
             CAST(len(string_split(substr(enc, 2, length(enc) - 2), ')(')) AS BIGINT) AS np
-          FROM bw$bpeMerges WHERE length(w) <= $uniMaxWordLen),
+          FROM bw${knobs.bpeMerges} WHERE length(w) <= $uniMaxWordLen),
         u69 AS (SELECT freq, CAST(len(seg) AS BIGINT) AS np FROM useg),
         w69 AS (SELECT freq, CAST(len(seg) AS BIGINT) AS np FROM wseg),
         s69 AS (
@@ -6291,12 +6085,7 @@ ${duckTwoLevel("h", "embeddings", Seq("label"), duckNprobe)},
     // integer counts + one final double division. ------------------------
     QDef("p35_ann_recall",
       (s, dir) => {
-        // bind the QDef Seq ONCE: defs is a def (knob-consistency rule),
-        // and each rebuild re-renders every oracle SQL string — multi-KB
-        // hyperplane literals per LSH table — so per-lookup calls are
-        // pure string-rendering overhead
-        val ds = defs
-        def res(name: String) = ds.find(_.name == name).get.fn(s, dir)
+        def res(name: String) = entry(name).fn(s, dir)
         // the truth sets are STAGED (p00g, TruthStage): each reference
         // below is a cheap parquet re-read of a small committed table, so
         // no persist/unpersist lifecycle is needed and adding an ANN
@@ -6394,7 +6183,7 @@ ${duckPqCodebookFrom("rq", "rsrc")},
 ${duckPqCodesFrom("rq", "rsrc")},
 ${duckResidualAdcCtes("y", "i")},
         ivfpqres AS (SELECT qid, cid FROM yrk WHERE rank <= 5),
-        ysh AS (SELECT qid, cid FROM yrk WHERE rank <= $pqRerank),
+        ysh AS (SELECT qid, cid FROM yrk WHERE rank <= ${knobs.pqRerank}),
         yxs AS (
           SELECT s.qid, s.cid, ${duckCosine("qa.embedding", "qb.embedding")} AS sim
           FROM ysh s
@@ -6406,7 +6195,7 @@ ${duckResidualAdcCtes("y", "i")},
               ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rank
             FROM yxs) WHERE rank <= 5),
         ivfpq AS (SELECT qid, cid FROM zrk WHERE rank <= 5),
-        zsh AS (SELECT qid, cid FROM zrk WHERE rank <= $pqRerank),
+        zsh AS (SELECT qid, cid FROM zrk WHERE rank <= ${knobs.pqRerank}),
         zxs AS (
           SELECT s.qid, s.cid, ${duckCosine("qa.embedding", "qb.embedding")} AS sim
           FROM zsh s
@@ -6838,7 +6627,7 @@ ${duckTwoLevel("v", "embeddings", Nil, duckNprobe)},
 $duckPqCodebook,
 $duckPqCodes,
 ${duckAdcCtes("w", "v")},
-        wsh AS (SELECT qid, cid FROM wrk WHERE rank <= $pqRerank),
+        wsh AS (SELECT qid, cid FROM wrk WHERE rank <= ${knobs.pqRerank}),
         wxs AS (
           SELECT s.qid, s.cid, ${duckCosine("qa.embedding", "qb.embedding")} AS sim
           FROM wsh s
@@ -6867,7 +6656,7 @@ ${duckAdcCtes("w", "v")},
         val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
           .agg(collect_list(struct(col("sub").cast("int").as("sub"),
             col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
-        val m = pqM
+        val m = knobs.pqM
         val dsub = s"(size(embedding) div $m)"
         // fused argmin kernel (r18): one JVM loop per (row, subspace)
         // instead of an interpreted lambda per codebook entry plus an
@@ -6971,7 +6760,7 @@ ${duckResidualAdcCtes("y", "v")}
       // CAST: DuckDB's SUM(BIGINT) widens to HUGEINT; Spark's stays long
       Some(s"""WITH $duckBpeChain
         SELECT round, l_sym, r_sym, CAST(pair_count AS BIGINT) AS pair_count FROM (
-          ${(1 to bpeMerges).map(r =>
+          ${(1 to knobs.bpeMerges).map(r =>
             s"SELECT $r AS round, l AS l_sym, r AS r_sym, pair_count FROM bb$r")
             .mkString("\n          UNION ALL ")})
         ORDER BY round""")),
@@ -6991,7 +6780,7 @@ ${duckResidualAdcCtes("y", "v")}
       Some(s"""WITH $duckBpeChain
         SELECT w AS word, freq,
           replace(substr(enc, 2, length(enc) - 2), ')(', ' ') AS tokens_s
-        FROM bw$bpeMerges ORDER BY freq DESC, word LIMIT 50""")),
+        FROM bw${knobs.bpeMerges} ORDER BY freq DESC, word LIMIT 50""")),
 
     // ---- tokenizer FERTILITY by language (p48c): BPE tokens emitted
     // per whitespace word — the standard measure of how well a trained
@@ -7023,7 +6812,7 @@ ${duckResidualAdcCtes("y", "v")}
       Some(s"""WITH $duckBpeChain,
         seg AS (SELECT w,
             CAST(len(string_split(substr(enc, 2, length(enc) - 2), ')(')) AS BIGINT) AS ntok
-          FROM bw$bpeMerges),
+          FROM bw${knobs.bpeMerges}),
         wl AS (SELECT lang, w
           FROM (SELECT lang, unnest(string_split(lower(text), ' ')) AS w FROM documents)
           WHERE regexp_full_match(w, '[a-z]+'))
@@ -7095,13 +6884,13 @@ ${duckResidualAdcCtes("y", "v")}
             len(string_split(text, ' ')) AS n
           FROM documents WHERE text IS NOT NULL),
         st AS (
-          SELECT doc_id, toks, n, unnest(range(0, n, $chunkStride)) AS start
+          SELECT doc_id, toks, n, unnest(range(0, n, ${knobs.chunkStride})) AS start
           FROM ck WHERE n > 0)
         SELECT doc_id,
-          CAST(start // $chunkStride AS INTEGER) AS chunk_no,
+          CAST(start // ${knobs.chunkStride} AS INTEGER) AS chunk_no,
           CAST(start AS INTEGER) AS start_tok,
-          CAST(least($chunkTokens, n - start) AS INTEGER) AS n_tok,
-          md5(array_to_string(toks[start + 1 : start + least($chunkTokens, n - start)], ' ')) AS fp
+          CAST(least(${knobs.chunkTokens}, n - start) AS INTEGER) AS n_tok,
+          md5(array_to_string(toks[start + 1 : start + least(${knobs.chunkTokens}, n - start)], ' ')) AS fp
         FROM st ORDER BY doc_id, chunk_no""")),
 
     // ---- chunk-level dedup pressure: how much of the corpus' chunk set
@@ -7123,11 +6912,11 @@ ${duckResidualAdcCtes("y", "v")}
             len(string_split(text, ' ')) AS n
           FROM documents WHERE text IS NOT NULL),
         st AS (
-          SELECT source, toks, n, unnest(range(0, n, $chunkStride)) AS start
+          SELECT source, toks, n, unnest(range(0, n, ${knobs.chunkStride})) AS start
           FROM ck WHERE n > 0),
         fps AS (
           SELECT source,
-            md5(array_to_string(toks[start + 1 : start + least($chunkTokens, n - start)], ' ')) AS fp
+            md5(array_to_string(toks[start + 1 : start + least(${knobs.chunkTokens}, n - start)], ' ')) AS fp
           FROM st)
         SELECT source, COUNT(*) AS n_chunks,
           CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_distinct,
@@ -7183,8 +6972,7 @@ ${duckResidualAdcCtes("y", "v")}
     // bucket width dial against its accuracy need. --------------------
     QDef("p49c_quantile_error",
       (s, dir) => {
-        val ds = defs
-        val est = ds.find(_.name == "p49_token_quantiles").get.fn(s, dir)
+        val est = entry("p49_token_quantiles").fn(s, dir)
           .select(col("q"), col("est_r"))
         val toks = docs(s, dir).filter(col("text").isNotNull)
           .select(size(split(col("text"), " ")).as("n_tok"))
@@ -7246,7 +7034,7 @@ $duckResidualSrc,
 ${duckPqCodebookFrom("rq", "rsrc")},
 ${duckPqCodesFrom("rq", "rsrc")},
 ${duckResidualAdcCtes("y", "v")},
-        ysh AS (SELECT qid, cid FROM yrk WHERE rank <= $pqRerank),
+        ysh AS (SELECT qid, cid FROM yrk WHERE rank <= ${knobs.pqRerank}),
         yxs AS (
           SELECT s.qid, s.cid, ${duckCosine("qa.embedding", "qb.embedding")} AS sim
           FROM ysh s
@@ -7352,7 +7140,7 @@ ${duckResidualAdcCtes("y", "v")},
         // `-Dgraft.sketchAgreement=off` (the 100 TB form): no exact
         // rank side at all — the plan is histogram + threshold compare,
         // zero corpus-scaled windows; n_agree is NULL by contract.
-        val base = if (sketchAgreementOn) perDoc
+        val base = if (knobs.sketchAgreement) perDoc
           .withColumn("rn",
             row_number().over(Window.orderBy(col("nll"), col("doc_id"))).cast("bigint"))
           .withColumn("nd", count(lit(1)).over(Window.partitionBy()))
@@ -7371,7 +7159,7 @@ ${duckResidualAdcCtes("y", "v")},
             sum(when(col("sbucket") === "head", 1L).otherwise(0L)).as("n_head"),
             sum(when(col("sbucket") === "middle", 1L).otherwise(0L)).as("n_middle"),
             sum(when(col("sbucket") === "tail", 1L).otherwise(0L)).as("n_tail"),
-            (if (sketchAgreementOn)
+            (if (knobs.sketchAgreement)
               sum(when(col("sbucket") === col("ebucket"), 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_agree"))
       },
@@ -7447,8 +7235,8 @@ ${duckResidualAdcCtes("y", "v")},
         val lw = cr.join(broadcast(ct), Seq("b"), "left")
           .crossJoin(broadcast(st))
           .withColumn("lwt", expr(
-            sln("coalesce(tc, 0) + 1") + s" - ${sln(s"nt + $dsirBuckets")}" +
-              s" - ${sln("rc + 1")} + ${sln(s"nr + $dsirBuckets")}"))
+            sln("coalesce(tc, 0) + 1") + s" - ${sln(s"nt + ${knobs.dsirBuckets}")}" +
+              s" - ${sln("rc + 1")} + ${sln(s"nr + ${knobs.dsirBuckets}")}"))
           .select(col("b"), col("lwt"))
         val dw = ft.join(broadcast(lw), Seq("b"))
           .groupBy(col("doc_id"))
@@ -7468,8 +7256,8 @@ ${duckResidualAdcCtes("y", "v")},
         st AS (SELECT CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS nt,
             CAST(count(*) AS BIGINT) AS nr FROM ft),
         lw AS (SELECT cr.b,
-            ${sln("coalesce(ct.tc, 0) + 1")} - ${sln(s"st.nt + $dsirBuckets")}
-            - ${sln("cr.rc + 1")} + ${sln(s"st.nr + $dsirBuckets")} AS lwt
+            ${sln("coalesce(ct.tc, 0) + 1")} - ${sln(s"st.nt + ${knobs.dsirBuckets}")}
+            - ${sln("cr.rc + 1")} + ${sln(s"st.nr + ${knobs.dsirBuckets}")} AS lwt
           FROM cr CROSS JOIN st LEFT JOIN ct ON cr.b = ct.b),
         dw AS (SELECT f.doc_id, CAST(count(*) AS BIGINT) AS n_feats,
             round(CAST(sum(lw.lwt) AS DOUBLE) / 100000000.0 / count(*), 6) AS weight
@@ -7532,7 +7320,7 @@ ${duckResidualAdcCtes("y", "v")},
             .as("cut_r"))
         // dial-off (100 TB form): selection is the threshold compare
         // alone — no global rank window; n_agree NULL by contract
-        val base = if (sketchAgreementOn) sc
+        val base = if (knobs.sketchAgreement) sc
           .withColumn("rn", row_number()
             .over(Window.orderBy(col("score_r").desc, col("doc_id"))).cast("bigint"))
         else sc
@@ -7541,7 +7329,7 @@ ${duckResidualAdcCtes("y", "v")},
           .groupBy(col("cut_r"))
           .agg(
             sum(when(col("sk"), 1L).otherwise(0L)).as("n_selected"),
-            (if (sketchAgreementOn)
+            (if (knobs.sketchAgreement)
               sum(when(col("sk") && col("rn") <= 100, 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_agree"))
       },
@@ -8058,7 +7846,7 @@ ${duckResidualAdcCtes("y", "v")},
     // heap top-k. ------------------------------------------------------
     QDef("p60_chunk_bm25",
       (s, dir) => {
-        val c = chunkTokens; val st = chunkStride
+        val c = knobs.chunkTokens; val st = knobs.chunkStride
         val base = docs(s, dir).filter(col("text").isNotNull)
           .withColumn("toks", split(col("text"), " "))
           .withColumn("n", size(col("toks")))
@@ -8086,10 +7874,10 @@ ${duckResidualAdcCtes("y", "v")},
       },
       Some(s"""WITH ck AS (
           SELECT doc_id, st AS start,
-            CAST(st // $chunkStride AS INT) AS chunk_no,
-            arr[st + 1 : st + least($chunkTokens, n - st)] AS carr,
-            CAST(least($chunkTokens, n - st) AS DOUBLE) AS dl
-          FROM (SELECT doc_id, arr, len(arr) AS n, unnest(range(0, len(arr), $chunkStride)) AS st
+            CAST(st // ${knobs.chunkStride} AS INT) AS chunk_no,
+            arr[st + 1 : st + least(${knobs.chunkTokens}, n - st)] AS carr,
+            CAST(least(${knobs.chunkTokens}, n - st) AS DOUBLE) AS dl
+          FROM (SELECT doc_id, arr, len(arr) AS n, unnest(range(0, len(arr), ${knobs.chunkStride})) AS st
                 FROM (SELECT doc_id, string_split(text, ' ') AS arr FROM documents
                       WHERE text IS NOT NULL)
                 WHERE len(arr) > 0)),
@@ -8119,7 +7907,7 @@ ${duckResidualAdcCtes("y", "v")},
     // the tf projection). -----------------------------------------------
     QDef("p60b_chunk_bm25_many",
       (s, dir) => {
-        val c = chunkTokens; val st = chunkStride
+        val c = knobs.chunkTokens; val st = knobs.chunkStride
         val qs = mmrQueries
         val allTerms = qs.flatMap(_._2).distinct
         val base = docs(s, dir).filter(col("text").isNotNull)
@@ -8166,10 +7954,10 @@ ${duckResidualAdcCtes("y", "v")},
         }.mkString("\n          UNION ALL\n          ")
         s"""WITH ck AS (
           SELECT doc_id, st AS start,
-            CAST(st // $chunkStride AS INT) AS chunk_no,
-            arr[st + 1 : st + least($chunkTokens, n - st)] AS carr,
-            CAST(least($chunkTokens, n - st) AS DOUBLE) AS dl
-          FROM (SELECT doc_id, arr, len(arr) AS n, unnest(range(0, len(arr), $chunkStride)) AS st
+            CAST(st // ${knobs.chunkStride} AS INT) AS chunk_no,
+            arr[st + 1 : st + least(${knobs.chunkTokens}, n - st)] AS carr,
+            CAST(least(${knobs.chunkTokens}, n - st) AS DOUBLE) AS dl
+          FROM (SELECT doc_id, arr, len(arr) AS n, unnest(range(0, len(arr), ${knobs.chunkStride})) AS st
                 FROM (SELECT doc_id, string_split(text, ' ') AS arr FROM documents
                       WHERE text IS NOT NULL)
                 WHERE len(arr) > 0)),
@@ -8517,7 +8305,7 @@ ${duckResidualAdcCtes("y", "v")},
         // loop documents. Tracking is per-handle (the RDD read from the
         // checkpointed plan itself), so a concurrent query's checkpoint
         // can never be captured and released from here.
-        val ckEvery = Dials.int("graft.lexCheckpoint").filter(_ > 0)
+        val ckEvery = knobs.lexCheckpoint
         var prevCk: Option[Materialize.Handle] = None
         for (i <- 1 to lexIters) {
           val mass = contribSrc
@@ -8869,7 +8657,7 @@ ${(1 to lexIters).map(duckLexIter).mkString(",\n")}
     // already agree on. --------------------------------------------------
     QDef("p85b_source_neighbors",
       (s, dir) => {
-        val js = defs.find(_.name == "p85_source_divergence").get.fn(s, dir)
+        val js = entry("p85_source_divergence").fn(s, dir)
         val both = js.select(col("src_a").as("src"), col("src_b").as("other"),
             col("js_r"))
           .unionByName(js.select(col("src_b").as("src"),
@@ -9058,7 +8846,7 @@ ${(1 to lexIters).map(duckLexIter).mkString(",\n")}
         val sk = excessSketch(s, dir)
         // dial-off (100 TB form): the sketch decision alone — no exact
         // rank join; exact/agreement columns NULL by contract
-        val joined = if (sketchAgreementOn) {
+        val joined = if (knobs.sketchAgreement) {
           val exact = excessPerDoc(s, dir)
             .withColumn("rn", row_number()
               .over(Window.orderBy(col("excess_r").desc, col("doc_id"))).cast("bigint"))
@@ -9070,9 +8858,9 @@ ${(1 to lexIters).map(duckLexIter).mkString(",\n")}
           .groupBy(col("cut_r"))
           .agg(
             sum(when(col("kept_sk"), 1L).otherwise(0L)).as("n_kept_sketch"),
-            (if (sketchAgreementOn) sum(when(col("kept_ex"), 1L).otherwise(0L))
+            (if (knobs.sketchAgreement) sum(when(col("kept_ex"), 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_kept_exact"),
-            (if (sketchAgreementOn)
+            (if (knobs.sketchAgreement)
               sum(when(col("kept_sk") === col("kept_ex"), 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_agree"),
             count(lit(1)).as("nd"))
@@ -9316,7 +9104,7 @@ $duckPcaDeflateCtes,
         val sk = bordaSketch(s, dir, sig)
         // dial-off (100 TB form): the sketch's kept-set alone — no
         // exact Borda join; exact/agreement columns NULL by contract
-        val joined = if (sketchAgreementOn)
+        val joined = if (knobs.sketchAgreement)
           sk.join(fusionExact(s, dir, sig).select(col("doc_id"), col("kept")),
             "doc_id")
         else sk
@@ -9324,9 +9112,9 @@ $duckPcaDeflateCtes,
           .groupBy(col("cut_bucket"))
           .agg(
             sum(when(col("kept_sk"), 1L).otherwise(0L)).as("n_kept_sketch"),
-            (if (sketchAgreementOn) sum(when(col("kept"), 1L).otherwise(0L))
+            (if (knobs.sketchAgreement) sum(when(col("kept"), 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_kept_exact"),
-            (if (sketchAgreementOn)
+            (if (knobs.sketchAgreement)
               sum(when(col("kept_sk") === col("kept"), 1L).otherwise(0L))
             else lit(null).cast("bigint")).as("n_agree"),
             count(lit(1)).as("nd"))
@@ -9411,7 +9199,7 @@ $duckPcaDeflateCtes,
         // CACHED per (dir, cap) — repeat invocations pay zero counting
         // passes, and a changed -Dgraft.broadcastFrontMaxRows re-decides
         // instead of serving a stale verdict (r15 regression fix)
-        val cap = broadcastFrontMaxRows
+        val cap = knobs.broadcastFrontMaxRows
         val doBroadcast = p91BroadcastByDirCap.computeIfAbsent((dir, cap), _ =>
           base.count() <= cap || front0.count() <= cap)
         val front = if (doBroadcast) broadcast(front0) else front0
@@ -10161,7 +9949,7 @@ $duckPcaDeflateCtes,
     * window runs over the DISTINCT-HOUR table, whose cardinality is
     * bounded by the time span, not the event volume — the same
     * boundedness class as the vocabulary/value-domain windows. */
-  private def monitoringDefs: Seq[QDef] = Seq(
+  private def monitoringDefs(implicit knobs: Knobs): Seq[QDef] = Seq(
 
     // ---- Wald SPRT on the treatment arm (p104): sequential testing is
     // HOW a production experiment monitor decides — a fixed-n z-test
@@ -10654,9 +10442,9 @@ $duckPcaDeflateCtes,
   /** The three pinned quality signals the fusion family combines:
     * heuristic quality (p09), trained-classifier probability (p55's
     * staged-weight scoring), Flesch readability (p82). */
-  private def fusionSignals(s: SparkSession, dir: String)
+  private def fusionSignals(s: SparkSession, dir: String)(implicit knobs: Knobs)
       : (DataFrame, DataFrame, DataFrame) = (
-    defs.find(_.name == "p09_quality_score").get.fn(s, dir)
+    entry("p09_quality_score").fn(s, dir)
       .select(col("doc_id"), col("quality")),
     lrDocScores(s, dir).select(col("doc_id"), col("score_r")),
     readabilityPerDoc(s, dir).select(col("doc_id"), col("fre_r")))
@@ -10666,7 +10454,7 @@ $duckPcaDeflateCtes,
     * doc_id). The global sorts are the validation-scale convenience —
     * p90b is the histogram form that replaces them at 100 TB. */
   private def fusionExact(s: SparkSession, dir: String,
-      sig: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
+      sig: Option[(DataFrame, DataFrame, DataFrame)] = None)(implicit knobs: Knobs): DataFrame = {
     val (q, l, f) = sig.getOrElse(fusionSignals(s, dir))
     def rk(d: DataFrame, c: String, as: String): DataFrame =
       d.withColumn(as, row_number()
@@ -10697,7 +10485,7 @@ $duckPcaDeflateCtes,
     * is three ≤1024-row histogram aggregates plus one more for the
     * cut. */
   private[graft] def bordaSketch(s: SparkSession, dir: String,
-      sig: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
+      sig: Option[(DataFrame, DataFrame, DataFrame)] = None)(implicit knobs: Knobs): DataFrame = {
     val (q, l, f) = sig.getOrElse(fusionSignals(s, dir))
     def hrank(d: DataFrame, bucketExpr: String, as: String): DataFrame = {
       val b = d.withColumn("b", expr(bucketExpr)).select(col("doc_id"), col("b"))
@@ -10739,7 +10527,7 @@ $duckPcaDeflateCtes,
     * CTEs (`bq` quality, `lsc` classifier score, `rb` readability) plus
     * p90's exact rank chain ending at `bk` (doc_id, rq, rl, rf, borda,
     * rn, nd). */
-  private def duckFusionCtes: String = s"""$duckBigrams,
+  private def duckFusionCtes(implicit knobs: Knobs): String = s"""$duckBigrams,
         $duckDsirFeatures,
         $duckLrChain,
         $duckLrScoreCte,
@@ -10813,7 +10601,7 @@ $duckPcaDeflateCtes,
     * (the CellStage key discipline): a future change to any of them
     * re-keys the staged artifact instead of silently reusing it. */
   private[graft] object PcaStage {
-    def load(s: SparkSession, dir: String): DataFrame = {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
       val ph = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$pcaIters-$pcaD-1e8".getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(6)
@@ -10843,7 +10631,7 @@ $duckPcaDeflateCtes,
 
   /** The staged Gram read plus the exact-integer power iteration —
     * driver state d² longs, the PQ-SDC class of bounded `.collect()`. */
-  private def pcaFit(s: SparkSession, dir: String): PcaFit = {
+  private def pcaFit(s: SparkSession, dir: String)(implicit knobs: Knobs): PcaFit = {
     val cells = PcaStage.load(s, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     val d = cells.map(_._1).max + 1
@@ -10875,7 +10663,8 @@ $duckPcaDeflateCtes,
     * entries can reach λ' ≈ trace, 64× the original scale), then the same
     * 8 rounds. Every step is the sign-split truncating division both
     * engines share, so trajectories stay bit-identical. */
-  private def pcaFit2(s: SparkSession, dir: String): (PcaFit, Array[Long]) = {
+  private def pcaFit2(s: SparkSession, dir: String)(
+      implicit knobs: Knobs): (PcaFit, Array[Long]) = {
     val fit = pcaFit(s, dir)
     val d = fit.v.length
     val dd = fit.den / 1000L
@@ -10977,7 +10766,7 @@ $duckPcaDeflateCtes,
     * sln(na·Tb + nb·Ta)] — KL(Pa||M) scaled by Ta·1e8, exact BIGINT.
     * Returns (sums DF (sa, sb, s), totals DF (source, t)). */
   private def jsOrderedSums(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, () => Unit) = {
+      dir: String)(implicit knobs: Knobs): (DataFrame, DataFrame, () => Unit) = {
     // the bucket-count table feeds SIX consumers across the two ordered
     // directions (totals, a-side, b-side per direction); it is bounded
     // at sources x dsirBuckets rows, so one eager Materialize turns
@@ -10985,7 +10774,7 @@ $duckPcaDeflateCtes,
     // of re-running the corpus-scaled tokenize+hash+aggregate
     val cntH = Materialize.tracked(docs(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
-      .select(col("source"), (md560(col("w")) % dsirBuckets).as("b"))
+      .select(col("source"), (md560(col("w")) % knobs.dsirBuckets).as("b"))
       .groupBy(col("source"), col("b")).agg(count(lit(1)).as("n")), "jscnt")
     val cnt = cntH.df
     val tot = cnt.groupBy(col("source")).agg(sum(col("n")).as("t"))
@@ -11013,7 +10802,7 @@ $duckPcaDeflateCtes,
     * <= sources² rows — broadcast beats the size-estimate-blind
     * sort-merge Spark picks for agg outputs. */
   private[graft] def sourceDivergencePlan(s: SparkSession,
-      dir: String): (DataFrame, () => Unit) = {
+      dir: String)(implicit knobs: Knobs): (DataFrame, () => Unit) = {
     val (sab, tot, release) = jsOrderedSums(s, dir)
     val fwd = sab.filter(col("sa") < col("sb"))
     val rev = sab.filter(col("sa") > col("sb"))
@@ -11032,10 +10821,10 @@ $duckPcaDeflateCtes,
 
   /** The DuckDB half of [[jsOrderedSums]]: final CTEs `jsums` (sa, sb, s)
     * and `jtot` (source, t). */
-  private def duckJsCtes: String = s"""jtk AS MATERIALIZED (
+  private def duckJsCtes(implicit knobs: Knobs): String = s"""jtk AS MATERIALIZED (
           SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
         jcnt AS MATERIALIZED (
-          SELECT source, (${duckMd560("w")}) % $dsirBuckets AS b,
+          SELECT source, (${duckMd560("w")}) % ${knobs.dsirBuckets} AS b,
             CAST(COUNT(*) AS BIGINT) AS n
           FROM jtk GROUP BY 1, 2),
         jtot AS MATERIALIZED (SELECT source, CAST(SUM(n) AS BIGINT) AS t FROM jcnt GROUP BY 1),
@@ -11168,9 +10957,9 @@ $duckPcaDeflateCtes,
   /** The per-query retrieval-eval frame shared by p83/p83b: IVF (p16)
     * top-5 judged against the staged exact truth (p00g). Queries with
     * zero hits keep a row (first_hit = 0 sentinel, all metrics 0). */
-  private def retrievalEvalPerQuery(s: SparkSession, dir: String): DataFrame = {
-    val ds = defs
-    val ivf = ds.find(_.name == "p16_knn_ivf").get.fn(s, dir)
+  private def retrievalEvalPerQuery(s: SparkSession, dir: String)(
+      implicit knobs: Knobs): DataFrame = {
+    val ivf = entry("p16_knn_ivf").fn(s, dir)
       .select(col("qid"), col("neighbor_id"), col("rank"))
     val truth = TruthStage.loadKnn(s, dir).select(col("qid"), col("neighbor_id"))
     val hits = ivf.join(truth, Seq("qid", "neighbor_id"))
@@ -11194,7 +10983,7 @@ $duckPcaDeflateCtes,
 
   /** The p83/p83b oracle prefix: the p16 IVF oracle chain + the p05
     * exact-truth chain + the judged per-query metrics. Final CTE `perq`. */
-  private def duckRetrievalEvalCtes: String = s"""$duckSuperCells,
+  private def duckRetrievalEvalCtes(implicit knobs: Knobs): String = s"""$duckSuperCells,
 ${duckTwoLevel("i", "embeddings", Nil, duckNprobe)},
         assigned AS (SELECT vec_id AS cid, cell, embedding AS cv2 FROM icranked WHERE crank = 1),
         probes AS (SELECT vec_id AS qid, cell, embedding AS qv

@@ -5,7 +5,6 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import graft.Dials
 import graft.emulator._
 
 /** HTTP protocol layer speaking the reference's two Snowflake wire
@@ -35,6 +34,13 @@ final class EmulatorServer(
   sessions.onRename(executor.migrateSessionState)
 
   def actualPort: Int = server.getAddress.getPort
+
+  /** Running gosnowflake statements: (session token, URL `requestId`) to
+    * the query id, which is the statement's Spark job group. */
+  private val running = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  /** Query ids an abort-request cancelled, so they report Snowflake's
+    * cancel error rather than Spark's. */
+  private val aborted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   // ------------------------------------------------------------------
   // routing
@@ -209,6 +215,8 @@ final class EmulatorServer(
       // statement's jobs can be attributed to it
       val queryId = executor.newQueryId()
       val spark = executor.catalog.spark
+      val request = queryParams(exchange).get("requestId").map(sess.token -> _)
+      request.foreach(running.put(_, queryId))
       try {
         spark.sparkContext.setJobGroup(queryId, sqlText, interruptOnCancel = true)
         val r = executor.execute(ctx, sqlText, bindings, queryId0 = Some(queryId))
@@ -230,14 +238,32 @@ final class EmulatorServer(
         })
       } catch {
         case t: Throwable =>
-          respond(exchange, 200, gosnowflakeError(SnowflakeError.fromThrowable(t)))
-      } finally spark.sparkContext.clearJobGroup()
+          respond(exchange, 200, gosnowflakeError(
+            if (aborted.contains(queryId))
+              SnowflakeError(SnowflakeError.CodeQueryCanceled, "SQL execution canceled")
+            else SnowflakeError.fromThrowable(t)))
+      } finally {
+        request.foreach(running.remove(_, queryId))
+        aborted.remove(queryId)
+        spark.sparkContext.clearJobGroup()
+      }
     }
 
-  /** POST /queries/v1/abort-request — a stub in the reference
-    * (`handlers/query.go:149-165`); same here. */
+  /** POST /queries/v1/abort-request — cancels the session's running
+    * statement whose query-request carried the body's `requestId` (a
+    * stub in the reference, `handlers/query.go:149-165`). An unknown or
+    * finished request is a no-op. */
   private def abortRequest(exchange: HttpExchange): Unit =
-    withSession(exchange)(_ => respond(exchange, 200, obj(_.put("success", true))))
+    withSession(exchange) { sess =>
+      textOf(readJson(exchange), "requestId").foreach { id =>
+        running.computeIfPresent(sess.token -> id, (_, queryId) => {
+          aborted.add(queryId)
+          executor.catalog.spark.sparkContext.cancelJobGroup(queryId)
+          queryId
+        })
+      }
+      respond(exchange, 200, obj(_.put("success", true)))
+    }
 
   // ------------------------------------------------------------------
   // REST API v2
@@ -677,10 +703,8 @@ final class EmulatorServer(
   /** Rows per REST v2 result partition. Results larger than this return
     * partition 0 inline with `resultSetMetaData.partitionInfo` describing
     * the rest, fetched via GET `?partition=N` — Snowflake's large-result
-    * shape. Read per request so tests and live reconfiguration work. */
-  private def resultPartitionRows: Int =
-    Dials.int("graft.resultPartitionRows")
-      .map(v => math.max(1, v)).getOrElse(100000)
+    * shape. */
+  private def resultPartitionRows: Int = executor.knobs.resultPartitionRows
 
   private def statementResponse(st: statements.Statement,
       result: Option[Executor.Result], error: Option[SnowflakeError],

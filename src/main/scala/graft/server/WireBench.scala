@@ -44,7 +44,6 @@ object WireBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    sys.props("graft.pipelineDir") = sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -94,7 +93,8 @@ object WireBench {
     // path so JIT/codegen/first-scan costs don't land in sample 0
     gs("CREATE OR REPLACE TABLE wb_dml (k INT, v DOUBLE)")
     gs("INSERT INTO wb_dml VALUES (0, 0.0)")
-    val pipelineSql = "SELECT * FROM TABLE(PIPELINE('q01_pricing_summary'))"
+    val pipelineSql = "SELECT * FROM TABLE(PIPELINE('q01_pricing_summary', '" +
+      sfDir.replace("'", "''") + "'))"
     Seq(gs _, v2 _, inproc _).foreach { run =>
       run("SELECT 1"); run(pipelineSql)
       run("INSERT INTO wb_dml VALUES (-1, -1.0)")

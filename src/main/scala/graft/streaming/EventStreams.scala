@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Knobs
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -595,8 +596,8 @@ object EventStreams {
   /** The per-doc hashed unigram+bigram feature-bucket multiset (the
     * batch dsirFeatures representation as one array column) — shared by
     * the LR and DSIR gates. Expects an `arr` token-array column. */
-  private def hashedFeatureBuckets: org.apache.spark.sql.Column = {
-    val b = graft.queries.Pipeline.dsirBuckets
+  private def hashedFeatureBuckets(implicit knobs: Knobs): org.apache.spark.sql.Column = {
+    val b = knobs.dsirBuckets
     val arr = col("arr")
     def bucket(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       conv(substring(md5(e), 1, 15), 16, 10).cast("long") % b
@@ -619,7 +620,8 @@ object EventStreams {
     * bit-identical to batch p54 on fitted-corpus docs (spec-proven).
     * Expects `doc_id` and `text`; emits (doc_id, n_feats, weight, kept). */
   def dsirGateStream(spark: org.apache.spark.sql.SparkSession,
-      modelDir: String, docs: DataFrame, minWeight: Double = 0.0): DataFrame = {
+      modelDir: String, docs: DataFrame, minWeight: Double = 0.0)(
+      implicit knobs: Knobs): DataFrame = {
     val (lwt, dflt) = graft.queries.Pipeline.dsirWeightMaps(spark, modelDir)
     val lwtCol = typedLit(lwt)
     docs
@@ -648,7 +650,8 @@ object EventStreams {
     * bit-identical (spec-proven). Expects `doc_id` and `text`; emits
     * (doc_id, n_feats, score, kept). */
   def lrGateStream(spark: org.apache.spark.sql.SparkSession,
-      modelDir: String, docs: DataFrame, minScore: Double = 0.5): DataFrame = {
+      modelDir: String, docs: DataFrame, minScore: Double = 0.5)(
+      implicit knobs: Knobs): DataFrame = {
     val wm = graft.queries.Pipeline.LrStage.load(spark, modelDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wCol = typedLit(wm)
@@ -696,7 +699,7 @@ object EventStreams {
     * regardless of stream length. Complete mode; ranking candidates
     * against the sink's cell table (min over depths) is a batch step,
     * exactly as in p40. Expects a `text` column. */
-  def bigramCellsStream(docs: DataFrame): DataFrame =
+  def bigramCellsStream(docs: DataFrame)(implicit knobs: Knobs): DataFrame =
     graft.queries.Pipeline.cmsCellUpdates(docs)
       .groupBy(col("j"), col("pos")).agg(count(lit(1)).as("c"))
 
@@ -711,7 +714,7 @@ object EventStreams {
     * chunk_no, n_tok, fp) for surviving chunks. Expects `ts`, `doc_id`,
     * `text`. */
   def chunkDedupStream(docs: DataFrame,
-      watermarkDelay: String = "1 hour"): DataFrame =
+      watermarkDelay: String = "1 hour")(implicit knobs: Knobs): DataFrame =
     graft.queries.Pipeline.chunkFingerprints(docs)
       .select(col("ts"), col("doc_id"), col("chunk_no"), col("n_tok"), col("fp"))
       .withWatermark("ts", watermarkDelay)
@@ -728,7 +731,7 @@ object EventStreams {
     * `dropDuplicatesWithinWatermark("fp")` (the [[chunkDedupStream]]
     * pattern) for windowed chunk-level dedup. Expects `ts`, `doc_id`,
     * `text`. */
-  def cdcChunkStream(docs: DataFrame): DataFrame =
+  def cdcChunkStream(docs: DataFrame)(implicit knobs: Knobs): DataFrame =
     graft.queries.Pipeline.cdcChunked(docs, Seq("ts", "doc_id"))
       .select(col("ts"), col("doc_id"), md5(col("chunk")).as("fp"),
         length(col("chunk")).as("l"))
@@ -762,7 +765,7 @@ object EventStreams {
     * CellStage/PqStage (fit once in batch, stream against them). */
   def semanticDedupStream(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, docs: DataFrame,
-      threshold: Double = 0.4): Dataset[SemanticDedupResult] = {
+      threshold: Double = 0.4)(implicit knobs: Knobs): Dataset[SemanticDedupResult] = {
     import spark.implicits._
     val (m, dots, norms) = graft.queries.Pipeline.pqSdcTables(spark, indexDir)
     def approxSim(a: Seq[Int], b: Seq[Int]): Double = {
@@ -820,7 +823,7 @@ object EventStreams {
   def indexDriftStream(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, docs: DataFrame,
       windowDur: String = "1 hour", watermarkDelay: String = "1 hour",
-      refitRatio: Double = 1.5): DataFrame = {
+      refitRatio: Double = 1.5)(implicit knobs: Knobs): DataFrame = {
     val baseline = graft.queries.Pipeline.pqSseBaseline(spark, indexDir)
     // A memorizing codebook (baseline exactly 0 — realistic at tiny
     // validation scale) floors the denominator: any nonzero arriving

@@ -6,6 +6,7 @@ package graft
   * from QueriesSmokeSpec so the test wall parallelizes across suites.
   */
 class AnalyticsFamilySpec extends SparkSpecBase {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   test("p76 retention: equals the plain-Scala cohort matrix; week-0 retention is 1.0") {
     import java.time.{DayOfWeek, Instant, LocalDate, ZoneOffset}

@@ -6,6 +6,7 @@ package graft
   * split from SelectionFamilySpec so the test wall parallelizes.
   */
 class AuditFamilySpec extends SparkSpecBase with PlainScalaFixtures {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   test("p70: the Hedge trajectory equals the plain-Scala MWU re-derivation") {
     val (c2, c1, v) = lm
@@ -144,7 +145,7 @@ class AuditFamilySpec extends SparkSpecBase with PlainScalaFixtures {
 
   test("p85: every pairwise JS divergence equals the plain-Scala " +
     "re-derivation; scores live in [0,1] and p85b picks the argmin") {
-    val bkts = graft.queries.Pipeline.dsirBuckets
+    val bkts = knobs.dsirBuckets
     val rows = spark.read.parquet(s"$sf0001/documents.parquet")
       .select("source", "text").collect()
       .map(r => (r.getString(0), r.getString(1)))

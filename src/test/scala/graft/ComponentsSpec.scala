@@ -15,8 +15,8 @@ class ComponentsSpec extends SparkSpecBase {
 
   private def solve(pairs: org.apache.spark.sql.DataFrame,
       distributed: Boolean): Map[Long, Long] =
-    queries.Pipeline.minLabelComponents(spark, pairs,
-        driverMaxEdges = if (distributed) 0L else Long.MaxValue)
+    queries.Pipeline.minLabelComponents(spark, pairs)(
+        Knobs.jvm.copy(ccDriverMaxEdges = if (distributed) 0L else Long.MaxValue))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("chain with diameter 25 converges to a single component (both paths)") {
@@ -56,8 +56,8 @@ class ComponentsSpec extends SparkSpecBase {
     import spark.implicits._
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     assertThrows[IllegalStateException] {
-      queries.Pipeline.minLabelComponents(spark, pairs, maxIter = 2,
-        driverMaxEdges = 0L).count()
+      queries.Pipeline.minLabelComponents(spark, pairs, maxIter = 2)(
+        Knobs.jvm.copy(ccDriverMaxEdges = 0L)).count()
     }
   }
 }

@@ -5,73 +5,60 @@ import graft.queries.Pipeline
 
 /** Every `-Dgraft.*` numeric dial must treat a malformed value exactly
   * like an absent one: the documented default, no NumberFormatException
-  * at plan-build time. Setting GARBAGE values here is race-free against
-  * the parallel Spark suites precisely BECAUSE of the guarantee under
-  * test — a garbage dial resolves to the same default an absent dial
-  * does, so no concurrently-built plan changes shape. (A spec that set
-  * VALID non-default values would race; this one must never do that.) */
+  * at plan-build time. Checked on [[Knobs.from]] over a property map, so
+  * no JVM property is written. */
 class DialGuardSpec extends AnyFunSuite {
 
   private val dials = Seq(
-    "graft.bloomBits", "graft.bloomProbes", "graft.cmsWidth",
-    "graft.cmsDepth", "graft.ccDriverMaxEdges",
-    "graft.exactBaselineMaxRows", "graft.ivfCells", "graft.kmeansIters",
-    "graft.kmeansFitPoints", "graft.ivfSuperCells", "graft.pqSubspaces",
-    "graft.pqCodes", "graft.pqRerank", "graft.ivfNprobe",
-    "graft.lshTables", "graft.lshPlanes", "graft.dsirBuckets",
-    "graft.imageBands", "graft.imageHamming", "graft.cdcMaskBits",
-    "graft.lrDriverRows", "graft.uniSeed", "graft.bpeMerges",
-    "graft.chunkTokens", "graft.chunkStride", "graft.evalQueries")
+    "bloomBits", "bloomProbes", "cmsWidth", "cmsDepth", "ccDriverMaxEdges",
+    "exactBaselineMaxRows", "broadcastFrontMaxRows", "packBuckets",
+    "ivfCells", "kmeansIters", "kmeansFitPoints", "ivfSuperCells",
+    "pqSubspaces", "pqCodes", "pqRerank", "ivfNprobe", "lshTables",
+    "lshPlanes", "dsirBuckets", "imageBands", "imageHamming", "cdcMaskBits",
+    "lrDriverRows", "uniSeed", "bpeMerges", "chunkTokens", "chunkStride",
+    "evalQueries", "explodeSpread", "lexCheckpoint", "checkpointMode",
+    "sketchAgreement", "maxResultRows", "resultPartitionRows",
+    "timeTravelMaxBytes", "streamSnapshotMaxBytes")
 
-  private def withGarbage(body: => Unit): Unit = {
-    val saved = dials.map(d => d -> sys.props.get(d))
-    try {
-      dials.foreach(d => sys.props(d) = "not-a-number !!")
-      body
-    } finally saved.foreach {
-      case (d, Some(v)) => sys.props(d) = v
-      case (d, None)    => sys.props.remove(d)
-    }
-  }
-
-  test("Dials.int / Dials.long parse defensively") {
-    sys.props("graft.test.dial") = "  42 "
-    assert(Dials.int("graft.test.dial").contains(42))
-    assert(Dials.long("graft.test.dial").contains(42L))
-    sys.props("graft.test.dial") = "forty-two"
-    assert(Dials.int("graft.test.dial").isEmpty)
-    assert(Dials.long("graft.test.dial").isEmpty)
-    sys.props.remove(("graft.test.dial"))
-    assert(Dials.int("graft.test.dial").isEmpty)
+  test("Knobs.from parses defensively: trimmed numbers, malformed means absent") {
+    assert(Knobs.from(Map("graft.pqRerank" -> "  42 ")).pqRerank == 42)
+    assert(Knobs.from(Map("graft.lrDriverRows" -> " 42")).lrDriverRows == 42L)
+    assert(Knobs.from(Map("graft.pqRerank" -> "forty-two")).pqRerank == 25)
+    assert(Knobs.from(Map("graft.lrDriverRows" -> "forty-two")).lrDriverRows ==
+      Knobs().lrDriverRows)
+    assert(Knobs.from(Map.empty[String, String]) == Knobs())
   }
 
   test("every numeric dial observes its default under a garbage -D value") {
-    withGarbage {
-      assert(Pipeline.bloomLogBits == 16)
-      assert(Pipeline.bloomProbes == 4)
-      assert(Pipeline.cmsLogWidth == 13)
-      assert(Pipeline.cmsDepth == 4)
-      assert(Pipeline.ccDriverMaxEdges == 5000000L)
-      assert(Pipeline.exactBaselineMaxRows == 200000L)
-      assert(Pipeline.ivfK(100L * 100) == 100)       // ceil(sqrt(n)) default
-      assert(Pipeline.kmeansIters == 4)
-      assert(Pipeline.kmeansFitPoints == 256L)
-      assert(Pipeline.superKFor(64L) == 8)           // ceil(sqrt(k)) default
-      assert(Pipeline.pqM == 8)
-      assert(Pipeline.pqK == 16)
-      assert(Pipeline.pqRerank == 25)
-      assert(Pipeline.ivfNprobe(64) == 4)            // max(3, k/16) default
-      assert(Pipeline.lshNumTables == 4)
-      assert(Pipeline.lshNumPlanes(0L) >= 1)
-      assert(Pipeline.dsirBuckets > 0)
-      assert(Pipeline.imageBands == 4)
-      assert(Pipeline.imageHamming == 6)
-      assert(Pipeline.cdcMaskBits == 7)
-      assert(Pipeline.uniSeed == 200)
-      assert(Pipeline.bpeMerges == 6)
-      assert(Pipeline.chunkTokens == 64)
-      assert(Pipeline.chunkStride == 48)
-      assert(Pipeline.evalQueriesDial.isEmpty)   // garbage = full query set
-    }
+    implicit val k: Knobs =
+      Knobs.from(dials.map(d => s"graft.$d" -> "not-a-number !!").toMap)
+    assert(k == Knobs())
+    assert(k.bloomLogBits == 16)
+    assert(k.bloomProbes == 4)
+    assert(k.cmsLogWidth == 13)
+    assert(k.cmsDepth == 4)
+    assert(k.ccDriverMaxEdges == 5000000L)
+    assert(k.exactBaselineMaxRows == 200000L)
+    assert(Pipeline.ivfK(100L * 100) == 100)       // ceil(sqrt(n)) default
+    assert(k.kmeansIters == 4)
+    assert(k.kmeansFitPoints == 256L)
+    assert(Pipeline.superKFor(64L) == 8)           // ceil(sqrt(k)) default
+    assert(k.pqM == 8)
+    assert(k.pqK == 16)
+    assert(k.pqRerank == 25)
+    assert(Pipeline.ivfNprobe(64) == 4)            // max(3, k/16) default
+    assert(k.lshTables == 4)
+    assert(Pipeline.lshNumPlanes(0L) >= 1)
+    assert(k.dsirBuckets > 0)
+    assert(k.imageBands == 4)
+    assert(k.imageHamming == 6)
+    assert(k.cdcMaskBits == 7)
+    assert(k.uniSeed == 200)
+    assert(k.bpeMerges == 6)
+    assert(k.chunkTokens == 64)
+    assert(k.chunkStride == 48)
+    assert(k.evalQueries.isEmpty)   // garbage = full query set
+    assert(k.sketchAgreement)
+    assert(k.checkpointMode == "local")
   }
 }

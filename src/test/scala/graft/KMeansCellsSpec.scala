@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * properties the r6 verdict demanded of the similarity family:
   *
   *  1. the cell count is a FUNCTION OF n (max(16, ceil(sqrt(n))) by
-  *     default, `-Dgraft.ivfCells` to pin), not a constant derived from a
+  *     default, the `ivfCells` knob to pin), not a constant derived from a
   *     data column — so per-cell population shrinks relative to the corpus
   *     as it grows instead of scaling linearly with it;
   *  2. populations stay near-balanced (max <= 4 * n/k), which is what
@@ -17,21 +17,35 @@ import org.apache.spark.sql.functions._
   *     p36_kmeans_index certifies cross-engine).
   */
 class KMeansCellsSpec extends SparkSpecBase {
+  import queries.Pipeline
 
-  private def pop(dir: String) = {
+  private def pop(dir: String)(implicit k: Knobs) = {
     // p32's output carries each vector's assigned cell — the population
     // view of the fitted index, via the public query surface
-    SparkEntry.queries("p32_semdedup")(spark, dir)
+    SparkEntry.queriesFor(k)("p32_semdedup")(spark, dir)
       .groupBy(col("cell")).count()
   }
 
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+  }
+
+  /** The JVM's knobs staging under a fresh root (deleted afterwards), so
+    * a pinned index never shares a staged table with other suites. */
+  private def withRoot[A](prefix: String)(body: Knobs => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(Knobs.jvm.copy(shingleStageDir = Some(dir.toString)))
+    finally rm(dir.toFile)
+  }
+
   test("cell count grows with n: k = max(16, ceil(sqrt(n)))") {
+    implicit val k: Knobs = Knobs.jvm
     val n001 = Tables.load(spark, sf0001, "embeddings").count()
     val n01 = Tables.load(spark, sf001, "embeddings").count()
     val k001 = math.max(16, math.ceil(math.sqrt(n001.toDouble)).toInt)
     val k01 = math.max(16, math.ceil(math.sqrt(n01.toDouble)).toInt)
-    val cells001 = queries.Pipeline.CellStage.load(spark, sf0001).count()
-    val cells01 = queries.Pipeline.CellStage.load(spark, sf001).count()
+    val cells001 = Pipeline.CellStage.load(spark, sf0001).count()
+    val cells01 = Pipeline.CellStage.load(spark, sf001).count()
     // every cell is seeded; a cell only drops if no vector chose it
     assert(cells001 <= k001 && cells001 >= k001 / 2,
       s"sf0.001: $cells001 cells for k=$k001")
@@ -42,48 +56,33 @@ class KMeansCellsSpec extends SparkSpecBase {
   }
 
   test("per-cell population is bounded: max <= 4 * n/k") {
+    implicit val kn: Knobs = Knobs.jvm
     val n = Tables.load(spark, sf001, "embeddings").count()
-    val k = queries.Pipeline.CellStage.load(spark, sf001).count()
+    val k = Pipeline.CellStage.load(spark, sf001).count()
     val maxPop = pop(sf001).agg(max(col("count"))).collect()(0).getLong(0)
     assert(maxPop <= 4.0 * n / k,
       s"unbalanced quantizer: max cell $maxPop vs bound ${4.0 * n / k} (n=$n k=$k)")
   }
 
   test("fit is deterministic: a re-fit reproduces the staged index exactly") {
-    val first = queries.Pipeline.CellStage.load(spark, sf0001)
+    def index(k: Knobs) = Pipeline.CellStage.load(spark, sf0001)(k)
       .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "c")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getFloat(2))).toSet
-    // a fresh "JVM" (cleared staging map) against a fresh staging root
-    // re-runs the whole fit from scratch
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_refit")
-    sys.props("graft.shingleStageDir") = dir.toString
-    try {
-      queries.Pipeline.ShingleStage.resetForTest()
-      val second = queries.Pipeline.CellStage.load(spark, sf0001)
-        .select(col("cell"), posexplode(col("cv")).as(Seq("pos", "c")))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getFloat(2))).toSet
-      assert(first == second, "k-means fit is not deterministic")
-    } finally {
-      queries.Pipeline.ShingleStage.resetForTest()
-      sys.props -= "graft.shingleStageDir"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
+    val first = index(Knobs.jvm)
+    // a fresh staging root keys a fresh entry: the whole fit re-runs
+    withRoot("kmeans_refit") { k =>
+      assert(first == index(k), "k-means fit is not deterministic")
     }
   }
 
   test("two-level assignment scores O(sqrt(k)) cells per vector, not all k") {
     // pin a k large relative to n so the asymptotic claim is visible at
     // validation scale; a fresh staging root isolates the pinned index
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_twolevel")
-    sys.props("graft.shingleStageDir") = dir.toString
-    sys.props("graft.ivfCells") = "64"
-    try {
-      queries.Pipeline.ShingleStage.resetForTest()
-      val k = queries.Pipeline.CellStage.load(spark, sf001).count()
+    withRoot("kmeans_twolevel") { root =>
+      implicit val kn: Knobs = root.copy(ivfCells = Some(64))
+      val k = Pipeline.CellStage.load(spark, sf001).count()
       for (kTop <- Seq(1, 4)) {
-        val counts = queries.Pipeline.twoLevelScoredCounts(spark, sf001, kTop)
+        val counts = Pipeline.twoLevelScoredCounts(spark, sf001, kTop)
           .agg(max(col("n_scored")), avg(col("n_scored"))).collect()(0)
         val (maxScored, avgScored) = (counts.getInt(0), counts.getDouble(1))
         info(s"kTop=$kTop k=$k maxScored=$maxScored avgScored=$avgScored")
@@ -94,22 +93,15 @@ class KMeansCellsSpec extends SparkSpecBase {
         assert(maxScored < k,
           s"two-level must beat flat assignment: $maxScored vs k=$k")
       }
-    } finally {
-      queries.Pipeline.ShingleStage.resetForTest()
-      sys.props -= "graft.ivfCells"
-      sys.props -= "graft.shingleStageDir"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 
   test("super-cell count and coarse probe follow the integer rules") {
-    val skf = queries.Pipeline.superKFor _
+    implicit val k: Knobs = Knobs()
+    def skf(n: Long) = Pipeline.superKFor(n)
     assert(skf(16L) == 4 && skf(23L) == 5 && skf(45L) == 7)
     assert(skf(32000L) == 179) // ceil(sqrt(32000))
-    val sp = queries.Pipeline.superProbe _
+    val sp = Pipeline.superProbe _
     // small-k flat-probe rule: at k <= 25 scoring every cell fits the
     // 6*sqrt(k) budget outright (k + ks <= 6*sqrt(k)), so ALL supers are
     // probed and the descent equals flat assignment — recall-measured:
@@ -125,7 +117,8 @@ class KMeansCellsSpec extends SparkSpecBase {
   }
 
   test("p06 plane count tracks ~64 per bucket: np = max(2, ceil(log2(ceil(n/64))))") {
-    val np = queries.Pipeline.lshNumPlanes _
+    implicit val k: Knobs = Knobs()
+    def np(n: Long) = Pipeline.lshNumPlanes(n)
     assert(np(500L) == 3)      // 8 buckets, population ~62
     assert(np(2000L) == 5)     // 32 buckets
     assert(np(100000L) == 11)  // ceil(log2(ceil(1e5/64))) = ceil(log2(1563))
@@ -135,69 +128,47 @@ class KMeansCellsSpec extends SparkSpecBase {
     assert(np(64L * 1024 + 1) == 11)
   }
 
+  private def knob(name: String, v: String) = Knobs.from(Map(s"graft.$name" -> v))
+
   test("p37 table count: default 4, -Dgraft.lshTables clamped to the rendered pool") {
-    assert(queries.Pipeline.lshNumTables == 4)
-    try {
-      sys.props("graft.lshTables") = "2"
-      assert(queries.Pipeline.lshNumTables == 2)
-      sys.props("graft.lshTables") = "99" // capped: the oracle renders only lshMaxTables families
-      assert(queries.Pipeline.lshNumTables == queries.Pipeline.lshMaxTables)
-      sys.props("graft.lshTables") = "0"
-      assert(queries.Pipeline.lshNumTables == 1)
-    } finally sys.props.remove("graft.lshTables")
+    assert(Knobs().lshTables == 4)
+    assert(knob("lshTables", "2").lshTables == 2)
+    // capped: the oracle renders only lshMaxTables families
+    assert(knob("lshTables", "99").lshTables == Pipeline.lshMaxTables)
+    assert(knob("lshTables", "0").lshTables == 1)
   }
 
   test("sketch dials: defaults reproduce the frozen r8 families, knobs clamp") {
     // defaults: Bloom 2^16 bits / 4 probes, CMS 8192 wide / 4 deep
-    assert(queries.Pipeline.bloomLogBits == 16 && queries.Pipeline.bloomProbes == 4)
-    assert(queries.Pipeline.cmsLogWidth == 13 && queries.Pipeline.cmsDepth == 4)
-    try {
-      // sizes round DOWN to a power of two (positions are mask-extracted
-      // hash slices) and clamp to the documented ranges
-      sys.props("graft.bloomBits") = "100000" // 2^16 <= 100000 < 2^17
-      assert(queries.Pipeline.bloomLogBits == 16)
-      sys.props("graft.bloomBits") = "999999999999"
-      assert(queries.Pipeline.bloomLogBits == 24)
-      sys.props("graft.bloomBits") = "7"
-      assert(queries.Pipeline.bloomLogBits == 12)
-      sys.props("graft.bloomProbes") = "99"
-      assert(queries.Pipeline.bloomProbes == 8)
-      sys.props("graft.bloomProbes") = "0"
-      assert(queries.Pipeline.bloomProbes == 1)
-      sys.props("graft.cmsWidth") = "1048576000"
-      assert(queries.Pipeline.cmsLogWidth == 20)
-      sys.props("graft.cmsWidth") = "3"
-      assert(queries.Pipeline.cmsLogWidth == 8)
-      sys.props("graft.cmsDepth") = "99"
-      assert(queries.Pipeline.cmsDepth == 8)
-      sys.props("graft.cmsDepth") = "0"
-      assert(queries.Pipeline.cmsDepth == 1)
-    } finally Seq("graft.bloomBits", "graft.bloomProbes", "graft.cmsWidth",
-      "graft.cmsDepth").foreach(sys.props.remove)
+    assert(Knobs().bloomLogBits == 16 && Knobs().bloomProbes == 4)
+    assert(Knobs().cmsLogWidth == 13 && Knobs().cmsDepth == 4)
+    // sizes round DOWN to a power of two (positions are mask-extracted
+    // hash slices) and clamp to the documented ranges
+    assert(knob("bloomBits", "100000").bloomLogBits == 16) // 2^16 <= 100000 < 2^17
+    assert(knob("bloomBits", "999999999999").bloomLogBits == 24)
+    assert(knob("bloomBits", "7").bloomLogBits == 12)
+    assert(knob("bloomProbes", "99").bloomProbes == 8)
+    assert(knob("bloomProbes", "0").bloomProbes == 1)
+    assert(knob("cmsWidth", "1048576000").cmsLogWidth == 20)
+    assert(knob("cmsWidth", "3").cmsLogWidth == 8)
+    assert(knob("cmsDepth", "99").cmsDepth == 8)
+    assert(knob("cmsDepth", "0").cmsDepth == 1)
   }
 
   test("PQ dials: defaults 8 subspaces / 16 codes, knobs clamp") {
-    assert(queries.Pipeline.pqM == 8 && queries.Pipeline.pqK == 16)
-    try {
-      sys.props("graft.pqSubspaces") = "99"
-      assert(queries.Pipeline.pqM == 16)
-      sys.props("graft.pqSubspaces") = "0"
-      assert(queries.Pipeline.pqM == 1)
-      sys.props("graft.pqCodes") = "9999"
-      assert(queries.Pipeline.pqK == 256)
-      sys.props("graft.pqCodes") = "1"
-      assert(queries.Pipeline.pqK == 2)
-      assert(queries.Pipeline.pqRerank == 25)
-      sys.props("graft.pqRerank") = "1"
-      assert(queries.Pipeline.pqRerank == 5)
-      sys.props("graft.pqRerank") = "9999"
-      assert(queries.Pipeline.pqRerank == 500)
-    } finally Seq("graft.pqSubspaces", "graft.pqCodes", "graft.pqRerank")
-      .foreach(sys.props.remove)
+    assert(Knobs().pqM == 8 && Knobs().pqK == 16)
+    assert(knob("pqSubspaces", "99").pqM == 16)
+    assert(knob("pqSubspaces", "0").pqM == 1)
+    assert(knob("pqCodes", "9999").pqK == 256)
+    assert(knob("pqCodes", "1").pqK == 2)
+    assert(Knobs().pqRerank == 25)
+    assert(knob("pqRerank", "1").pqRerank == 5)
+    assert(knob("pqRerank", "9999").pqRerank == 500)
   }
 
   test("fit-sample rule: full corpus below max(p*k, 64p), bounded above it") {
-    val fs = queries.Pipeline.kmeansFitSample _
+    implicit val k: Knobs = Knobs()
+    def fs(n: Long, cells: Int) = Pipeline.kmeansFitSample(n, cells)
     assert(fs(500L, 23) == 500L)          // validation scale: full corpus
     assert(fs(5000L, 71) == 5000L)
     assert(fs(100000L, 317) == 81152L)    // 256*317
@@ -205,73 +176,37 @@ class KMeansCellsSpec extends SparkSpecBase {
   }
 
   test("sampled fit path (forced via kmeansFitPoints) still yields a full index") {
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_sampled")
-    sys.props("graft.shingleStageDir") = dir.toString
-    sys.props("graft.ivfCells") = "8"
-    sys.props("graft.kmeansFitPoints") = "4" // m = max(32, 256) = 256 < n
-    try {
-      queries.Pipeline.ShingleStage.resetForTest()
+    withRoot("kmeans_sampled") { root =>
+      // m = max(32, 256) = 256 < n
+      implicit val k: Knobs = root.copy(ivfCells = Some(8), kmeansFitPoints = 4L)
       val n = Tables.load(spark, sf001, "embeddings").count()
-      assert(queries.Pipeline.kmeansFitSample(n, 8) < n,
+      assert(Pipeline.kmeansFitSample(n, 8) < n,
         "test setup: sample must engage")
-      val cells = queries.Pipeline.CellStage.load(spark, sf001)
+      val cells = Pipeline.CellStage.load(spark, sf001)
       assert(cells.count() >= 4, "sampled fit lost most cells")
       // the index fitted on a sample must still assign EVERY vector
-      val assigned = SparkEntry.queries("p32_semdedup")(spark, sf001)
+      val assigned = SparkEntry.queriesFor(k)("p32_semdedup")(spark, sf001)
       assert(assigned.count() == n, "assignment must cover the full corpus")
-    } finally {
-      queries.Pipeline.ShingleStage.resetForTest()
-      sys.props -= "graft.kmeansFitPoints"
-      sys.props -= "graft.ivfCells"
-      sys.props -= "graft.shingleStageDir"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 
   test("index knobs partition the staging key: pinned-k and default coexist in one root") {
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_keys")
-    sys.props("graft.shingleStageDir") = dir.toString
-    try {
-      queries.Pipeline.ShingleStage.resetForTest()
-      val kDefault = queries.Pipeline.CellStage.load(spark, sf0001).count()
-      sys.props("graft.ivfCells") = "8"
-      // NO resetForTest: the changed knob alone must select a different
-      // staged table — a run must never read an index fitted with other
-      // parameters
-      val k8 = queries.Pipeline.CellStage.load(spark, sf0001).count()
+    withRoot("kmeans_keys") { k =>
+      val kDefault = Pipeline.CellStage.load(spark, sf0001)(k).count()
+      // the changed knob alone must select a different staged table — a
+      // run must never read an index fitted with other parameters
+      val k8 = Pipeline.CellStage.load(spark, sf0001)(k.copy(ivfCells = Some(8))).count()
       assert(kDefault >= 16 && k8 <= 8, s"$kDefault / $k8")
-      val staged = dir.toFile.listFiles().count(_.getName.startsWith("cl"))
+      val staged = new java.io.File(k.shingleStageDir.get).listFiles()
+        .count(_.getName.startsWith("cl"))
       assert(staged == 2, s"expected 2 distinct staged indexes, got $staged")
-    } finally {
-      queries.Pipeline.ShingleStage.resetForTest()
-      sys.props -= "graft.ivfCells"
-      sys.props -= "graft.shingleStageDir"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 
   test("-Dgraft.ivfCells pins the cell count") {
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_k8")
-    sys.props("graft.shingleStageDir") = dir.toString
-    sys.props("graft.ivfCells") = "8"
-    try {
-      queries.Pipeline.ShingleStage.resetForTest()
-      val cells = queries.Pipeline.CellStage.load(spark, sf0001).count()
+    withRoot("kmeans_k8") { k =>
+      val cells = Pipeline.CellStage.load(spark, sf0001)(k.copy(ivfCells = Some(8))).count()
       assert(cells <= 8 && cells >= 4, s"expected ~8 pinned cells, got $cells")
-    } finally {
-      queries.Pipeline.ShingleStage.resetForTest()
-      sys.props -= "graft.ivfCells"
-      sys.props -= "graft.shingleStageDir"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
     }
   }
 }

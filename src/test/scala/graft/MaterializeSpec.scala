@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The `-Dgraft.checkpointMode` dial: every mode must produce
+/** The `checkpointMode` knob: every mode must produce
   * bit-identical results (checkpointing changes plan shape, never
   * values), release must free exactly the handle's own storage, and the
   * durable modes must leave nothing pinned in the block manager — the
@@ -10,41 +10,31 @@ import org.apache.spark.sql.functions._
   * p85 under the 26-suite parallel load) was evicted localCheckpoint
   * blocks, which `reliable`/`stage` make impossible by construction.
   *
-  * Quarantined into its own forked test group (build.sbt): it mutates
-  * `graft.checkpointMode` mid-run, and although the dial is
-  * result-neutral, flipping storage modes under a concurrent suite's
-  * in-flight loop is exactly the cross-suite interaction the
-  * quarantine discipline exists to rule out. */
+  * Quarantined into its own forked test group (build.sbt): it asserts on
+  * the SparkContext's persistent-RDD set, which every concurrently
+  * running suite adds to and removes from. */
 class MaterializeSpec extends SparkSpecBase {
 
-  private def withMode[A](m: String)(body: => A): A = {
-    val prev = sys.props.get("graft.checkpointMode")
-    sys.props("graft.checkpointMode") = m
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.checkpointMode") = v
-      case None => sys.props.remove("graft.checkpointMode"); ()
-    }
-  }
+  private def withMode[A](m: String)(body: Knobs => A): A =
+    body(Knobs.jvm.copy(checkpointMode = m))
 
   test("mode parsing: durable names resolve, anything else is local") {
-    withMode("reliable") { assert(Materialize.mode == "reliable") }
-    withMode(" Stage ") { assert(Materialize.mode == "stage") }
-    withMode("durable-ish") { assert(Materialize.mode == "local") }
-    val prev = sys.props.remove("graft.checkpointMode")
-    try assert(Materialize.mode == "local")
-    finally prev.foreach(v => sys.props("graft.checkpointMode") = v.toString)
+    def mode(v: String) = Knobs.from(Map("graft.checkpointMode" -> v)).checkpointMode
+    assert(mode("reliable") == "reliable")
+    assert(mode(" Stage ") == "stage")
+    assert(mode("durable-ish") == "local")
+    assert(Knobs.from(Map.empty[String, String]).checkpointMode == "local")
   }
 
   test("p85/p20 (the AuditFamilySpec-class consumers) are bit-equal across all three modes") {
     // p85 rides the jsOrderedSums shared front (the exact site of the
     // r13 on-disk failure); p20 rides the CC loop.
-    def run(name: String): Set[String] =
-      SparkEntry.queries(name)(spark, sf0001).collect()
+    def run(name: String)(k: Knobs): Set[String] =
+      SparkEntry.queriesFor(k)(name)(spark, sf0001).collect()
         .map(_.toSeq.map(String.valueOf).mkString("|")).toSet
     for (name <- Seq("p85_source_divergence", "p20_dedup_clusters")) {
       val byMode = Seq("local", "reliable", "stage")
-        .map(m => m -> withMode(m) { run(name) }).toMap
+        .map(m => m -> withMode(m)(run(name))).toMap
       assert(byMode("reliable") == byMode("local"),
         s"$name: reliable != local")
       assert(byMode("stage") == byMode("local"), s"$name: stage != local")
@@ -53,7 +43,7 @@ class MaterializeSpec extends SparkSpecBase {
   }
 
   test("local: release unpersists exactly the handle's RDD, not a concurrent handle's") {
-    withMode("local") {
+    withMode("local") { implicit k =>
       import spark.implicits._
       val sc = spark.sparkContext
       val h1 = Materialize.tracked((1 to 100).toDF("x"), "t1")
@@ -69,7 +59,7 @@ class MaterializeSpec extends SparkSpecBase {
   }
 
   test("reliable: no block-manager pinning; files exist until release") {
-    withMode("reliable") {
+    withMode("reliable") { implicit k =>
       import spark.implicits._
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
@@ -83,7 +73,7 @@ class MaterializeSpec extends SparkSpecBase {
   }
 
   test("stage: parquet round-trip; release deletes the staged copy") {
-    withMode("stage") {
+    withMode("stage") { implicit k =>
       import spark.implicits._
       val h = Materialize.tracked(
         (1 to 50).toDF("x").withColumn("s", concat(lit("v"), $"x")), "t4")
@@ -102,7 +92,7 @@ class MaterializeSpec extends SparkSpecBase {
     // carry the schema, not fail inference on a part-less directory
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    for (m <- Seq("local", "reliable", "stage")) withMode(m) {
+    for (m <- Seq("local", "reliable", "stage")) withMode(m) { implicit k =>
       val empty = (1 to 10).toDF("x").filter($"x" > 100)
         .groupBy($"x").agg(count(lit(1)).as("n"))
       val h = Materialize.tracked(empty, "empty")
@@ -115,7 +105,7 @@ class MaterializeSpec extends SparkSpecBase {
   test("an iterative consumer releasing per round survives the durable mode") {
     // kmeansRounds-shaped loop: round i+1 built from round i's
     // materialization, previous handle released each round.
-    withMode("reliable") {
+    withMode("reliable") { implicit k =>
       import spark.implicits._
       var cur = Materialize.tracked((1L to 64L).toDF("v"), "loop")
       for (_ <- 1 to 5) {

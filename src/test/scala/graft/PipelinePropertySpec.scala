@@ -12,6 +12,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * an independent plain-Scala evaluation.
   */
 class PipelinePropertySpec extends SparkSpecBase {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   private def check(prop: Prop, cases: Int = 10): Unit = {
     val result = SCTest.check(
@@ -68,8 +69,8 @@ class PipelinePropertySpec extends SparkSpecBase {
 
   test("chunk windows tile every token: stride-aligned starts, full coverage, no overflow") {
     import spark.implicits._
-    val c = queries.Pipeline.chunkTokens
-    val st = queries.Pipeline.chunkStride
+    val c = knobs.chunkTokens
+    val st = knobs.chunkStride
     check(Prop.forAll(batch) { texts =>
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")

@@ -53,7 +53,7 @@ trait PlainScalaFixtures { this: SparkSpecBase =>
   /** The whole LR fit re-derived in plain Scala: hashed features,
     * integer-scaled tf, lrIters (12) rounds of integer-state GD. */
   protected lazy val lrFit: (Map[Long, Long], Seq[(Long, Int, Long)]) = {
-    val b = queries.Pipeline.dsirBuckets
+    val b = Knobs.jvm.dsirBuckets
     val eta = queries.Pipeline.lrEtaAt _
     def feats(text: String): Array[Long] =
       toks(text).map(w => md560(w) % b) ++

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * failure mode these tests catch.
   */
 class PlanAssertionsSpec extends AnyFunSuite {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   private lazy val spark = GraftSession.local(4)
   private val dir = "/root/testdata/sf0.001"
@@ -438,18 +439,15 @@ class PlanAssertionsSpec extends AnyFunSuite {
     // LOGICAL plan must carry no broadcast hint on the front (AQE may
     // still pick a broadcast at runtime from real sizes — that is the
     // point: the decision moves from a forced hint to measured sizes).
-    // Plan-shape-only dial: result-neutral for concurrent suites.
     val base = SparkEntry.queries("p91_edit_similarity")(spark, dir)
     val baseRows = base.collect().map(_.toString).sorted.toSeq
     assert(base.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
       "default plan should hint the bounded front broadcast")
-    sys.props("graft.broadcastFrontMaxRows") = "0"
-    try {
-      val capped = SparkEntry.queries("p91_edit_similarity")(spark, dir)
-      assert(!capped.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
-        "over-cap plan must not force a broadcast of a corpus-property front")
-      assert(capped.collect().map(_.toString).sorted.toSeq == baseRows)
-    } finally { sys.props.remove("graft.broadcastFrontMaxRows"); () }
+    val capped = SparkEntry.queriesFor(Knobs.jvm.copy(broadcastFrontMaxRows = 0L))(
+      "p91_edit_similarity")(spark, dir)
+    assert(!capped.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
+      "over-cap plan must not force a broadcast of a corpus-property front")
+    assert(capped.collect().map(_.toString).sorted.toSeq == baseRows)
   }
 
   test("p109/p110 batch readbacks: the watermark is eliminated, one hourly aggregation") {

@@ -5,6 +5,7 @@ package graft
   * regression is pinpointed by name.
   */
 class QueriesSmokeSpec extends SparkSpecBase {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs on sf0.001") {
@@ -24,8 +25,7 @@ class QueriesSmokeSpec extends SparkSpecBase {
   }
 
   test("p63b band/hamming dials are live, clamped, and monotone") {
-    // explicit-dial plans: no sys.props mutation, so concurrently
-    // running suites can never observe a temporary dial value
+    // explicit-dial plans over the one staged image hash
     def pairs(nb: Int = 4, ham: Int = 6): Long =
       queries.Pipeline.imageNearDupPlan(spark, sf0001, nb, ham).count()
     val base = pairs()
@@ -38,17 +38,10 @@ class QueriesSmokeSpec extends SparkSpecBase {
     val loose = pairs(nb = 8)
     val tight = pairs(nb = 2)
     assert(tight <= base && base <= loose, s"$tight <= $base <= $loose")
-    // dial parsing clamps: invalid values fall back to the defaults (safe
-    // to set here — an observer parsing mid-test reads the default value)
-    try {
-      sys.props("graft.imageBands") = "7"
-      sys.props("graft.imageHamming") = "not-a-number"
-      assert(queries.Pipeline.imageBands == 4)
-      assert(queries.Pipeline.imageHamming == 6)
-    } finally {
-      sys.props.remove("graft.imageHamming")
-      sys.props.remove("graft.imageBands")
-    }
+    // dial parsing clamps: invalid values fall back to the defaults
+    val k = Knobs.from(Map("graft.imageBands" -> "7", "graft.imageHamming" -> "not-a-number"))
+    assert(k.imageBands == 4)
+    assert(k.imageHamming == 6)
   }
 
   test("p39 estimate is exactly the estimator applied to p39b's registers") {
@@ -69,8 +62,8 @@ class QueriesSmokeSpec extends SparkSpecBase {
 
   test("p41/p41b/p42 are three views of ONE PQ state: codes are dense, " +
       "complete, and p42's scores recompute from the pinned artifacts") {
-    val m = queries.Pipeline.pqM
-    val kp = queries.Pipeline.pqK
+    val m = knobs.pqM
+    val kp = knobs.pqK
     val cb = SparkEntry.queries("p41_pq_codebook")(spark, sf0001).collect()
       .map(r => ((r.getInt(0), r.getInt(1)), (r.getInt(2), r.getDouble(3))))
     // codebook codes are dense 0..<k' per subspace, every code has the
@@ -129,21 +122,17 @@ class QueriesSmokeSpec extends SparkSpecBase {
     // default-dial answer exactly
     val base = SparkEntry.queries("p38_contamination_bloom")(spark, sf0001)
       .collect().map(_.toSeq).toSeq
-    try {
-      sys.props("graft.bloomBits") = "4096" // 16x the false-positive mass
-      sys.props("graft.bloomProbes") = "2"
-      val coarse = SparkEntry.queries("p38_contamination_bloom")(spark, sf0001)
-        .collect().map(_.toSeq).toSeq
-      assert(coarse == base, "Bloom prescreen must be result-invariant at any dial")
-      // the CMS estimate must dominate the exact count at any dial (the
-      // sketch's one-sided error guarantee), including a narrow noisy one
-      sys.props("graft.cmsWidth") = "1024"
-      sys.props("graft.cmsDepth") = "2"
-      val cms = SparkEntry.queries("p40_bigram_cms")(spark, sf0001).collect()
-      assert(cms.nonEmpty && cms.forall(_.getAs[Long]("overcount") >= 0L),
-        "CMS estimate must be >= the exact count at any dial")
-    } finally Seq("graft.bloomBits", "graft.bloomProbes", "graft.cmsWidth",
-      "graft.cmsDepth").foreach(sys.props.remove)
+    // 2^12 bits: 16x the false-positive mass
+    val coarseKnobs = Knobs.jvm.copy(bloomLogBits = 12, bloomProbes = 2)
+    val coarse = SparkEntry.queriesFor(coarseKnobs)("p38_contamination_bloom")(spark, sf0001)
+      .collect().map(_.toSeq).toSeq
+    assert(coarse == base, "Bloom prescreen must be result-invariant at any dial")
+    // the CMS estimate must dominate the exact count at any dial (the
+    // sketch's one-sided error guarantee), including a narrow noisy one
+    val narrow = Knobs.jvm.copy(cmsLogWidth = 10, cmsDepth = 2)
+    val cms = SparkEntry.queriesFor(narrow)("p40_bigram_cms")(spark, sf0001).collect()
+    assert(cms.nonEmpty && cms.forall(_.getAs[Long]("overcount") >= 0L),
+      "CMS estimate must be >= the exact count at any dial")
   }
 
   test("BPE merge rule: left-to-right non-overlap, boundary-safe, lexicographic ties") {
@@ -173,12 +162,8 @@ class QueriesSmokeSpec extends SparkSpecBase {
     val tb = queries.Pipeline.bpeBest(queries.Pipeline.bpePairs(tie)).collect()(0)
     assert((tb.getString(0), tb.getString(1)) == ("a", "b"), tb.toString)
     // dial clamps
-    sys.props("graft.bpeMerges") = "99"
-    try assert(queries.Pipeline.bpeMerges == 12)
-    finally sys.props.remove("graft.bpeMerges")
-    sys.props("graft.bpeMerges") = "0"
-    try assert(queries.Pipeline.bpeMerges == 1)
-    finally sys.props.remove("graft.bpeMerges")
+    assert(Knobs.from(Map("graft.bpeMerges" -> "99")).bpeMerges == 12)
+    assert(Knobs.from(Map("graft.bpeMerges" -> "0")).bpeMerges == 1)
   }
 
   test("p48c fertility: >= 1 everywhere, word total matches the corpus filter, " +
@@ -250,7 +235,7 @@ class QueriesSmokeSpec extends SparkSpecBase {
     val top = SparkEntry.queries("p60_chunk_bm25")(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
     assert(top.length == 50)
-    val c = queries.Pipeline.chunkTokens
+    val c = knobs.chunkTokens
     top.foreach { case (id, no, nTok, score) =>
       assert(nTok >= 1 && nTok <= c, s"doc $id chunk $no")
       assert(score > 0.0, "a top-50 chunk must match at least one term")
@@ -288,9 +273,9 @@ class QueriesSmokeSpec extends SparkSpecBase {
     Seq((1L, "low low low lower lower X9 -"), (2L, "low lowest"))
       .toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    sys.props("graft.bpeMerges") = "3"
+    val q = SparkEntry.queriesFor(Knobs.jvm.copy(bpeMerges = 3))
     try {
-      val merges = SparkEntry.queries("p48_bpe_merges")(spark, dir.toString)
+      val merges = q("p48_bpe_merges")(spark, dir.toString)
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       // words: low x4, lower x2, lowest x1
       // round 1 pairs: (l,o)=7, (o,w)=7 ... tie -> (l,o) wins
@@ -299,13 +284,12 @@ class QueriesSmokeSpec extends SparkSpecBase {
       assert(merges(1) == ((2, "lo", "w", 7L)), merges.mkString("; "))
       // round 3: (low,e)=3 (lower x2 + lowest x1)
       assert(merges(2) == ((3, "low", "e", 3L)), merges.mkString("; "))
-      val tok = SparkEntry.queries("p48b_bpe_tokenize")(spark, dir.toString)
+      val tok = q("p48b_bpe_tokenize")(spark, dir.toString)
         .collect().map(r => r.getString(0) -> r.getString(2)).toMap
       assert(tok("low") == "low", tok.toString)
       assert(tok("lower") == "lowe r", tok.toString)
       assert(tok("lowest") == "lowe s t", tok.toString)
     } finally {
-      sys.props.remove("graft.bpeMerges")
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
@@ -320,16 +304,15 @@ class QueriesSmokeSpec extends SparkSpecBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_bpe_dry")
     Seq((1L, "ab cd ab")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    sys.props("graft.bpeMerges") = "6"
+    val q = SparkEntry.queriesFor(Knobs.jvm.copy(bpeMerges = 6))
     try {
-      val merges = SparkEntry.queries("p48_bpe_merges")(spark, dir.toString)
+      val merges = q("p48_bpe_merges")(spark, dir.toString)
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       assert(merges.toSeq == Seq((1, "a", "b"), (2, "c", "d")), merges.mkString("; "))
-      val tok = SparkEntry.queries("p48b_bpe_tokenize")(spark, dir.toString)
+      val tok = q("p48b_bpe_tokenize")(spark, dir.toString)
         .collect().map(r => r.getString(0) -> r.getString(2)).toMap
       assert(tok == Map("ab" -> "ab", "cd" -> "cd"), tok.toString)
     } finally {
-      sys.props.remove("graft.bpeMerges")
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
@@ -345,10 +328,9 @@ class QueriesSmokeSpec extends SparkSpecBase {
     Seq((1L, words, "web"), (2L, words, "web"), (3L, "a b c", "books"))
       .toDF("doc_id", "text", "source")
       .write.parquet(s"$dir/documents.parquet")
-    sys.props("graft.chunkTokens") = "10"
-    sys.props("graft.chunkStride") = "8"
+    val q = SparkEntry.queriesFor(Knobs.jvm.copy(chunkTokens = 10, chunkStride = 8))
     try {
-      val rows = SparkEntry.queries("p50_chunk_windows")(spark, dir.toString)
+      val rows = q("p50_chunk_windows")(spark, dir.toString)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
           r.getString(4)))
       val d1 = rows.filter(_._1 == 1L)
@@ -363,17 +345,15 @@ class QueriesSmokeSpec extends SparkSpecBase {
       val d3 = rows.filter(_._1 == 3L)
       assert(d3.length == 1 && d3.head._4 == 3, d3.toSeq.toString)
       // dedup stats: web's chunks are fully duplicated pairwise
-      val stats = SparkEntry.queries("p50b_chunk_dedup_stats")(spark, dir.toString)
+      val stats = q("p50b_chunk_dedup_stats")(spark, dir.toString)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
       assert(stats("web") == ((26L, 13L, 0.5)), stats.toString)
       assert(stats("books") == ((1L, 1L, 0.0)), stats.toString)
       // stride clamps to the window (no token ever skipped)
-      sys.props("graft.chunkStride") = "999"
-      assert(graft.queries.Pipeline.chunkStride ==
-        graft.queries.Pipeline.chunkTokens)
+      val wide = Knobs.from(Map("graft.chunkTokens" -> "10", "graft.chunkStride" -> "999"))
+      assert(wide.chunkStride == wide.chunkTokens)
     } finally {
-      Seq("graft.chunkTokens", "graft.chunkStride").foreach(sys.props.remove)
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }
@@ -421,22 +401,22 @@ class QueriesSmokeSpec extends SparkSpecBase {
     // the guard moved to the TruthStage build (p00g): a committed staged
     // truth table reads freely (that's the point of staging), so force a
     // fresh staging root to exercise the build path
-    sys.props("graft.exactBaselineMaxRows") = "10"
     val freshRoot = java.nio.file.Files.createTempDirectory("graft_guard_probe")
-    sys.props("graft.shingleStageDir") = freshRoot.toString
-    graft.queries.Pipeline.ShingleStage.resetForTest()
+    val q = SparkEntry.queriesFor(Knobs.jvm.copy(exactBaselineMaxRows = 10L,
+      shingleStageDir = Some(freshRoot.toString)))
     try {
       Seq("p05_knn_exact", "p14_embedding_neardup").foreach { name =>
         val e = intercept[IllegalStateException] {
-          SparkEntry.queries(name)(spark, sf0001).count()
+          q(name)(spark, sf0001).count()
         }
         assert(e.getMessage.contains("exact all-pairs baseline"), e.getMessage)
         assert(e.getMessage.contains("p06_knn_lsh"), e.getMessage)
       }
     } finally {
-      sys.props.remove("graft.exactBaselineMaxRows")
-      sys.props.remove("graft.shingleStageDir")
-      graft.queries.Pipeline.ShingleStage.resetForTest()
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(freshRoot.toFile)
     }
   }
 }

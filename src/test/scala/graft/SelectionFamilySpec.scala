@@ -11,6 +11,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
   * DataFrame plans breaks this suite even without the DuckDB oracle.
   */
 class SelectionFamilySpec extends SparkSpecBase with PlainScalaFixtures {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   test("p52: every row equals the plain-Scala Gopher metrics") {
     val got = SparkEntry.queries("p52_gopher_rules")(spark, sf0001).collect()
@@ -70,7 +71,7 @@ class SelectionFamilySpec extends SparkSpecBase with PlainScalaFixtures {
   }
 
   test("p54: weights and selection equal the plain-Scala DSIR computation") {
-    val b = queries.Pipeline.dsirBuckets
+    val b = knobs.dsirBuckets
     def feats(text: String): Array[Long] =
       toks(text).map(w => md560(w) % b) ++
         bigrams(text).map(p => md560(p._1 + " " + p._2) % b)

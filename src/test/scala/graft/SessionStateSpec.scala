@@ -4,13 +4,11 @@ import java.nio.file.Files
 import graft.emulator._
 import graft.stage.StageManager
 
-/** Tests that observe or mutate PROCESS-WIDE session state — the
-  * persistent-block accounting of the shared SparkContext and the
-  * `graft.maxResultRows` protocol cap — quarantined into their own
-  * forked JVM (see `Test / testGrouping` in build.sbt) so the main
-  * test group can run its suites concurrently: a foreign suite
-  * pinning blocks mid-measurement, or a capped result limit observed
-  * by a concurrently executing Executor, would fail spuriously. */
+/** Tests that observe PROCESS-WIDE session state — the persistent-block
+  * accounting of the shared SparkContext — quarantined into their own
+  * forked JVM (see `Test / testGrouping` in build.sbt) so the main test
+  * group can run its suites concurrently: a foreign suite pinning blocks
+  * mid-measurement would fail the leak check spuriously. */
 class SessionStateSpec extends SparkSpecBase {
 
   test("p35 releases its persisted truth sets (no pinned blocks leak)") {
@@ -25,26 +23,22 @@ class SessionStateSpec extends SparkSpecBase {
   }
 
   test("protocol-edge result cap: oversized SELECT fails cleanly, capped fetch") {
-    val executor = {
-      val catalog = new Catalog(spark)
-      new Executor(catalog,
-        new StageManager(Files.createTempDirectory("graft_stages")),
-        new WarehouseManager(), new QueryHistory())
-    }
+    val catalog = new Catalog(spark)
+    def executor(knobs: Knobs) = new Executor(catalog,
+      new StageManager(Files.createTempDirectory("graft_stages")),
+      new WarehouseManager(), new QueryHistory(), knobs)
+    val capped = executor(Knobs.jvm.copy(maxResultRows = 10))
     val ctx = Executor.Context("sess_cap", "CAP_DB", "PUBLIC")
-    def exec(sql: String) = executor.execute(ctx, sql, Map.empty)
-    executor.catalog.createDatabase("CAP_DB")
+    def exec(sql: String, e: Executor = capped) = e.execute(ctx, sql, Map.empty)
+    catalog.createDatabase("CAP_DB")
     exec("CREATE OR REPLACE TABLE cap_t AS SELECT id AS v FROM range(100)")
-    sys.props("graft.maxResultRows") = "10"
-    try {
-      val e = intercept[SnowflakeError] { exec("SELECT * FROM cap_t") }
-      assert(e.code == SnowflakeError.CodeSQLExecutionError, e.getMessage)
-      assert(e.getMessage.contains("maximum of 10 rows"), e.getMessage)
-      // within the cap still works, including exactly-at-cap
-      assert(exec("SELECT * FROM cap_t LIMIT 10").rows.size == 10)
-      assert(exec("SELECT COUNT(*) AS n FROM cap_t").rows.head.head == 100L)
-    } finally sys.props.remove("graft.maxResultRows")
-    // default cap restored: the full table materializes again
-    assert(exec("SELECT * FROM cap_t").rows.size == 100)
+    val e = intercept[SnowflakeError] { exec("SELECT * FROM cap_t") }
+    assert(e.code == SnowflakeError.CodeSQLExecutionError, e.getMessage)
+    assert(e.getMessage.contains("maximum of 10 rows"), e.getMessage)
+    // within the cap still works, including exactly-at-cap
+    assert(exec("SELECT * FROM cap_t LIMIT 10").rows.size == 10)
+    assert(exec("SELECT COUNT(*) AS n FROM cap_t").rows.head.head == 100L)
+    // an executor on the default cap materializes the full table
+    assert(exec("SELECT * FROM cap_t", executor(Knobs.jvm)).rows.size == 100)
   }
 }

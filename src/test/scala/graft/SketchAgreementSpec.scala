@@ -4,12 +4,10 @@ package graft
   * histogram-sketch side of the agreement entries alone — identical
   * schema, identical sketch-side values, agreement columns NULL — and
   * the default must remain the full in-row agreement measurement the
-  * DuckDB oracle mirrors.
-  *
-  * Quarantined into its own forked test group (build.sbt): unlike the
-  * plan-shape dials, `off` CHANGES RESULT VALUES of p53c/p55c/p87c/
-  * p90b, so flipping it under a concurrently running suite that
-  * evaluates those entries would corrupt that suite's assertions. */
+  * DuckDB oracle mirrors. `off` CHANGES RESULT VALUES of p53c/p55c/
+  * p87c/p90b, so it is tested on an inventory of its own
+  * (`SparkEntry.queriesFor`), which leaves the JVM's inventory — and
+  * every suite running beside this one — untouched. */
 class SketchAgreementSpec extends SparkSpecBase {
 
   /** (entry, sketch-side columns, agreement columns). */
@@ -22,19 +20,14 @@ class SketchAgreementSpec extends SparkSpecBase {
     ("p90b_fusion_sketch", Seq("cut_bucket", "n_kept_sketch", "nd"),
       Seq("n_kept_exact", "n_agree")))
 
-  private def withOff[A](body: => A): A = {
-    sys.props("graft.sketchAgreement") = "off"
-    try body finally { sys.props.remove("graft.sketchAgreement"); () }
-  }
+  private lazy val off = SparkEntry.queriesFor(Knobs.jvm.copy(sketchAgreement = false))
 
   test("off: same schema, same sketch values, NULL agreement columns") {
     for ((name, sketchCols, agreeCols) <- entries) {
       val on = SparkEntry.queries(name)(spark, sf0001)
       val onRows = on.collect()
-      val (offSchema, offRows) = withOff {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        (df.schema, df.collect())
-      }
+      val offDf = off(name)(spark, sf0001)
+      val (offSchema, offRows) = (offDf.schema, offDf.collect())
       assert(offSchema == on.schema, s"$name: schema drifted with the dial off")
       def proj(rows: Array[org.apache.spark.sql.Row], cols: Seq[String]) =
         rows.map(r => cols.map(c => String.valueOf(r.get(r.fieldIndex(c))))
@@ -50,10 +43,9 @@ class SketchAgreementSpec extends SparkSpecBase {
   }
 
   test("a malformed dial value behaves as on") {
-    sys.props("graft.sketchAgreement") = "offf"
-    try {
-      val rows = SparkEntry.queries("p55c_lr_select_sketch")(spark, sf0001).collect()
-      assert(rows.forall(r => !r.isNullAt(r.fieldIndex("n_agree"))))
-    } finally { sys.props.remove("graft.sketchAgreement"); () }
+    val k = Knobs.from(sys.props.toMap + ("graft.sketchAgreement" -> "offf"))
+    assert(k.sketchAgreement)
+    val rows = SparkEntry.queriesFor(k)("p55c_lr_select_sketch")(spark, sf0001).collect()
+    assert(rows.forall(r => !r.isNullAt(r.fieldIndex("n_agree"))))
   }
 }

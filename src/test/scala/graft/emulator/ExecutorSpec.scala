@@ -714,6 +714,16 @@ class ExecutorSpec extends AnyFunSuite {
     assert(j.rows.map(_.head) == Seq(0L, 1L, 2L), j.rows)
   }
 
+  test("43b GENERATOR feeds INSERT ... SELECT and CTAS") {
+    exec("CREATE TABLE gen_ins (id INTEGER, v INTEGER)")
+    val ins = exec(
+      "INSERT INTO gen_ins SELECT SEQ4(), SEQ4() * 2 FROM TABLE(GENERATOR(ROWCOUNT => 50))")
+    assert(ins.rowsAffected.contains(50L), ins)
+    assert(exec("SELECT SUM(v) AS s FROM gen_ins").rows.head.head == 2450L)
+    exec("CREATE TABLE gen_ctas AS SELECT SEQ8() AS id FROM TABLE(GENERATOR(ROWCOUNT => 7))")
+    assert(exec("SELECT COUNT(*), MAX(id) FROM gen_ctas").rows.head == Seq(7L, 6L))
+  }
+
   test("44 SPLIT_TO_TABLE, PIVOT and UNPIVOT") {
     exec("CREATE TABLE stt_t (id INTEGER, csv VARCHAR(50))")
     exec("INSERT INTO stt_t VALUES (1, 'a,b,c'), (2, 'x,y')")

@@ -23,7 +23,8 @@ class EmulatorServerSpec extends AnyFunSuite {
   private lazy val base = s"http://127.0.0.1:${server.actualPort}"
   private val client = HttpClient.newHttpClient()
 
-  private def post(path: String, body: String, headers: Seq[(String, String)] = Nil) = {
+  private def post(path: String, body: String, headers: Seq[(String, String)] = Nil,
+      base: String = base) = {
     val b = HttpRequest.newBuilder(URI.create(base + path))
       .POST(HttpRequest.BodyPublishers.ofString(body))
       .header("Content-Type", "application/json")
@@ -32,25 +33,40 @@ class EmulatorServerSpec extends AnyFunSuite {
     (resp.statusCode(), mapper.readTree(resp.body()))
   }
 
-  private def get(path: String, headers: Seq[(String, String)] = Nil) = {
+  private def get(path: String, headers: Seq[(String, String)] = Nil,
+      base: String = base) = {
     val b = HttpRequest.newBuilder(URI.create(base + path)).GET()
     headers.foreach { case (k, v) => b.header(k, v) }
     val resp = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), mapper.readTree(resp.body()))
   }
 
-  private lazy val token: String = {
+  private def login(base: String): String = {
     val (_, body) = post(
       "/session/v1/login-request?databaseName=TEST_DB&schemaName=PUBLIC",
-      """{"data":{"LOGIN_NAME":"tester","PASSWORD":"anything"}}""")
+      """{"data":{"LOGIN_NAME":"tester","PASSWORD":"anything"}}""", base = base)
     assert(body.get("success").asBoolean())
     body.get("data").get("token").asText()
   }
+  private lazy val token: String = login(base)
   private def auth = Seq("Authorization" -> s"""Snowflake Token="$token"""")
 
-  private def query(sql: String) = {
+  private def query(sql: String, auth: => Seq[(String, String)] = auth, base: String = base) = {
     val sqlEsc = sql.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ")
-    post("/queries/v1/query-request", s"""{"sqlText":"$sqlEsc"}""", auth)
+    post("/queries/v1/query-request", s"""{"sqlText":"$sqlEsc"}""", auth, base)
+  }
+
+  /** A second server over the same Spark session whose executor runs on
+    * `knobs`, stopped after `body` (given its base URL). */
+  private def withServer(knobs: graft.Knobs)(body: String => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft_stages")
+    val ex = new graft.emulator.Executor(new graft.emulator.Catalog(server.executor.catalog.spark),
+      new graft.stage.StageManager(root), new graft.emulator.WarehouseManager(),
+      new graft.emulator.QueryHistory(), knobs)
+    val s = new EmulatorServer(ex, new graft.emulator.SessionManager(),
+      new graft.emulator.StatementManager(), ownedStageRoot = Some(root))
+    s.start()
+    try body(s"http://127.0.0.1:${s.actualPort}") finally s.stop()
   }
 
   test("health endpoint") {
@@ -128,8 +144,9 @@ class EmulatorServerSpec extends AnyFunSuite {
   }
 
   test("oversized result fails cleanly over the wire instead of OOMing the server") {
-    sys.props("graft.maxResultRows") = "50"
-    try {
+    withServer(graft.Knobs.jvm.copy(maxResultRows = 50)) { base =>
+      val auth = Seq("Authorization" -> s"""Snowflake Token="${login(base)}"""")
+      def query(sql: String) = this.query(sql, auth, base)
       val (code, body) = query("SELECT id FROM range(1000)")
       assert(code == 200) // errors ride HTTP 200 in this protocol
       assert(!body.get("success").asBoolean())
@@ -139,7 +156,7 @@ class EmulatorServerSpec extends AnyFunSuite {
       val (_, ok) = query("SELECT id FROM range(1000) LIMIT 50")
       assert(ok.get("success").asBoolean())
       assert(ok.get("data").get("rowset").size() == 50)
-    } finally sys.props.remove("graft.maxResultRows")
+    }
   }
 
   test("unauthorized query rejected with session error") {
@@ -263,8 +280,9 @@ class EmulatorServerSpec extends AnyFunSuite {
   }
 
   test("REST v2: large result pages by partition (partitionInfo + ?partition=N)") {
-    sys.props("graft.resultPartitionRows") = "10"
-    try {
+    withServer(graft.Knobs.jvm.copy(resultPartitionRows = 10)) { base =>
+      def post(path: String, body: String) = this.post(path, body, base = base)
+      def get(path: String) = this.get(path, base = base)
       val (_, sub) = post("/api/v2/statements",
         """{"statement":"SELECT seq4() AS n FROM TABLE(GENERATOR(ROWCOUNT => 25)) ORDER BY n","database":"TEST_DB"}""")
       assert(sub.get("code").asText() == "090001", sub)
@@ -293,7 +311,7 @@ class EmulatorServerSpec extends AnyFunSuite {
       val (_, small) = post("/api/v2/statements",
         """{"statement":"SELECT 1 AS one","database":"TEST_DB"}""")
       assert(small.get("resultSetMetaData").get("partitionInfo").size() == 1)
-    } finally sys.props.remove("graft.resultPartitionRows")
+    }
   }
 
   test("REST v2: COPY unload + reload round-trip over the wire") {
@@ -439,6 +457,53 @@ class EmulatorServerSpec extends AnyFunSuite {
       qid = s.get("data").get("queryId").asText()
     }
     assert(qid.nonEmpty && groups.contains(qid), s"queryId $qid, job groups $groups")
+  }
+
+  test("abort-request cancels a running gosnowflake statement; the session then works") {
+    val sc = server.executor.catalog.spark.sparkContext
+    val requestId = java.util.UUID.randomUUID().toString
+    val marker = s"slow_${requestId.take(8)}"
+    // ~25 s of task time on 4 cores: 2000 rows sleeping 50 ms each (the
+    // row-dependent argument keeps the call from being constant-folded)
+    val slowSql = s"SELECT COUNT(z) AS $marker FROM (SELECT reflect('java.lang.Thread', " +
+      "'sleep', CAST(50 + id * 0 AS BIGINT)) AS z FROM range(0, 2000, 1, 4))"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(e.properties).map(_.toString).getOrElse("")
+        seen.add(d)
+        if (d.contains(marker)) started.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val t0 = System.nanoTime()
+      val slow = pool.submit(() => post(s"/queries/v1/query-request?requestId=$requestId",
+        s"""{"sqlText":"$slowSql"}""", auth))
+      if (!started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        fail(s"slow job never started: ${if (slow.isDone) slow.get()._2 else "pending"} $seen")
+      val (code, ab) = post("/queries/v1/abort-request",
+        s"""{"sqlText":"$slowSql","requestId":"$requestId"}""", auth)
+      assert(code == 200 && ab.get("success").asBoolean(), ab)
+      val (_, body) = slow.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(!body.get("success").asBoolean(), body)
+      assert(body.get("code").asText() == "000604", body)
+      assert(body.get("data").get("sqlState").asText() == "57014", body)
+      assert(secs < 20, s"the aborted statement ran its course: $secs s")
+      val (_, ok) = query("SELECT 1")
+      assert(ok.get("success").asBoolean(), ok)
+      assert(ok.get("data").get("rowset").get(0).get(0).asText() == "1")
+      // an abort of a finished or unknown request is a harmless no-op
+      val (_, again) = post("/queries/v1/abort-request",
+        s"""{"requestId":"$requestId"}""", auth)
+      assert(again.get("success").asBoolean())
+    } finally {
+      pool.shutdown()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("concurrent sessions over real sockets: isolated DDL/DML + serialized shared-table writes") {

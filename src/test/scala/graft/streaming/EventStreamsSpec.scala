@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Knobs
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Streaming semantics through real micro-batch execution: MemoryStream
   * source -> windowed agg / stateful sessionization -> memory sink. */
 class EventStreamsSpec extends AnyFunSuite {
+  private implicit val knobs: Knobs = Knobs.jvm
 
   private lazy val spark = graft.GraftSession.local(4)
 
