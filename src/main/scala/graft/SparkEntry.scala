@@ -19,15 +19,18 @@ object SparkEntry {
     allDefs.head.fn(spark, "/root/testdata/sf0.001")
   }
 
+  private val inventories =
+    new java.util.concurrent.ConcurrentHashMap[Knobs, Map[String, (SparkSession, String) => DataFrame]]()
+
+  /** The inventory over `knobs`, built once per value. */
+  def queriesFor(knobs: Knobs): Map[String, (SparkSession, String) => DataFrame] =
+    inventories.computeIfAbsent(knobs,
+      k => queriesOf(Relational.defs ++ Dml.defs ++ Pipeline.defsFor(k)))
+
   /** One entry per implemented operator from SURVEY.md §2, over the knobs
     * the JVM started with. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    queriesOf(allDefs)
-
-  /** The same inventory over `knobs`. */
-  def queriesFor(knobs: Knobs): Map[String, (SparkSession, String) => DataFrame] =
-    if (knobs == Knobs.jvm) queries
-    else queriesOf(Relational.defs ++ Dml.defs ++ Pipeline.defsFor(knobs))
+    queriesFor(Knobs.jvm)
 
   private def queriesOf(defs: Seq[gq.QDef]) =
     defs.map { q =>

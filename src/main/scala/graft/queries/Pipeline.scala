@@ -3648,15 +3648,23 @@ object Pipeline {
   /** Entry `name` of the inventory over `knobs`, for entries built on
     * another entry's result. */
   private def entry(name: String)(implicit knobs: Knobs): QDef =
-    (if (knobs == Knobs.jvm) defs else defsFor).find(_.name == name).get
+    defsFor.find(_.name == name).get
 
-  /** The inventory over the knobs the JVM started with, built once. */
+  /** The inventory over the knobs the JVM started with. */
   lazy val defs: Seq[QDef] = defsFor(Knobs.jvm)
 
-  /** The inventory over `knobs`: every Spark plan, oracle string and
-    * staging key in it reads this one value, so the two engines always
-    * observe the same dials. */
-  def defsFor(implicit knobs: Knobs): Seq[QDef] = Seq(
+  // one inventory per distinct Knobs value; values come only from code
+  // (Knobs.jvm and test/bench copies), never from a statement, so the
+  // map stays as small as the set of configurations a process names
+  private val inventories = new java.util.concurrent.ConcurrentHashMap[Knobs, Seq[QDef]]()
+
+  /** The inventory over `knobs`, built once per value: every Spark plan,
+    * oracle string and staging key in it reads this one value, so the two
+    * engines always observe the same dials. */
+  def defsFor(implicit knobs: Knobs): Seq[QDef] =
+    inventories.computeIfAbsent(knobs, k => build(k))
+
+  private def build(implicit knobs: Knobs): Seq[QDef] = Seq(
 
     // ---- exact dedup: hash-groupBy, keep lowest doc_id. The group key
     // is the 128-bit md5 fingerprint, not the document text: at 100 TB

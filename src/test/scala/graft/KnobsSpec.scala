@@ -15,32 +15,40 @@ class KnobsSpec extends AnyFunSuite {
     val a = Knobs.jvm.copy(ivfCells = Some(2), lshTables = 2)
     val b = Knobs.jvm.copy(ivfCells = Some(3), lshTables = 4)
     def oracles(k: Knobs) = Pipeline.defsFor(k).flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+    // the first build of each value happens on the pool, 4 threads racing
+    val props = graftProps
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val got = try {
+      val jobs = (1 to 8).map { i =>
+        val k = if (i % 2 == 0) a else b
+        pool.submit(() => (k, oracles(k), Pipeline.CellStage.tag(k)))
+      }
+      jobs.map(_.get())
+    } finally pool.shutdown()
+    assert(graftProps == props, "building an inventory wrote a graft.* property")
+
     val (refA, refB) = (oracles(a), oracles(b))
     assert(refA("p36_kmeans_index").contains("kk AS (SELECT 2 AS k)"))
     assert(refB("p36_kmeans_index").contains("kk AS (SELECT 3 AS k)"))
     assert(refA("p37_knn_lsh_multi") != refB("p37_knn_lsh_multi"))
     assert(Pipeline.CellStage.tag(a) != Pipeline.CellStage.tag(b))
-
-    val props = graftProps
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val jobs = (1 to 8).map { i =>
-        val k = if (i % 2 == 0) a else b
-        pool.submit(() => (k, oracles(k), Pipeline.CellStage.tag(k)))
-      }
-      jobs.map(_.get()).foreach { case (k, got, tag) =>
-        assert(got == (if (k == a) refA else refB))
-        assert(tag == Pipeline.CellStage.tag(k))
-      }
-    } finally pool.shutdown()
-    assert(graftProps == props, "building an inventory wrote a graft.* property")
+    got.foreach { case (k, o, tag) =>
+      assert(o == (if (k == a) refA else refB))
+      assert(tag == Pipeline.CellStage.tag(k))
+    }
   }
 
-  test("the JVM inventory is built once") {
+  test("each inventory is built once per knob value") {
     assert(Pipeline.defs eq Pipeline.defs)
+    assert(Pipeline.defsFor(Knobs.jvm) eq Pipeline.defs)
     assert(SparkEntry.queries eq SparkEntry.queries)
     assert(SparkEntry.queriesFor(Knobs.jvm) eq SparkEntry.queries)
     assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+    val k = Knobs.jvm.copy(lshTables = 3)
+    assert(Pipeline.defsFor(k) eq Pipeline.defsFor(k.copy()))
+    assert(SparkEntry.queriesFor(k) eq SparkEntry.queriesFor(k.copy()))
+    assert(SparkEntry.queriesFor(k) ne SparkEntry.queries)
   }
 
   test("no code in src/main writes a graft.* property") {

@@ -99,13 +99,10 @@ if [ "$armed" != 1 ]; then
   wait $SBT_PID; tail -5 "$RUN"; exit 2
 fi
 [ "$MODE" = local ] && sleep "$DELAY"
-# scope the victim to THIS run's executors: GRAFT_JAVA_OPTS (including
-# the unique -Dgraft.checkpointDir=$CK/ck) is mirrored into
-# spark.executor.extraJavaOptions, so a concurrent Spark session on the
-# host can never be selected; ps+grep (not pgrep -f) so this compound
-# command can't match itself
-VICTIM=$(ps -eo pid,args | grep CoarseGrainedExecutorBackend \
-  | grep -F "checkpointDir=$CK/ck" | grep -v grep | awk '{print $1; exit}')
+# scope the victim to THIS run's executors: the descendants of the sbt
+# process this script started, so a concurrent Spark session on the host
+# can never be selected
+VICTIM=$(tools/executor_of.sh $SBT_PID)
 if [ -z "${VICTIM}" ]; then
   echo "[chaos] FAIL: no executor process alive at kill time"
   kill $SBT_PID 2> /dev/null; exit 2

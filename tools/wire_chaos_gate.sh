@@ -74,8 +74,8 @@ if [ "$armed" != 1 ]; then
   echo "[wire_chaos] FAIL: statement finished before the checkpoint marker armed"
   exit 2
 fi
-VICTIM=$(ps -eo pid,args | grep CoarseGrainedExecutorBackend \
-  | grep -F "checkpointDir=$CK/ck" | grep -v grep | awk '{print $1; exit}')
+# this server's executors only (descendants of the server JVM)
+VICTIM=$(tools/executor_of.sh $SRV_PID)
 if [ -z "$VICTIM" ]; then
   echo "[wire_chaos] FAIL: no executor process found to kill"; exit 2
 fi
