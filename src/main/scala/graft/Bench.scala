@@ -159,18 +159,21 @@ object Bench {
       stageEntry("p00c_cell_stage") {
         queries.Pipeline.CellStage.load(spark, sfDir); ()
       },
-      // the two-level layer (super-centroids + cell->super map) stages
-      // over the fitted cells; its (k-row) fit cost is its own line
+      // the two-level index row (super-centroids + each super-cell's
+      // member cells) stages over the fitted cells; its (k-row) fit cost
+      // is its own line
       stageEntry("p00d_super_stage") {
         queries.Pipeline.SuperStage.load(spark, sfDir); ()
       },
-      // the PQ codebook fit + corpus encode (p41/p41b/p42's shared
-      // artifacts) stage once; their cost is its own line
+      // the PQ codebook fit + the inverted lists (each vector's cell,
+      // codes and reconstruction norm: p41b/p42/p43's shared artifacts)
+      // stage once; their cost is its own line
       stageEntry("p00e_pq_stage") {
         queries.Pipeline.PqStage.load(spark, sfDir)
         queries.Pipeline.PqCodesStage.load(spark, sfDir); ()
       },
-      // the residual PQ codebook + encode (p45-p47's shared artifacts)
+      // the residual PQ codebook + residual inverted lists (p45-p47's
+      // shared artifacts)
       stageEntry("p00f_pqr_stage") {
         queries.Pipeline.PqResidualStage.load(spark, sfDir)
         queries.Pipeline.PqResidualCodesStage.load(spark, sfDir); ()

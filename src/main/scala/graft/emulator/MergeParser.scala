@@ -26,16 +26,19 @@ object MergeParser {
 
   private val mergeIntoRe: Regex =
     """(?is)MERGE\s+INTO\s+(\S+)(?:\s+AS\s+(\w+)|\s+([a-zA-Z_][a-zA-Z0-9_]*))?\s+USING""".r
-  private val usingRe: Regex =
-    """(?is)USING\s+(\((?:[^()]|\([^()]*\))*\)|[^\s(]+)(?:\s+AS\s+(\w+)|\s+([a-zA-Z_][a-zA-Z0-9_]*))?\s+ON""".r
+  private val usingRe: Regex = """(?is)\bUSING(?:\s+|(?=\())""".r
+  /** What follows the USING source: an optional alias, then ON. */
+  private val usingTailRe: Regex =
+    """(?is)(?:\s+AS\s+(\w+)|\s+([a-zA-Z_][a-zA-Z0-9_]*))?\s+ON""".r
+  private val tableNameRe: Regex = """[^\s(]+""".r
   private val whenRe: Regex = """(?i)\bWHEN\s+""".r
   private val whenMatchedRe: Regex =
     """(?is)WHEN\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN""".r
   private val whenNotMatchedRe: Regex =
     """(?is)WHEN\s+NOT\s+MATCHED(?:\s+AND\s+(.+?))?\s+THEN""".r
   private val thenUpdateRe: Regex = """(?is)THEN\s+UPDATE\s+SET\s+(.+)""".r
-  private val thenInsertRe: Regex =
-    """(?is)THEN\s+INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\(((?:[^()]|\([^()]*\))+)\)""".r
+  private val thenInsertRe: Regex = """(?is)THEN\s+INSERT\s*""".r
+  private val valuesRe: Regex = """(?is)\s*VALUES\b""".r
 
   /** Split by top-level commas (respecting parens and quotes), the analog of
     * the reference's splitByCommaRespectingParens / paren-aware arg split
@@ -59,6 +62,31 @@ object MergeParser {
     out.result().filter(_.nonEmpty)
   }
 
+  /** The parenthesized group opening at the first non-blank character at
+    * or after `from`, at any nesting depth (quotes respected, as in
+    * [[splitTopLevel]]): its inner text and the index after its `)`.
+    * None when no group opens there or it never closes. */
+  private def parenGroup(s: String, from: Int): Option[(String, Int)] = {
+    var i = from
+    while (i < s.length && s.charAt(i).isWhitespace) i += 1
+    if (i >= s.length || s.charAt(i) != '(') return None
+    val open = i
+    var depth = 0
+    var inQuote = false
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '\'' => inQuote = !inQuote
+        case '(' if !inQuote => depth += 1
+        case ')' if !inQuote =>
+          depth -= 1
+          if (depth == 0) return Some((s.substring(open + 1, i), i + 1))
+        case _ =>
+      }
+      i += 1
+    }
+    None
+  }
+
   def parse(sql: String): MergeStatement = {
     val text = sql.trim
 
@@ -67,13 +95,21 @@ object MergeParser {
     val targetAlias = Option(mi.group(2)).orElse(Option(mi.group(3)))
       .filter(a => a != null && !a.equalsIgnoreCase("USING"))
 
-    val us = usingRe.findFirstMatchIn(text).getOrElse(
-      throw SnowflakeError.compilation("invalid MERGE syntax: missing USING clause"))
-    val sourceAlias = Option(us.group(2)).orElse(Option(us.group(3)))
+    def noUsing = SnowflakeError.compilation("invalid MERGE syntax: missing USING clause")
+    val usingEnd = usingRe.findFirstMatchIn(text).getOrElse(throw noUsing).end
+    // the source: a subquery (balanced parentheses, any depth) or a name
+    val (source, sourceEnd) = parenGroup(text, usingEnd) match {
+      case Some((inner, end)) => (s"($inner)", end)
+      case None =>
+        val name = tableNameRe.findPrefixOf(text.substring(usingEnd)).getOrElse(throw noUsing)
+        (name, usingEnd + name.length)
+    }
+    val tail = usingTailRe.findPrefixMatchOf(text.substring(sourceEnd)).getOrElse(throw noUsing)
+    val sourceAlias = Option(tail.group(1)).orElse(Option(tail.group(2)))
       .filter(a => a != null && !a.equalsIgnoreCase("ON"))
 
     // ON condition runs from after the USING...ON match to the first WHEN
-    val afterOn = text.substring(us.end)
+    val afterOn = text.substring(sourceEnd + tail.end)
     val firstWhen = whenRe.findFirstMatchIn(afterOn).map(_.start).getOrElse(
       throw SnowflakeError.compilation("invalid MERGE syntax: at least one WHEN clause required"))
     val onCondition = afterOn.substring(0, firstWhen).trim
@@ -88,7 +124,7 @@ object MergeParser {
     }
 
     val clauses = sections.map(parseWhenClause)
-    MergeStatement(mi.group(1), targetAlias, us.group(1), sourceAlias,
+    MergeStatement(mi.group(1), targetAlias, source, sourceAlias,
       onCondition, clauses)
   }
 
@@ -118,10 +154,14 @@ object MergeParser {
         }
         UpdateAction(sets)
       } else if (upper.contains("THEN INSERT")) {
-        val m = thenInsertRe.findFirstMatchIn(section).getOrElse(
-          throw SnowflakeError.compilation(s"invalid INSERT clause: $section"))
-        val cols = Option(m.group(1)).map(splitTopLevel).getOrElse(Nil)
-        InsertAction(cols, splitTopLevel(m.group(2)))
+        def invalid = SnowflakeError.compilation(s"invalid INSERT clause: $section")
+        val at = thenInsertRe.findFirstMatchIn(section).getOrElse(throw invalid).end
+        // optional (cols), then VALUES (vals) — each a balanced group
+        val (cols, afterCols) = parenGroup(section, at)
+          .map { case (c, end) => (splitTopLevel(c), end) }.getOrElse((Nil, at))
+        val v = valuesRe.findPrefixMatchOf(section.substring(afterCols)).getOrElse(throw invalid)
+        val (vals, _) = parenGroup(section, afterCols + v.end).getOrElse(throw invalid)
+        InsertAction(cols, splitTopLevel(vals))
       } else throw SnowflakeError.compilation(s"invalid WHEN clause action: $section")
 
     WhenClause(isMatched, condition, action)

@@ -334,6 +334,11 @@ object SnowflakeExtensions {
     ("nearest_sub_cell", "nearest_sub_cell(subvec, array_of_(sub,cell,cv)_structs, sub)",
       (args: Seq[Expression]) => NearestSubCell(
         Cast(args(0), ArrayType(FloatType)), args(1), Cast(args(2), IntegerType))),
+    ("adc_sum", "adc_sum(lut_rows, codes)",
+      (args: Seq[Expression]) => AdcSum(args(0), Cast(args(1), ArrayType(IntegerType)))),
+    // a staged one-row table's column, read from a broadcast variable
+    ("staged_const", "staged_const(id)",
+      (args: Seq[Expression]) => StagedConstant.lookup(args)),
     // TO_NUMBER / TO_DECIMAL(x[, precision, scale]) — Snowflake defaults
     // to NUMBER(38,0); the TRY_ forms null out on conversion failure via
     // Spark's TRY-mode cast.

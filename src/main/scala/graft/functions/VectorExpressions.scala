@@ -214,12 +214,48 @@ case class TopCells(vec: Expression, idx: Expression, k: Expression)
     }
   }
 
+  // the fields are NULL only on NULL inputs (see [[eval]])
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("csim", DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("cell", LongType, nullable = false))),
+      org.apache.spark.sql.types.StructField("csim", DoubleType, nullable = true),
+      org.apache.spark.sql.types.StructField("cell", LongType, nullable = true))),
     containsNull = false)
   override def prettyName: String = "top_cells"
+
+  /** NULL idx or k: NULL, as the chain. A NULL query vector, a NULL index
+    * element or a NULL field makes some similarity (or cell) NULL, which
+    * the chain's comparator cannot order totally; those rows take
+    * [[VectorExpressions.chainOrder]], the chain's own sort. */
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val ix = idx.eval(input)
+    val kk = k.eval(input)
+    if (ix == null || kk == null) return null
+    val cells = ix.asInstanceOf[ArrayData]
+    val v = vec.eval(input)
+    val k1 = kk.asInstanceOf[Int]
+    require(k1 >= 0, s"$prettyName: k must be >= 0, got $k1")
+    var hasNull = v == null
+    var i = 0
+    while (!hasNull && i < cells.numElements()) {
+      hasNull = cells.isNullAt(i) ||
+        cells.getStruct(i, 2).isNullAt(0) || cells.getStruct(i, 2).isNullAt(1)
+      i += 1
+    }
+    if (!hasNull) return nullSafeEval(v, ix, kk)
+    val x = v.asInstanceOf[ArrayData]
+    val entries = Array.tabulate[AnyRef](cells.numElements()) { j =>
+      val row = if (cells.isNullAt(j)) null else cells.getStruct(j, 2)
+      val sim: java.lang.Double =
+        if (x == null || row == null || row.isNullAt(1)) null
+        else VectorExpressions.cosine(x, row.getArray(1)) + 0.0
+      val cell: java.lang.Long =
+        if (row == null || row.isNullAt(0)) null else row.getLong(0)
+      (sim, cell)
+    }
+    val sorted = VectorExpressions.chainOrder(entries, descending = true)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      sorted.take(k1).map { case (sm, c) => org.apache.spark.sql.catalyst.InternalRow(sm, c) })
+  }
 
   override def nullSafeEval(v: Any, ix: Any, kk: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -337,14 +373,53 @@ case class NearestSubCell(sv: Expression, pidx: Expression, sub: Expression)
 
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("d", DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("cell", LongType, nullable = false)))
+      org.apache.spark.sql.types.StructField("d", DoubleType, nullable = true),
+      org.apache.spark.sql.types.StructField("cell", LongType, nullable = true)))
   // an empty subspace yields NULL even when every input is non-nullable
   // (the empty-filter NULL of the chain this replaces) — without this
   // override, consumers with non-nullable inputs would codegen without a
   // null check and NPE (caught by AnnKernelsSpec, r18)
   override def nullable: Boolean = true
   override def prettyName: String = "nearest_sub_cell"
+
+  /** NULL pidx or sub: NULL, as the chain. NULL elements and elements
+    * with a NULL `sub` never pass the chain's filter, so they are
+    * skipped. A NULL subvector, or a NULL `cell`/`cv` in a matching
+    * element, leaves some (d, cell) NULL, which the chain's comparator
+    * cannot order totally; those rows take the chain's own sort
+    * ([[VectorExpressions.chainOrder]]). */
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val ix = pidx.eval(input)
+    val s = sub.eval(input)
+    if (ix == null || s == null) return null
+    val entries = ix.asInstanceOf[ArrayData]
+    val wantSub = s.asInstanceOf[Int]
+    val v = sv.eval(input)
+    def matches(i: Int): Boolean = !entries.isNullAt(i) && {
+      val row = entries.getStruct(i, 3)
+      !row.isNullAt(0) && row.getInt(0) == wantSub
+    }
+    var hasNull = false
+    var i = 0
+    while (!hasNull && i < entries.numElements()) {
+      hasNull = matches(i) && (v == null ||
+        entries.getStruct(i, 3).isNullAt(1) || entries.getStruct(i, 3).isNullAt(2))
+      i += 1
+    }
+    if (!hasNull) return nullSafeEval(v, ix, s)
+    val x = v.asInstanceOf[ArrayData]
+    val cands = (0 until entries.numElements()).filter(matches).map { j =>
+      val row = entries.getStruct(j, 3)
+      val d: java.lang.Double =
+        if (x == null || row.isNullAt(2)) null
+        else VectorExpressions.l2(x, row.getArray(2)) + 0.0
+      val cell: java.lang.Long = if (row.isNullAt(1)) null else row.getLong(1)
+      (d, cell): AnyRef
+    }.toArray
+    VectorExpressions.chainOrder(cands, descending = false).headOption
+      .map { case (d, c) => org.apache.spark.sql.catalyst.InternalRow(d, c) }
+      .orNull
+  }
 
   override def nullSafeEval(v: Any, ix: Any, s: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
@@ -361,8 +436,8 @@ case class NearestSubCell(sv: Expression, pidx: Expression, sub: Expression)
     var i = 0
     val n = entries.numElements()
     while (i < n) {
-      val row = entries.getStruct(i, 3)
-      if (row.getInt(0) == wantSub) {
+      val row = if (entries.isNullAt(i)) null else entries.getStruct(i, 3)
+      if (row != null && !row.isNullAt(0) && row.getInt(0) == wantSub) {
         val cell = row.getLong(1)
         val cv = row.getArray(2)
         // the L2 composes three dot_products with DIFFERENT bounds:
@@ -394,4 +469,117 @@ case class NearestSubCell(sv: Expression, pidx: Expression, sub: Expression)
 
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression) = copy(sv = f, pidx = s, sub = t)
+}
+
+/** Σ_m lut[m][codes[m]] — the asymmetric-distance (ADC) score of one
+  * candidate: `lut` is a query's M×k' lookup table (row m holds the
+  * query's integer-scaled dot with each code of subspace m), `codes` the
+  * candidate's M PQ codes. The fused form of `aggregate(zip_with(lut,
+  * codes, (row, c) -> get(row, c)), CAST(0 AS BIGINT), (acc, x) -> acc +
+  * x)`, and equal to it on every input: NULL when the two arrays differ
+  * in length, when any row, code or entry is NULL, or when a code falls
+  * outside its row; the sum wraps like BIGINT `+`. Input layout:
+  * (ARRAY<ARRAY<BIGINT>>, ARRAY<INT>). Eval-only (CodegenFallback), like
+  * [[TopCells]].
+  */
+case class AdcSum(lut: Expression, codes: Expression)
+    extends BinaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+
+  override def left: Expression = lut
+  override def right: Expression = codes
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    import org.apache.spark.sql.types.IntegerType
+    (lut.dataType, codes.dataType) match {
+      case (ArrayType(ArrayType(LongType, _), _), ArrayType(IntegerType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: expects (ARRAY<ARRAY<BIGINT>>, ARRAY<INT>); got (" +
+          s"${lut.dataType.simpleString}, ${codes.dataType.simpleString})")
+    }
+  }
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "adc_sum"
+
+  override def nullSafeEval(l: Any, c: Any): Any = {
+    val rows = l.asInstanceOf[ArrayData]
+    val cs = c.asInstanceOf[ArrayData]
+    val m = rows.numElements()
+    if (cs.numElements() != m) return null
+    var acc = 0L
+    var i = 0
+    while (i < m) {
+      if (rows.isNullAt(i) || cs.isNullAt(i)) return null
+      val row = rows.getArray(i)
+      val code = cs.getInt(i)
+      if (code < 0 || code >= row.numElements() || row.isNullAt(code)) return null
+      acc += row.getLong(code)
+      i += 1
+    }
+    acc
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
+    copy(lut = l, codes = r)
+}
+
+/** Shared arithmetic and ordering of the fused ANN kernels' NULL paths. */
+private[functions] object VectorExpressions {
+
+  /** [[CosineSimilarity]]'s arithmetic. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    if (nx == 0.0 || ny == 0.0) 0.0 else dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
+
+  /** Squared L2 as three [[DotProduct]]s: ((a·a − 2·(a·b)) + b·b). */
+  def l2(a: ArrayData, b: ArrayData): Double = {
+    def dot(x: ArrayData, y: ArrayData): Double = {
+      val n = math.min(x.numElements(), y.numElements())
+      var acc = 0.0; var i = 0
+      while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+      acc
+    }
+    (dot(a, a) - (2.0 * dot(a, b))) + dot(b, b)
+  }
+
+  /** The chains' `array_sort` over (score, cell) pairs whose fields may be
+    * NULL: `java.util.Arrays.sort` (what array_sort runs) with the chains'
+    * CASE comparator under SQL NULL rules — NaN scores first (descending)
+    * or last (ascending), then score, then cell; any comparison with a
+    * NULL operand is not taken, and a pair no branch orders compares 0. */
+  def chainOrder(pairs: Array[AnyRef], descending: Boolean)
+      : Array[(java.lang.Double, java.lang.Long)] = {
+    def nan(d: java.lang.Double) = d != null && d.isNaN
+    val cmp = new java.util.Comparator[AnyRef] {
+      override def compare(a: AnyRef, b: AnyRef): Int = {
+        val (ls, lc) = a.asInstanceOf[(java.lang.Double, java.lang.Long)]
+        val (rs, rc) = b.asInstanceOf[(java.lang.Double, java.lang.Long)]
+        val first = if (descending) -1 else 1
+        if (nan(ls) && !nan(rs)) first
+        else if (nan(rs) && !nan(ls)) -first
+        else if (ls != null && rs != null && !nan(ls) && ls.doubleValue != rs.doubleValue)
+          if ((ls.doubleValue > rs.doubleValue) == descending) -1 else 1
+        else if (lc != null && rc != null && lc.longValue != rc.longValue)
+          if (lc.longValue < rc.longValue) -1 else 1
+        else 0
+      }
+    }
+    val arr = pairs.clone()
+    java.util.Arrays.sort(arr, cmp)
+    arr.map(_.asInstanceOf[(java.lang.Double, java.lang.Long)])
+  }
 }

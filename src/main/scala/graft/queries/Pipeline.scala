@@ -1074,39 +1074,36 @@ object Pipeline {
     if (k <= 25) ks
     else math.max(3, math.min(ks, ((2L * nprobe * ks + k - 1) / k).toInt))
 
-  /** The two-level index over CellStage, staged once per input dir like
-    * the index itself: the fitted super-centroids (scell, scv) and the
-    * once-per-cell assignment map (cell, scell). Both are k-row tables —
-    * the fit input is the k centroids, not the corpus — so building them
-    * is trivially cheap; staging just spares every consumer the
-    * per-query re-fit jobs. */
+  /** The two-level index over CellStage as ONE ready row, staged once
+    * per input dir like the index itself: `sidx`, the fitted
+    * super-centroids as (scell, scv) structs, and `midx`, every
+    * super-cell's member (cell, cv) list keyed by scell (each cell sits
+    * under its nearest super-centroid, assigned once at build time). Both
+    * are fit over the k centroids, not the corpus. Consumers read the row
+    * as constants ([[indexConsts]]): no query re-aggregates or
+    * re-broadcasts the index. The tag is versioned like [[PairStage]]'s,
+    * so a shared staging root never serves an older layout. */
   private[graft] object SuperStage {
-    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): (DataFrame, DataFrame) = {
+    def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
       val params = s"${auto(knobs.ivfCells)}" +
         s"-${knobs.kmeansIters}-${knobs.kmeansFitPoints}" +
         s"-${auto(knobs.ivfSuperCells)}"
       val ph = java.security.MessageDigest.getInstance("MD5")
         .digest(params.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
-      // ONE staged table for both k-row artifacts (r17; tag sy = the
-      // former sx + sm pair): kind 1 rows carry the super-centroids
-      // (scell, scv), kind 2 rows the cell→super map — halves the
-      // staged-write/commit cost of a line that is otherwise pure
-      // driver latency. Values and consumer schemas unchanged.
-      val both = ShingleStage.stage(s, dir, s"sy$ph") {
-        // the super fit feeds BOTH row kinds in one action — materialize
-        // its k rows once so the union does not run the fit twice
-        val sc0 = Materialize(buildSuperCells(s, dir), "sx")
-        sc0.select(lit(1).as("kind"), col("scell").as("a"),
-            lit(null).cast("long").as("b"), col("scv").as("cv"))
-          .unionAll(buildCellMap(s, dir, sc0)
-            .select(lit(2).as("kind"), col("cell").as("a"),
-              col("scell").as("b"),
-              lit(null).cast("array<float>").as("cv")))
+      ShingleStage.stage(s, dir, s"sy2$ph") {
+        // the super fit feeds both columns — materialize its k rows once
+        // so the row does not run the fit twice
+        val sc = Materialize(buildSuperCells(s, dir), "sx")
+        val sidx = sc.groupBy()
+          .agg(collect_list(struct(col("scell"), col("scv"))).as("sidx"))
+        val midx = CellStage.load(s, dir).join(buildCellMap(s, dir, sc), "cell")
+          .groupBy(col("scell"))
+          .agg(collect_list(struct(col("cell"), col("cv"))).as("members"))
+          .groupBy()
+          .agg(map_from_entries(collect_list(struct(col("scell"), col("members"))))
+            .as("midx"))
+        sidx.crossJoin(midx)
       }
-      (both.filter(col("kind") === 1)
-         .select(col("a").as("scell"), col("cv").as("scv")),
-       both.filter(col("kind") === 2)
-         .select(col("a").as("cell"), col("b").as("scell")))
     }
   }
 
@@ -1235,32 +1232,37 @@ object Pipeline {
       .select(col("sub"), col("code"), col("cell"), col("cv"))
   }
 
-  /** PQ codes for `src` (vec_id, embedding) — every vector's M argmin
-    * codes, assigned by the broadcast codebook with ZERO shuffle (the
-    * encode is a pure map over the corpus scan; at 100 TB this is the
-    * compressed representation the scoring side reads instead of
-    * embeddings). Tie-break is on `code`, which is monotone in the seed
-    * id per subspace, so it equals the fit's own seed-id tie-break. */
-  private def buildPqCodesFrom(s: SparkSession, cb: DataFrame,
-      src: DataFrame)(implicit knobs: Knobs): DataFrame = {
-    val sv = src.select(col("vec_id"), pqSubvecsCol.as(Seq("sub", "sv")))
-      .repartition(s.sparkContext.defaultParallelism)
-    nearestPqCell(sv, cb.select(col("sub"), col("code").as("cell"), col("cv")))
-      .select(col("vec_id"), col("sub"), col("cell").cast("int").as("code"))
+  /** SQL for each row's M PQ codes (ARRAY<INT>) against the flat
+    * codebook constant `pidx` ([[codebookConsts]]): per subspace the
+    * argmin sub-centroid by squared L2, the same kernel and arguments as
+    * the fit's own assignment ([[nearestPqCell]]) — a pure map over the
+    * scan, zero shuffle. Tie-break is on the code, which is monotone in
+    * the seed id per subspace, so it equals the fit's seed-id tie-break. */
+  private def pqCodesSql(pidx: String)(implicit knobs: Knobs): String = {
+    val dsub = s"(size(embedding) div ${knobs.pqM})"
+    s"""transform(sequence(0, ${knobs.pqM - 1}), mm ->
+          CAST(nearest_sub_cell(slice(embedding, mm * $dsub + 1, $dsub), $pidx, mm).cell
+          AS INT))"""
   }
 
+  /** Σ_m `t`[m][codes[m]] as SQL: a per-code BIGINT table summed over a
+    * row's codes (exact in any order). */
+  private def codeSumSql(t: String)(implicit knobs: Knobs): String =
+    s"aggregate(sequence(0, ${knobs.pqM - 1}), CAST(0 AS BIGINT), (acc, mm) -> acc + $t[mm][codes[mm]])"
+
   /** Per-vector cell residual (embedding − assigned cell centroid), the
-    * residual-PQ training/encode source. Assignment is the kTop=1
-    * two-level descent (the p32 contract); the subtraction happens in
-    * DOUBLE (exact for float32 inputs) and rounds back to FLOAT — both
-    * correctly-rounded IEEE ops, so the oracle reproduces the residual
-    * bit-for-bit. NEVER staged: the residual table is corpus-sized. */
+    * residual-PQ training/encode source, with the cell and its centroid
+    * `ccv`. Assignment is the kTop=1 two-level descent (the p32
+    * contract); the subtraction happens in DOUBLE (exact for float32
+    * inputs) and rounds back to FLOAT — both correctly-rounded IEEE ops,
+    * so the oracle reproduces the residual bit-for-bit. NEVER staged: the
+    * residual table is corpus-sized. */
   private def residuals(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
     val assigned = nearestCellsStaged(s, dir,
       emb(s, dir).select(col("vec_id"), col("embedding")), 1)
       .filter(col("crank") === 1)
     assigned.join(broadcast(CellStage.load(s, dir)), "cell")
-      .select(col("vec_id"), expr(
+      .select(col("vec_id"), col("cell"), col("cv").as("ccv"), expr(
         """zip_with(embedding, cv,
              (x, y) -> CAST(CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS FLOAT))""")
         .as("embedding"))
@@ -1285,13 +1287,31 @@ object Pipeline {
         buildPqCodebookFrom(s, emb(s, dir).select(col("vec_id"), col("embedding"))))
   }
 
-  /** The encoded corpus (vec_id, sub, code), staged once — the
-    * compressed vectors every ADC consumer reads. */
+  /** The IVF-PQ inverted lists (IVFADC, Jegou et al. 2011), staged once:
+    * one row per corpus vector, (vec_id, cell, codes, r_s) — its list
+    * (the crank-1 cell of the two-level descent at the ADC probe width,
+    * the assignment the query side's probes rank against; NULL when all
+    * its probed super-cells are empty), its M PQ codes and r_s = Σ_m
+    * floor(|c_m|²·10⁸+0.5) over its codes' centroids, the integer-scaled
+    * squared norm of its reconstruction. The compressed vector store every
+    * ADC consumer reads: M bytes + 12 per vector instead of 4·d. The key
+    * covers the PQ knobs and each IVF knob the cell depends on; the tag
+    * is versioned like [[PairStage]]'s. */
   private[graft] object PqCodesStage {
     def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
-      ShingleStage.stage(s, dir, s"pv${pqParamsHash()}")(
-        buildPqCodesFrom(s, PqStage.load(s, dir),
-          emb(s, dir).select(col("vec_id"), col("embedding"))))
+      ShingleStage.stage(s, dir,
+          s"pv2${pqParamsHash(s"$pqResidualParams-${auto(knobs.ivfNprobe)}")}") {
+        val nprobe = ivfNprobe(ivfK(embCount(s, dir)))
+        val cb = codebookConsts(s, PqStage.load(s, dir))
+        emb(s, dir).select(col("vec_id"), col("embedding"))
+          .repartition(s.sparkContext.defaultParallelism)
+          .select(col("vec_id"),
+            expr(s"try_element_at(${nearestCellsSql(s, dir, 1, nprobe)}, 1).cell")
+              .as("cell"),
+            expr(pqCodesSql(cb("pidx"))).as("codes"))
+          .select(col("vec_id"), col("cell"), col("codes"),
+            expr(codeSumSql(cb("cn"))).as("r_s"))
+      }
   }
 
   /** The RESIDUAL codebook (p45): same fit machinery, training points =
@@ -1309,78 +1329,112 @@ object Pipeline {
         // over the corpus. One eager pass, three cheap reads; values
         // unchanged (plan shape only). Blocks are reclaimed at the next
         // cache clear — the build runs once per (JVM, corpus).
-        buildPqCodebookFrom(s, Materialize(residuals(s, dir), "resid")))
+        buildPqCodebookFrom(s, Materialize(
+          residuals(s, dir).select(col("vec_id"), col("embedding")), "resid")))
   }
 
-  /** The residual-encoded corpus (vec_id, sub, code), staged once. */
+  /** The residual inverted lists (p45b-p47), staged once: (vec_id, cell,
+    * codes, r_s) like [[PqCodesStage]], against the residual codebook.
+    * The cell is the kTop=1 assignment the residual was taken against
+    * (so the code's reference centroid is always the list's own cell),
+    * and r_s = (|c|² + 2·Σ_m c_m·r̂_m) + Σ_m |r̂_m|² = |c + r̂|², each
+    * term a floor(·10⁸+0.5) BIGINT: the reconstruction's squared norm,
+    * exact in integers. Vectors without a cell have no residual and no
+    * row. The tag is versioned like [[PairStage]]'s. */
   private[graft] object PqResidualCodesStage {
     def load(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
-      ShingleStage.stage(s, dir, s"rv${pqParamsHash(pqResidualParams)}")(
-        buildPqCodesFrom(s, PqResidualStage.load(s, dir), residuals(s, dir)))
+      ShingleStage.stage(s, dir, s"rv2${pqParamsHash(pqResidualParams)}") {
+        val rcb = codebookConsts(s, PqResidualStage.load(s, dir))
+        val m = knobs.pqM
+        val cr = s"""CAST(floor(dot_product(
+            slice(ccv, mm * (size(ccv) div $m) + 1, size(ccv) div $m), ${rcb("cb")}[mm][codes[mm]])
+            * 100000000.0 + 0.5) AS BIGINT)"""
+        residuals(s, dir)
+          .repartition(s.sparkContext.defaultParallelism)
+          .select(col("vec_id"), col("cell"), col("ccv"),
+            expr(pqCodesSql(rcb("pidx"))).as("codes"))
+          .select(col("vec_id"), col("cell"), col("codes"), expr(
+            s"""(CAST(floor(dot_product(ccv, ccv) * 100000000.0 + 0.5) AS BIGINT)
+                  + 2 * aggregate(sequence(0, ${m - 1}), CAST(0 AS BIGINT), (acc, mm) -> acc + $cr))
+                + ${codeSumSql(rcb("cn"))}""").as("r_s"))
+      }
   }
+
+  /** A staged codebook (sub, code, cell, cv) as SQL constants: `cb`,
+    * cb[m][c] = the centroid of code c in subspace m (codes are dense
+    * 0..k'−1 per subspace, so the position IS the code); `cn`, cn[m][c] =
+    * floor(|cb[m][c]|²·10⁸+0.5); and `pidx`, the flat (sub, cell = code,
+    * cv) struct array [[graft.functions.NearestSubCell]] reads. */
+  private def codebookConsts(s: SparkSession, cb: DataFrame): Map[String, String] =
+    stagedConsts(s, cb, "cb") {
+      _.groupBy(col("sub"))
+        .agg(sort_array(collect_list(struct(col("code"), col("cv")))).as("byCode"))
+        .agg(sort_array(collect_list(struct(col("sub"), col("byCode")))).as("bySub"))
+        .select(expr("transform(bySub, x -> transform(x.byCode, y -> y.cv))").as("cb"))
+        .select(col("cb"),
+          expr("""transform(cb, r -> transform(r, cv ->
+                    CAST(floor(dot_product(cv, cv) * 100000000.0 + 0.5) AS BIGINT)))""")
+            .as("cn"),
+          expr("""flatten(transform(cb, (r, mm) -> transform(r, (cv, c) ->
+                    named_struct('sub', mm, 'cell', CAST(c AS BIGINT), 'cv', cv))))""")
+            .as("pidx"))
+    }
+
+  /** The fitted cells as SQL constants: `idx`, the flat index as
+    * (cell, cv) structs, and `cvs`, cell -> centroid. */
+  private def cellConsts(s: SparkSession, dir: String)(implicit knobs: Knobs): Map[String, String] =
+    stagedConsts(s, CellStage.load(s, dir), "cells") {
+      _.agg(collect_list(struct(col("cell"), col("cv"))).as("idx"))
+        .select(col("idx"), map_from_entries(col("idx")).as("cvs"))
+    }
+
+  /** The one row `shape` derives from the staged table `staged`, as SQL
+    * constants by column name ([[graft.functions.StagedConstant]]):
+    * collected once per (SparkContext, staged files, view). */
+  private def stagedConsts(s: SparkSession, staged: DataFrame, view: String)(
+      shape: DataFrame => DataFrame): Map[String, String] =
+    graft.functions.StagedConstant.of(s.sparkContext,
+      staged.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+        .distinct.sorted.mkString(",") + s"#$view")(shape(staged))
 
   /** Stateless per-row projections for STREAMING semantic dedup: assign
     * the row's embedding to its nearest fitted cell (the flat index as
-    * ONE broadcast row) and compress it to the M PQ codes (the codebook
-    * as one broadcast row) in the same pass — no shuffle, no streaming
-    * state, safe on a streaming DataFrame (stream-static broadcast
-    * only). The code arithmetic is the exact batch p41b argmin (same
-    * comparator, same tie-break on code), so in-stream codes equal the
-    * staged codes for the same vector — the parity spec proves it. */
+    * one constant) and compress it to the M PQ codes (the codebook as
+    * one constant) in the same pass — no shuffle, no join, no streaming
+    * state, safe on a streaming DataFrame. The code arithmetic is the
+    * exact batch p41b argmin ([[pqCodesSql]]), so in-stream codes equal
+    * the staged codes for the same vector — the parity spec proves it. */
   private[graft] def streamSemanticPrep(s: SparkSession, dir: String,
       docs: DataFrame)(implicit knobs: Knobs): DataFrame = {
-    val cells = CellStage.load(s, dir)
-    val cb = PqStage.load(s, dir)
-    val idx = cells.groupBy()
-      .agg(collect_list(struct(col("cell"), col("cv"))).as("idx"))
-    // fixed kernel element layout (sub INT, cell BIGINT, cv) — the code
-    // rides as `cell`, widened like nearestPqCell's (order-preserving)
-    val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
-      .agg(collect_list(struct(col("sub").cast("int").as("sub"),
-        col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
-    val m = knobs.pqM
-    val dsub = s"(size(embedding) div $m)"
-    // fused kernels (r18): the stream path was the last interpreted
-    // array_sort-comparator assignment site — same arithmetic/ordering
-    // pin as the batch encode (see [[graft.functions.TopCells]] /
-    // [[NearestSubCell]]); the parity-with-staged-codes spec proves it
-    docs.crossJoin(broadcast(idx)).crossJoin(broadcast(pidx))
-      .withColumn("cell", expr(
-        "element_at(top_cells(embedding, idx, 1), 1).cell"))
-      .withColumn("codes", expr(
-        s"""transform(sequence(0, ${m - 1}), mm ->
-              CAST(nearest_sub_cell(
-                slice(embedding, mm * $dsub + 1, $dsub), pidx, mm).cell
-              AS INT))"""))
-      .drop("idx", "pidx")
+    val cells = cellConsts(s, dir)
+    val cb = codebookConsts(s, PqStage.load(s, dir))
+    docs
+      .withColumn("cell", expr(s"element_at(top_cells(embedding, ${cells("idx")}, 1), 1).cell"))
+      .withColumn("codes", expr(pqCodesSql(cb("pidx"))))
   }
 
   /** Append per-row PQ squared reconstruction error (`sse`, double) —
     * p44's fidelity measure as a reusable zero-shuffle transform: the
-    * codebook broadcasts as one row and the error is a single codegen
-    * expression over the input (works on batch AND streaming frames,
-    * the same stream-static broadcast shape as [[streamSemanticPrep]]).
-    * The streaming index-staleness monitor is built on this. */
+    * codebook is one constant and the error a single expression over the
+    * input (works on batch AND streaming frames, like
+    * [[streamSemanticPrep]]); each subspace's argmin distance rounds to
+    * an integer-scaled BIGINT before the sum, so evaluation order cannot
+    * perturb it. The streaming index-staleness monitor is built on this. */
   private[graft] def withPqSse(s: SparkSession, dir: String,
       df: DataFrame)(implicit knobs: Knobs): DataFrame = {
-    val cb = PqStage.load(s, dir)
-    val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
-      .agg(collect_list(struct(col("sub").cast("int").as("sub"),
-        col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
+    val cb = codebookConsts(s, PqStage.load(s, dir))
     val m = knobs.pqM
     val dsub = s"(size(embedding) div $m)"
     // fused argmin kernel (r18) — arithmetic and ordering pinned in
     // [[graft.functions.NearestSubCell]]
-    df.crossJoin(broadcast(pidx))
-      .withColumn("sse", expr(
-        s"""CAST(aggregate(
-              transform(sequence(0, ${m - 1}), mm ->
-                nearest_sub_cell(
-                  slice(embedding, mm * $dsub + 1, $dsub), pidx, mm).d),
-              CAST(0 AS BIGINT),
-              (acc, dd) -> acc + CAST(floor(dd * 100000000.0 + 0.5) AS BIGINT))
-            AS DOUBLE) / 100000000.0"""))
-      .drop("pidx")
+    df.withColumn("sse", expr(
+      s"""CAST(aggregate(
+            transform(sequence(0, ${m - 1}), mm ->
+              nearest_sub_cell(
+                slice(embedding, mm * $dsub + 1, $dsub), ${cb("pidx")}, mm).d),
+            CAST(0 AS BIGINT),
+            (acc, dd) -> acc + CAST(floor(dd * 100000000.0 + 0.5) AS BIGINT))
+          AS DOUBLE) / 100000000.0"""))
   }
 
   /** The fitted corpus's mean PQ reconstruction error — the baseline the
@@ -1416,127 +1470,70 @@ object Pipeline {
     (knobs.pqM, dots.toMap, norms)
   }
 
-  /** Residual IVF-PQ ADC scoring (p46/p47): reconstruct x̂ = c + r̂
-    * implicitly from integer tables. cos(q, x̂) = (q·c + q·r̂) /
-    * (|q|·√(|c|² + 2·c·r̂ + |r̂|²)) — every dot is precomputed once as a
-    * floor(·10⁸+0.5) BIGINT (q·c per probed pair, q·r̂ per query/code,
-    * c·r̂ per cell/code, the two norms), so the per-candidate combination
-    * is pure integer arithmetic until the single final float expression.
-    * Candidate generation probes at p16's width; membership is the
-    * kTop=1 assignment — the SAME map the residuals were encoded
-    * against, so the LUT cell always matches the code's reference
-    * centroid. Output: (qid, cid, ascore). */
-  /** The codebook collapsed to ONE broadcast row of nested arrays
-    * (r17): `cbA[sub+1][code+1]` = the centroid vector, `cnA[sub+1]
-    * [code+1]` = its integer-scaled self-dot. Codes are densely
-    * renumbered 0..k'_sub−1 per subspace by construction, so position
-    * IS the code — an ADC consumer scores a candidate with M array
-    * lookups instead of an M-fanout join. */
-  private def residualAdcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
-    val e = emb(s, dir)
+  /** One IVF-PQ ADC pass over inverted lists (IVFADC, Jegou et al.
+    * 2011): p42/p43 over [[PqCodesStage]], p46/p47 over
+    * [[PqResidualCodesStage]]. One projection over the eval-sampled
+    * queries computes each query's nprobe probe cells (the two-level
+    * descent at p16's probe width), its M×k' lookup table lut[m][c] =
+    * floor(q_m·cb[m][c]·10⁸+0.5) against the codebook constant, and its
+    * norm; only the probe rows are exploded, they join the lists on
+    * `cell`, and the join's own stage sums each candidate's M lookups
+    * ([[graft.functions.AdcSum]]). The LUT rides the probe rows and dies
+    * in that stage: no exchange carries an embedding, and the corpus side
+    * is a scan of the staged lists.
+    *
+    * Residual lists reconstruct x̂ = c + r̂ around the list's cell c, so
+    * each probe row also carries qc_s = floor(q·c·10⁸+0.5):
+    * cos(q, x̂) = (q·c + Σ_m q_m·r̂_m) / (|q|·|x̂|), |x̂|² being the
+    * lists' r_s. Every dot is a BIGINT, so the sums are exact in any
+    * order and the one float expression per candidate is the only
+    * rounding. Output: (qid, cid, ascore). */
+  private def adcScored(s: SparkSession, dir: String, codebook: DataFrame,
+      lists: DataFrame, residual: Boolean)(implicit knobs: Knobs): DataFrame = {
     val n = embCount(s, dir)
     val nprobe = ivfNprobe(ivfK(n))
-    val cells = CellStage.load(s, dir)
-    val m = knobs.pqM
-    // the query side honors the eval sample (the candidate/index side
-    // never does — membership is a corpus property); qr/qn stay full
-    // and are pruned by their joins on qid
-    val probes = evalSampleFilter(nearestCellsStaged(s, dir,
-      e.select(col("vec_id"), col("embedding")), nprobe), n)
-      .select(col("vec_id").as("qid"), col("cell"), col("embedding").as("qv"))
-    val assigned = nearestCellsStaged(s, dir,
-      e.select(col("vec_id"), col("embedding")), 1)
-      .filter(col("crank") === 1)
-      .select(col("vec_id").as("cid"), col("cell"))
-    val cand = probes.select(col("qid"), col("cell")).join(assigned, "cell")
+    val cb = codebookConsts(s, codebook)
+    val dsub = s"(size(embedding) div ${knobs.pqM})"
+    val qc =
+      if (residual) {
+        val cells = cellConsts(s, dir)
+        s"""CAST(floor(dot_product(embedding, element_at(${cells("cvs")}, p.cell))
+              * 100000000.0 + 0.5) AS BIGINT)"""
+      } else "CAST(0 AS BIGINT)"
+    // the query side honors the eval sample; the lists never do —
+    // membership is a corpus property
+    evalSampleFilter(emb(s, dir).select(col("vec_id"), col("embedding")), n)
+      .select(col("vec_id").as("qid"),
+        expr(s"""transform(${nearestCellsSql(s, dir, nprobe, nprobe)},
+                   p -> named_struct('cell', p.cell, 'qc_s', $qc))""").as("probes"),
+        expr(s"""transform(${cb("cb")}, (rows, mm) -> transform(rows, cv ->
+                   CAST(floor(dot_product(slice(embedding, mm * $dsub + 1, $dsub), cv)
+                     * 100000000.0 + 0.5) AS BIGINT)))""").as("lut"),
+        expr("dot_product(embedding, embedding)").as("qn"))
+      // explode_outer, not explode: for a plain explode of a column Spark
+      // infers a size(probes) > 0 filter and pushes it below this
+      // projection, running the descent twice per query. A query without
+      // probe cells keeps one NULL-cell row, which joins no list.
+      .select(col("qid"), explode_outer(col("probes")).as("p"), col("lut"), col("qn"))
+      .select(col("qid"), col("p.cell").as("cell"), col("p.qc_s").as("qc_s"),
+        col("lut"), col("qn"))
+      .join(lists.select(col("vec_id").as("cid"), col("cell"), col("codes"), col("r_s")),
+        "cell")
       .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("cell"))
-    val rcb = PqResidualStage.load(s, dir)
-    val qc = probes.join(broadcast(cells), "cell")
-      .select(col("qid"), col("cell"),
-        expr("CAST(floor(dot_product(qv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-          .as("qc_s"))
-    val qr = e.select(col("vec_id").as("qid"), pqSubvecsCol.as(Seq("sub", "sv")))
-      .join(broadcast(rcb.select(col("sub"), col("code"), col("cv"))), Seq("sub"))
-      .select(col("qid"), col("sub"), col("code"),
-        expr("CAST(floor(dot_product(sv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-          .as("qr_s"))
-    val cellcross = cells.select(col("cell"), col("cv").as("ccv"))
-      .crossJoin(broadcast(rcb.select(col("sub"), col("code"), col("cv").as("rcv"))))
-      .select(col("cell"), col("sub"), col("code"), expr(
-        s"""CAST(floor(dot_product(
-              slice(ccv, sub * (size(ccv) div $m) + 1, size(ccv) div $m), rcv)
-              * 100000000.0 + 0.5) AS BIGINT)""").as("cr_s"))
-    val cellnorm = cells.select(col("cell"),
-      expr("CAST(floor(dot_product(cv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-        .as("cn2_s"))
-    val rnorm = rcb.select(col("sub"), col("code"),
-      expr("CAST(floor(dot_product(cv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-        .as("rr_s"))
-    val qn = e.select(col("vec_id").as("qid"),
-      expr("dot_product(embedding, embedding)").as("qn"))
-    val codes = PqResidualCodesStage.load(s, dir).withColumnRenamed("vec_id", "cid")
-    cand.join(codes, "cid")
-      .join(qr, Seq("qid", "sub", "code"))
-      .join(broadcast(cellcross), Seq("cell", "sub", "code"))
-      .join(broadcast(rnorm), Seq("sub", "code"))
-      .groupBy(col("qid"), col("cid"), col("cell"))
-      .agg(sum(col("qr_s")).as("sqr"), sum(col("cr_s")).as("scr"),
-        sum(col("rr_s")).as("srr"))
-      .join(qc, Seq("qid", "cell"))
-      .join(broadcast(cellnorm), Seq("cell"))
-      .join(qn, "qid")
-      .withColumn("ascore", expr(
-        """CAST(qc_s + sqr AS DOUBLE)
-           / (sqrt(qn) * sqrt(CAST((cn2_s + (2 * scr)) + srr AS DOUBLE) / 100000000.0) * 100000000.0)"""))
-      .select(col("qid"), col("cid"), col("ascore"))
+      .select(col("qid"), col("cid"), expr(
+        """CAST(qc_s + adc_sum(lut, codes) AS DOUBLE)
+           / (sqrt(qn) * sqrt(CAST(r_s AS DOUBLE) / 100000000.0) * 100000000.0)""")
+        .as("ascore"))
   }
 
-  /** The shared ADC scoring plan (p42 ranks it; p43 shortlists + exact
-    * re-ranks): candidates from the two-level descent at p16's probe
-    * width, scored against the PQ codes via integer-scaled per-query
-    * lookup tables. Every shuffle in this plan carries ids and small
-    * integers — embeddings appear only in the broadcast-side LUT build
-    * and are projected away before any exchange. Output: (qid, cid,
-    * ascore). */
-  private def adcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame = {
-    val e = emb(s, dir)
-    val n = embCount(s, dir)
-    val nprobe = ivfNprobe(ivfK(n))
-    val top = nearestCellsStaged(s, dir,
-      e.select(col("vec_id"), col("embedding")), nprobe)
-    val assigned = top.filter(col("crank") === 1)
-      .select(col("vec_id").as("cid"), col("cell"))
-    // query side only — the assigned (index) side is always the full
-    // corpus; qlut/qn are pruned by their joins on qid
-    val probes = evalSampleFilter(top, n)
-      .select(col("vec_id").as("qid"), col("cell"))
-    // id-only candidate pairs: the shuffle carries 16-byte rows
-    val cand = probes.join(assigned, "cell")
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"))
-    val cb = PqStage.load(s, dir)
-    val qlut = e.select(col("vec_id").as("qid"), pqSubvecsCol.as(Seq("sub", "sv")))
-      .join(broadcast(cb.select(col("sub"), col("code"), col("cv"))), Seq("sub"))
-      .select(col("qid"), col("sub"), col("code"),
-        expr("CAST(floor(dot_product(sv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-          .as("dq_s"))
-    val cnorm = cb.select(col("sub"), col("code"),
-      expr("CAST(floor(dot_product(cv, cv) * 100000000.0 + 0.5) AS BIGINT)")
-        .as("cn_s"))
-    val qn = e.select(col("vec_id").as("qid"),
-      expr("dot_product(embedding, embedding)").as("qn"))
-    val codes = PqCodesStage.load(s, dir).withColumnRenamed("vec_id", "cid")
-    cand.join(codes, "cid")
-      .join(qlut, Seq("qid", "sub", "code"))
-      .join(broadcast(cnorm), Seq("sub", "code"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("dq_s")).as("s_s"), sum(col("cn_s")).as("r_s"))
-      .join(qn, "qid")
-      .withColumn("ascore", expr(
-        "CAST(s_s AS DOUBLE) / (sqrt(qn) * sqrt(CAST(r_s AS DOUBLE) / 100000000.0) * 100000000.0)"))
-      .select(col("qid"), col("cid"), col("ascore"))
-  }
+  /** p42/p43's scored candidates: raw-vector PQ. */
+  private[graft] def adcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
+    adcScored(s, dir, PqStage.load(s, dir), PqCodesStage.load(s, dir), residual = false)
+
+  /** p46/p47's scored candidates: residual PQ. */
+  private[graft] def residualAdcScored(s: SparkSession, dir: String)(implicit knobs: Knobs): DataFrame =
+    adcScored(s, dir, PqResidualStage.load(s, dir), PqResidualCodesStage.load(s, dir),
+      residual = true)
 
   /** Top-5 by ADC score — the shared final ranking of p42/p46. Factored
     * so p35 can rank a PERSISTED scored set: the expensive ADC pass then
@@ -1562,68 +1559,49 @@ object Pipeline {
       .withColumn("arank", row_number().over(rnA))
       .filter(col("arank") <= knobs.pqRerank)
       .select(col("qid"), col("cid"))
-    val qv = e.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val cv = e.select(col("vec_id").as("cid"), col("embedding").as("cv2"))
+    // both re-joins read the same (vec_id, embedding) frame, so one
+    // broadcast of it serves the query and the candidate side
+    val ev = e.select(col("vec_id"), col("embedding"))
     val rn = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    short.join(qv, "qid").join(cv, "cid")
-      .withColumn("sim", expr("cosine_sim(qv, cv2)"))
+    short.join(ev.as("q"), col("qid") === col("q.vec_id"))
+      .join(ev.as("c"), col("cid") === col("c.vec_id"))
+      .withColumn("sim", expr("cosine_sim(q.embedding, c.embedding)"))
       .withColumn("rank", row_number().over(rn))
       .filter(col("rank") <= 5)
       .select(col("qid"), col("cid").as("neighbor_id"), col("rank"),
         round(col("sim"), 6).as("sim_r"))
   }
 
-  /** Two-level (coarse -> fine) variant of [[nearestCells]]: score the
-    * ~sqrt(k) super-centroids, descend into the top `sprobe` super-cells,
-    * score ONLY their member cells — per-vector work drops from k to
-    * ~sqrt(k) + sprobe * k/ks similarity evaluations while keeping the
-    * zero-shuffle broadcast shape (the whole two-level index is ONE
-    * broadcast row: the super index array + a scell -> members map).
-    * Same output contract as [[nearestCells]] (crank 1..kTop, cell,
-    * csim); a vector whose probed super-cells are all empty yields no
-    * rows, mirrored by the oracle's join. */
-  /** The one-row broadcast form of the two-level index: the super index
-    * array and the scell -> member-(cell, cv) map. */
-  private def twoLevelIndex(cells: DataFrame, supers: DataFrame,
-      cellmap: DataFrame): (DataFrame, DataFrame) = {
-    val sidx = supers.groupBy()
-      .agg(collect_list(struct(col("scell"), col("scv"))).as("sidx"))
-    val midx = cells.join(cellmap, "cell")
-      .groupBy(col("scell"))
-      .agg(collect_list(struct(col("cell"), col("cv"))).as("members"))
-      .groupBy()
-      .agg(map_from_entries(collect_list(struct(col("scell"), col("members"))))
-        .as("midx"))
-    (sidx, midx)
-  }
+  /** The staged two-level index row ([[SuperStage]]) as SQL constants
+    * `sidx` and `midx`. */
+  private def indexConsts(s: SparkSession, dir: String)(implicit knobs: Knobs): Map[String, String] =
+    stagedConsts(s, SuperStage.load(s, dir), "index")(identity)
 
   /** SQL for the per-row candidate-cell array: rank the super index,
     * keep the top `sprobe` super-cells, concatenate their member lists
     * (empty super-cells — possible when no cell chose a super-centroid —
     * contribute nothing, mirroring the oracle's join). */
-  private def twoLevelCandidateArr(sprobe: Int): String =
+  private def twoLevelCandidateArr(ix: Map[String, String], sprobe: Int): String =
     s"""flatten(filter(
           transform(
-            top_cells(embedding, sidx, $sprobe),
-            ps -> try_element_at(midx, ps.cell)),
+            top_cells(embedding, ${ix("sidx")}, $sprobe),
+            ps -> try_element_at(${ix("midx")}, ps.cell)),
           ms -> ms IS NOT NULL))"""
 
-  private def nearestCellsTwoLevel(e: DataFrame, cells: DataFrame,
-      supers: DataFrame, cellmap: DataFrame, kTop: Int, sprobe: Int): DataFrame = {
-    val (sidx, midx) = twoLevelIndex(cells, supers, cellmap)
-    val keep = e.columns.map(col).toSeq
-    // ONE fused top-k kernel for every probe width (r17): coarse ranking,
-    // member gather and fine ranking run as plain JVM loops per row —
-    // this is the per-corpus-row assignment path (codes, residuals,
-    // SemDeDup cells) and the probe path in one shape. A vector whose
-    // probed super-cells are all empty yields an empty array → no rows,
-    // the same contract as before (see [[graft.functions.TopCells]]).
-    e.crossJoin(broadcast(sidx)).crossJoin(broadcast(midx))
-      .select(keep :+ posexplode(expr(
-        s"top_cells(embedding, ${twoLevelCandidateArr(sprobe)}, $kTop)"))
-        .as(Seq("crank0", "pc")): _*)
-      .select(keep ++ Seq((col("crank0") + 1).cast("int").as("crank"),
-        col("pc.cell").as("cell"), col("pc.csim").as("csim")): _*)
+  /** Two-level (coarse -> fine) variant of [[nearestCells]] as SQL over a
+    * row's `embedding`: score the ~sqrt(k) super-centroids, descend into
+    * the top super-cells, rank ONLY their member cells — per-vector work
+    * drops from k to ~sqrt(k) + sprobe * k/ks similarity evaluations. The
+    * result is the fused top-k kernel's ARRAY<STRUCT<csim, cell>> of the
+    * `kTop` nearest cells; the coarse width ([[superProbe]]) is sized for
+    * a consumer that probes `width` cells. A vector whose probed
+    * super-cells are all empty gets an empty array, mirrored by the
+    * oracle's join (see [[graft.functions.TopCells]]). */
+  private def nearestCellsSql(s: SparkSession, dir: String, kTop: Int,
+      width: Int)(implicit knobs: Knobs): String = {
+    val kAct = CellStage.count(s, dir)
+    val sprobe = superProbe(superKFor(kAct), kAct, width)
+    s"top_cells(embedding, ${twoLevelCandidateArr(indexConsts(s, dir), sprobe)}, $kTop)"
   }
 
   /** Diagnostic for the scale bound the two-level descent exists to
@@ -1633,29 +1611,26 @@ object Pipeline {
     * instead of k. */
   private[graft] def twoLevelScoredCounts(s: SparkSession, dir: String,
       kTop: Int)(implicit knobs: Knobs): DataFrame = {
-    val cells = CellStage.load(s, dir)
-    val (sc, cm) = SuperStage.load(s, dir)
     val kAct = CellStage.count(s, dir)
     val sprobe = superProbe(superKFor(kAct), kAct, kTop)
-    val (sidx, midx) = twoLevelIndex(cells, sc, cm)
-    emb(s, dir).select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(sidx)).crossJoin(broadcast(midx))
-      .select(col("vec_id"),
-        (size(col("sidx")) + size(expr(twoLevelCandidateArr(sprobe))))
-          .as("n_scored"))
+    val ix = indexConsts(s, dir)
+    emb(s, dir).select(col("vec_id"),
+      (size(expr(ix("sidx"))) + size(expr(twoLevelCandidateArr(ix, sprobe))))
+        .as("n_scored"))
   }
 
-  /** Load the staged two-level index for `dir` and rank each row of `e`
-    * against it: the per-consumer entry point (p16/p32/p34/p35). kTop is
-    * the fine probe width the consumer needs; the coarse width follows
-    * via [[superProbe]]. */
-  private def nearestCellsStaged(s: SparkSession, dir: String, e: DataFrame,
+  /** Rank each row of `e` against the staged two-level index: the
+    * per-consumer entry point (p16/p32/p34/p35). kTop is the fine probe
+    * width the consumer needs; the coarse width follows via
+    * [[superProbe]]. Same output contract as [[nearestCells]] (crank
+    * 1..kTop, cell, csim). */
+  private[graft] def nearestCellsStaged(s: SparkSession, dir: String, e: DataFrame,
       kTop: Int)(implicit knobs: Knobs): DataFrame = {
-    val cells = CellStage.load(s, dir)
-    val (sc, cm) = SuperStage.load(s, dir)
-    val kAct = CellStage.count(s, dir)
-    val ks = superKFor(kAct)
-    nearestCellsTwoLevel(e, cells, sc, cm, kTop, superProbe(ks, kAct, kTop))
+    val keep = e.columns.map(col).toSeq
+    e.select(keep :+ posexplode(expr(nearestCellsSql(s, dir, kTop, kTop)))
+        .as(Seq("crank0", "pc")): _*)
+      .select(keep ++ Seq((col("crank0") + 1).cast("int").as("crank"),
+        col("pc.cell").as("cell"), col("pc.csim").as("csim")): _*)
   }
 
   /** For every row of `e` (any columns + `embedding`), its `kTop` nearest
@@ -1795,7 +1770,7 @@ object Pipeline {
     duckKmeansCells + ",\n" + duckSuperLayer
 
   /** The per-vector two-level candidate ranking as DuckDB CTEs, mirroring
-    * [[nearestCellsTwoLevel]]: `<p>sp` (coarse probe width via
+    * [[nearestCellsSql]]: `<p>sp` (coarse probe width via
     * [[superProbe]]'s integer formula), `<p>ss` (super-centroid ranks),
     * `<p>cand` (member cells of the probed super-cells), `<p>cranked`
     * (fine rank over candidates). `extra` columns ride along (e.g.
@@ -1978,7 +1953,7 @@ object Pipeline {
   private def duckPqCodebook(implicit knobs: Knobs): String = duckPqCodebookFrom("pq", "embeddings")
 
   /** The corpus encode as DuckDB CTEs over `${p}cb`, mirroring
-    * [[buildPqCodesFrom]] (argmin per (vec_id, sub), ties on code).
+    * [[pqCodesSql]] (argmin per (vec_id, sub), ties on code).
     * CTEs: `${p}all` (source subvectors) and `${p}codes`. */
   private def duckPqCodesFrom(p: String, src: String)(implicit knobs: Knobs): String =
     s"""  ${p}all AS (
@@ -6592,16 +6567,18 @@ ${duckResidualAdcCtes("y", "i")},
     // 4·d, a 64x reduction at the defaults. -----------------------------
     QDef("p41b_pq_codes",
       (s, dir) => PqCodesStage.load(s, dir)
+        .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
         .orderBy(col("vec_id"), col("sub")),
       Some(s"""WITH $duckPqCodebook,
 $duckPqCodes
         SELECT vec_id, CAST(sub AS INTEGER) AS sub, code
         FROM pqcodes ORDER BY vec_id, sub""")),
 
-    // ---- IVF-PQ ANN: p16's two-level descent generates candidates; PQ
-    // codes + per-query lookup tables score them (asymmetric distance
-    // computation). The scoring join moves (qid, cid, sub, code) integer
-    // rows — never embeddings — and the per-candidate sums are BIGINT
+    // ---- IVF-PQ ANN: p16's two-level descent picks each query's probe
+    // cells; the staged inverted lists of those cells are the candidates,
+    // scored by the query's lookup table (asymmetric distance
+    // computation) in one pass — see [[adcScored]]. No exchange moves an
+    // embedding, and the per-candidate sums are BIGINT
     // (each LUT entry is floor(dot·10⁸+0.5)), so aggregation order
     // cannot perturb the result: the one float op per candidate is the
     // final cosine recombination from exact integer sums. Approximate
@@ -6654,36 +6631,14 @@ ${duckAdcCtes("w", "v")},
     // int8 entry measures the 4x-compression fidelity; this measures the
     // 32x path, so a deployment can choose its point on the
     // memory/fidelity curve from two pinned numbers. ZERO shuffle: the
-    // codebook broadcasts as one row and the per-vector error is a
+    // codebook is one constant and the per-vector error is a
     // single codegen-able expression over the corpus scan; each
     // subspace term rounds to an integer-scaled BIGINT before the sum,
     // so evaluation order cannot perturb the hash. ----------------------
     QDef("p44_pq_reconstruction",
-      (s, dir) => {
-        val cb = PqStage.load(s, dir)
-        val pidx = cb.select(col("sub"), col("code"), col("cv")).groupBy()
-          .agg(collect_list(struct(col("sub").cast("int").as("sub"),
-            col("code").cast("long").as("cell"), col("cv"))).as("pidx"))
-        val m = knobs.pqM
-        val dsub = s"(size(embedding) div $m)"
-        // fused argmin kernel (r18): one JVM loop per (row, subspace)
-        // instead of an interpreted lambda per codebook entry plus an
-        // interpreted comparator per sort comparison — arithmetic and
-        // ordering pinned in [[graft.functions.NearestSubCell]]
-        emb(s, dir).select(col("vec_id"), col("embedding"))
-          .crossJoin(broadcast(pidx))
-          .select(col("vec_id"), expr(
-            s"""aggregate(
-                  transform(sequence(0, ${m - 1}), mm ->
-                    nearest_sub_cell(
-                      slice(embedding, mm * $dsub + 1, $dsub), pidx, mm).d),
-                  CAST(0 AS BIGINT),
-                  (acc, dd) -> acc + CAST(floor(dd * 100000000.0 + 0.5) AS BIGINT))""")
-            .as("sse_s"))
-          .select(col("vec_id"),
-            (col("sse_s").cast("double") / lit(100000000.0)).as("sse_r"))
-          .orderBy(col("vec_id"))
-      },
+      (s, dir) => withPqSse(s, dir, emb(s, dir).select(col("vec_id"), col("embedding")))
+        .select(col("vec_id"), col("sse").as("sse_r"))
+        .orderBy(col("vec_id")),
       Some(s"""WITH $duckPqCodebook,
 $duckPqCodes,
         pmin AS (
@@ -6724,6 +6679,7 @@ ${duckPqCodebookFrom("rq", "rsrc")}
     // informative part of the signal. ------------------------------------
     QDef("p45b_pqr_codes",
       (s, dir) => PqResidualCodesStage.load(s, dir)
+        .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
         .orderBy(col("vec_id"), col("sub")),
       Some(s"""WITH $duckSuperCells,
 ${duckTwoLevel("rz", "embeddings", Nil, "1")},
@@ -6733,11 +6689,12 @@ ${duckPqCodesFrom("rq", "rsrc")}
         SELECT vec_id, CAST(sub AS INTEGER) AS sub, code
         FROM rqcodes ORDER BY vec_id, sub""")),
 
-    // ---- residual IVF-PQ ANN: candidates from the descent, scored by
-    // reconstructing cos(q, c + r̂) from four integer-scaled dot tables
-    // (q·c per probed pair, q·r̂ per query/code, c·r̂ per cell/code, the
-    // norms) — the per-candidate work is integer sums + ONE float
-    // expression; nothing in the scoring joins moves an embedding. -------
+    // ---- residual IVF-PQ ANN: candidates from the residual inverted
+    // lists of the probed cells, scored by reconstructing cos(q, c + r̂)
+    // from integer-scaled dots (q·c per probe row, q·r̂ in the query's
+    // lookup table, |c + r̂|² staged per vector) — the per-candidate work
+    // is M lookups + ONE float expression; no exchange moves an
+    // embedding. ----------------------------------------------------------
     QDef("p46_knn_ivfpq_residual",
       (s, dir) => adcTop5(residualAdcScored(s, dir))
         .orderBy(col("qid"), col("rank")),

@@ -58,6 +58,17 @@ class DialCacheAuditSpec extends SparkSpecBase {
     }
   }
 
+  test("the IVF-PQ inverted lists re-key when graft.ivfNprobe flips") {
+    // a list's cell is the crank-1 cell at the ADC probe width, so the
+    // probe dial is a fit dial of the staged lists
+    withStageDir { k =>
+      val a = stagedRoot(queries.Pipeline.PqCodesStage.load(spark, sf0001)(k))
+      val b = stagedRoot(queries.Pipeline.PqCodesStage.load(spark, sf0001)(
+        k.copy(ivfNprobe = Some(2))))
+      assert(a != b, "flipping graft.ivfNprobe must re-key the staged inverted lists")
+    }
+  }
+
   test("BpeStage re-keys when graft.bpeMerges flips") {
     withStageDir { k =>
       val a = stagedRoot(queries.Pipeline.BpeStage.load(spark, sf0001)(k.copy(bpeMerges = 1)))

@@ -83,10 +83,11 @@ class PlanAssertionsSpec extends AnyFunSuite {
     val p06 = plan("p06_knn_lsh")
     assert(!p06.contains("CartesianProduct"), p06)
     val p16 = plan("p16_knn_ivf")
-    // the only nested-loop join allowed is against the broadcast tiny
-    // centroid index
+    // the tiny centroid index reaches every row as a broadcast constant
+    // (the staged two-level index row), so no nested-loop join remains
     assert(!p16.contains("CartesianProduct"), p16)
-    assert(p16.contains("BroadcastNestedLoopJoin") || p16.contains("BroadcastExchange"), p16)
+    assert(!p16.contains("NestedLoopJoin"), p16)
+    assert("staged_const\\([^)]*#index#sidx\\)".r.findFirstIn(p16).isDefined, p16)
   }
 
   test("p37: banded candidates dedup on ids before the vector re-join; top-k is group-limited") {
@@ -104,32 +105,59 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(p.contains("WindowGroupLimit"), p)
   }
 
+  /** The physical plan of `name` (AQE's current plan, not executed). */
+  private def physical(name: String): org.apache.spark.sql.execution.SparkPlan =
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  private def scannedPaths(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    p.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+      f.relation.location.rootPaths.map(_.toString) }.flatten
+
+  /** The IVF-PQ scorers over the staged inverted lists (tag `lists`):
+    * no exchange (shuffle or broadcast) carries an embedding-typed column
+    * — the LUT (BIGINT rows) is the widest thing that moves; the only
+    * Generate explodes the queries' probe cells, never the index side
+    * (the per-query corpus reassignment is gone); the codebook reaches
+    * the query side as the broadcast constant of its staged table (tag
+    * `codebook`); the ranking is the group-limited window. */
+  private def assertAdcShape(name: String, lists: String, codebook: String): Unit = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, MapType, StructType}
+    def embedding(t: DataType): Boolean = t match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(e, _) => embedding(e)
+      case StructType(fs) => fs.exists(f => embedding(f.dataType))
+      case MapType(k, v, _) => embedding(k) || embedding(v)
+      case _ => false
+    }
+    val root = physical(name)
+    val text = root.toString
+    assert(!text.contains("CartesianProduct"), text)
+    val exchanges = root.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+    assert(exchanges.nonEmpty, text)
+    exchanges.foreach(e => assert(!e.output.exists(a => embedding(a.dataType)),
+      s"$name: an exchange carries an embedding-typed column: ${e.output}\n$text"))
+    val listsScan = s"/$lists[0-9a-f]{6}_[0-9a-f]{12}$$".r
+    assert(scannedPaths(root).exists(listsScan.findFirstIn(_).isDefined),
+      s"$name must scan the staged inverted lists:\n$text")
+    val generates = root.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(generates.size == 1, s"$name: expected one Generate (the probe cells):\n$text")
+    generates.foreach(g => assert(scannedPaths(g).forall(_.endsWith("embeddings.parquet")),
+      s"$name: a Generate runs over the index side:\n$text"))
+    assert(s"$codebook[0-9a-f]{6}_[0-9a-f]{12}#cb#cb\\)".r.findFirstIn(text).isDefined,
+      s"$name: the LUT must read the staged codebook constant:\n$text")
+    assert(text.contains("WindowGroupLimit"), text)
+  }
+
   test("p42: ADC scoring joins move integer codes, never embeddings; " +
       "codebook and cnorm broadcast") {
-    val p = plan("p42_knn_ivfpq")
-    assert(!p.contains("CartesianProduct"), p)
-    // the codebook-derived sides (query LUT build, cnorm) broadcast —
-    // M*k' rows can never justify a shuffle
-    assert(p.contains("BroadcastHashJoin"), s"codebook joins must broadcast:\n$p")
-    // the candidate-pair shuffle carries ids only: there must be NO
-    // exchange whose partitioning includes an embedding-typed column
-    val badExchange = "Exchange hashpartitioning\\([^)]*(embedding|qv|cv2?)#"
-      .r.findFirstIn(p)
-    assert(badExchange.isEmpty,
-      s"ADC path must never shuffle embedding columns:\n$p")
-    // per-query top-5 rides the window group limit like the other ANN paths
-    assert(p.contains("WindowGroupLimit"), p)
+    assertAdcShape("p42_knn_ivfpq", lists = "pv2", codebook = "pq")
   }
 
   test("p46: residual-ADC scoring moves integers only; LUT sides broadcast") {
-    val p = plan("p46_knn_ivfpq_residual")
-    assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("BroadcastHashJoin"), s"LUT joins must broadcast:\n$p")
-    val badExchange = "Exchange hashpartitioning\\([^)]*(embedding|qv|cv2?|ccv|rcv)#"
-      .r.findFirstIn(p)
-    assert(badExchange.isEmpty,
-      s"residual ADC path must never shuffle embedding columns:\n$p")
-    assert(p.contains("WindowGroupLimit"), p)
+    assertAdcShape("p46_knn_ivfpq_residual", lists = "rv2", codebook = "rq")
   }
 
   test("q34 CTE: aggregate pushed below the join (partial aggregation)") {
@@ -185,16 +213,18 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("p16/p32/p34 read the STAGED k-means index; assignment has no window shuffle") {
-    // the fitted quantizer must come from CellStage's parquet (path
-    // contains the cl_ staging key), never be re-fit inline — and cell
+    // the fitted quantizer must come from the staged index, never be
+    // re-fit inline — and cell
     // assignment is the zero-shuffle broadcast top-k: p32 (assignment
     // only) must plan without ANY Window; the old explode+row_number
     // shape would shuffle n*k rows (n^1.5 at k=sqrt(n))
     Seq("p16_knn_ivf", "p32_semdedup", "p34_hard_negatives").foreach { q =>
       val p = plan(q)
-      // staged path is cl<param-hash>_<corpus-hash>
-      assert("cl[0-9a-f]{6}_".r.findFirstIn(p).isDefined,
-        s"$q must scan the staged cl index:\n$p")
+      // the quantizer reaches the descent as the ready two-level index
+      // row staged over the cl fit (SuperStage: sy2<param-hash>_<corpus-
+      // hash>), read as constants — its centroids, never a fit
+      assert("sy2[0-9a-f]{6}_[0-9a-f]{12}#index#midx".r.findFirstIn(p).isDefined,
+        s"$q must read the staged two-level index:\n$p")
     }
     val p32 = plan("p32_semdedup")
     assert(!p32.contains("Window"),

@@ -3,8 +3,8 @@ package graft.functions
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
 
-/** Direct property tests for the fused ANN assignment kernels
-  * (`top_cells`, `nearest_sub_cell`) — r17 shipped them verified only
+/** Direct property tests for the fused ANN kernels (`top_cells`,
+  * `nearest_sub_cell`, `adc_sum`) — r17 shipped the first two verified only
   * transitively (oracle hashes + family specs), so their pinned corner
   * semantics (NaN-greatest, -0.0 normalization, ties, shorter candidate
   * vectors, empty candidate sets, kTop > candidates) had no direct
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * Method: evaluate the kernel AND the exact interpreted expression
   * chain it replaced (slice(array_sort(transform(...), <comparator>)) /
   * element_at(array_sort(transform(filter(...))), 1)) over a
-  * deterministic corpus that exercises every corner, and assert
-  * row-by-row equality of the results' JSON rendering (bit-exact
-  * doubles via to_json of the structs).
+  * deterministic corpus that exercises every corner, NULL inputs
+  * included, and assert row-by-row equality of the results' JSON
+  * rendering (bit-exact doubles via to_json of the structs).
   */
 class AnnKernelsSpec extends SparkSpecBase {
 
@@ -162,5 +162,115 @@ class AnnKernelsSpec extends SparkSpecBase {
              'cv', array(CAST(1.0 AS FLOAT)))), 0)""")
       .collect())
     assert(e2.getMessage.contains("nearest_sub_cell"))
+  }
+
+  /** [[corpus]] with NULLs injected where the kernels read: whole query
+    * vectors, query elements, index elements, and each struct field. */
+  private def withNulls(): Unit = {
+    corpus.createOrReplaceTempView("ann_corpus")
+    spark.sql(
+      """SELECT id,
+           CASE WHEN pmod(id, 7) = 0 THEN NULL
+                ELSE transform(vec, (x, j) ->
+                  CASE WHEN pmod(xxhash64(id, j, 30), 17) = 0 THEN NULL ELSE x END)
+           END AS vec,
+           CASE WHEN pmod(id, 23) = 0 THEN NULL
+                ELSE transform(idx, (c, i) -> CASE
+                  WHEN pmod(xxhash64(id, i, 31), 9) = 0 THEN NULL
+                  WHEN pmod(xxhash64(id, i, 32), 9) = 0
+                    THEN named_struct('cell', CAST(NULL AS BIGINT), 'cv', c.cv)
+                  WHEN pmod(xxhash64(id, i, 33), 9) = 0
+                    THEN named_struct('cell', c.cell, 'cv', CAST(NULL AS ARRAY<FLOAT>))
+                  ELSE c END)
+           END AS idx
+         FROM ann_corpus""").createOrReplaceTempView("ann_nulls")
+  }
+
+  test("top_cells == interpreted chain on NULL vectors, elements and fields") {
+    withNulls()
+    for (k <- Seq(1, 3, 12, 99)) {
+      assertSameColumn(spark.sql(
+        s"""SELECT top_cells(vec, idx, $k) AS a, ${chainTopCells(k)} AS b
+            FROM ann_nulls"""))
+    }
+    // a NULL k is NULL, as the chain's slice
+    assertSameColumn(spark.sql(
+      s"""SELECT top_cells(vec, idx, CAST(NULL AS INT)) AS a,
+             slice(array_sort(transform(idx, c -> named_struct(
+               'csim', cosine_sim(vec, c.cv) + 0.0d, 'cell', c.cell)), $simDesc),
+               1, CAST(NULL AS INT)) AS b
+          FROM ann_nulls"""))
+  }
+
+  test("nearest_sub_cell == interpreted chain on NULL vectors, elements and fields") {
+    spark.sql(
+      """SELECT id,
+           CASE WHEN pmod(id, 7) = 0 THEN NULL
+                ELSE transform(sequence(0, 7), j -> CAST(
+                  pmod(xxhash64(id, j, 41), 2001) / 1000.0 - 1.0 AS FLOAT)) END AS vec,
+           flatten(transform(sequence(0, 2), s ->
+             transform(sequence(0, 5), c -> CASE
+               WHEN pmod(xxhash64(id, s, c, 42), 11) = 0 THEN NULL
+               WHEN pmod(xxhash64(id, s, c, 43), 11) = 0 THEN named_struct(
+                 'sub', CAST(NULL AS INT), 'cell', CAST(c AS BIGINT),
+                 'cv', transform(sequence(0, 7), j -> CAST(0.5 AS FLOAT)))
+               WHEN pmod(xxhash64(id, s, c, 44), 11) = 0 THEN named_struct(
+                 'sub', CAST(s AS INT), 'cell', CAST(NULL AS BIGINT),
+                 'cv', transform(sequence(0, 7), j -> CAST(0.25 AS FLOAT)))
+               WHEN pmod(xxhash64(id, s, c, 45), 11) = 0 THEN named_struct(
+                 'sub', CAST(s AS INT), 'cell', CAST(c AS BIGINT),
+                 'cv', CAST(NULL AS ARRAY<FLOAT>))
+               ELSE named_struct(
+                 'sub', CAST(s AS INT),
+                 'cell', CAST(pmod(xxhash64(id, s, c, 46), 4) AS BIGINT),
+                 'cv', transform(sequence(0, 7), j -> CAST(
+                   pmod(xxhash64(s, c, j, 47), 2001) / 1000.0 - 1.0 AS FLOAT)))
+               END))) AS pidx
+         FROM range(150)""").createOrReplaceTempView("pq_nulls")
+    for (sub <- Seq("0", "1", "2", "CAST(NULL AS INT)")) {
+      assertSameColumn(spark.sql(
+        s"""SELECT nearest_sub_cell(vec, pidx, $sub) AS a, ${chainNearestSub(sub)} AS b
+            FROM pq_nulls"""))
+    }
+  }
+
+  test("adc_sum == interpreted chain (NULLs, short rows, bad codes, overflow)") {
+    // M = 4 rows of 5 BIGINT entries; each corner on its own slice of ids
+    val df = spark.sql(
+      """SELECT
+           CASE WHEN pmod(id, 13) = 0 THEN NULL
+                WHEN pmod(id, 13) = 1 THEN slice(lut, 1, 3)
+                ELSE lut END AS lut,
+           CASE WHEN pmod(id, 11) = 0 THEN NULL
+                WHEN pmod(id, 11) = 1 THEN slice(codes, 1, 3)
+                WHEN pmod(id, 11) = 2 THEN array(codes[0], codes[1], codes[2], -1)
+                WHEN pmod(id, 11) = 3 THEN array(codes[0], codes[1], codes[2], 5)
+                WHEN pmod(id, 11) = 4 THEN array(codes[0], CAST(NULL AS INT), codes[2], codes[3])
+                ELSE codes END AS codes
+         FROM (
+           SELECT id,
+             transform(sequence(0, 3), m -> CASE
+               WHEN pmod(xxhash64(id, m, 51), 41) = 0 THEN NULL
+               WHEN pmod(xxhash64(id, m, 52), 41) = 0 THEN array(CAST(1 AS BIGINT))
+               ELSE transform(sequence(0, 4), c -> CASE
+                 WHEN pmod(xxhash64(id, m, c, 53), 47) = 0 THEN CAST(NULL AS BIGINT)
+                 WHEN pmod(xxhash64(id, m, c, 54), 47) = 0 THEN 9223372036854775807
+                 ELSE pmod(xxhash64(id, m, c, 55), 200000000000) - 100000000000 END)
+               END) AS lut,
+             transform(sequence(0, 3), m -> CAST(pmod(xxhash64(id, m, 56), 5) AS INT)) AS codes
+           FROM range(400))""")
+    df.createOrReplaceTempView("adc_corpus")
+    val out = spark.sql(
+      """SELECT adc_sum(lut, codes) AS a,
+           aggregate(zip_with(lut, codes, (row, c) -> get(row, c)),
+             CAST(0 AS BIGINT), (acc, x) -> acc + x) AS b
+         FROM adc_corpus""")
+    val bad = out.filter(!(col("a") <=> col("b")))
+    val n = bad.count()
+    if (n != 0) bad.show(5, truncate = false)
+    assert(n == 0, s"$n rows diverge between adc_sum and its reference chain")
+    // the corpus reaches each outcome: NULL and non-NULL sums
+    assert(out.filter(col("a").isNull).count() > 0)
+    assert(out.filter(col("a").isNotNull).count() > 100)
   }
 }

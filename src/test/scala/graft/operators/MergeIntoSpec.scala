@@ -136,4 +136,50 @@ class MergeIntoSpec extends SparkSpecBase {
       notMatched = Seq(MergeInto.WhenNotMatched(None, Map("id" -> s("sid")))))
     assert(c == MergeInto.Counts(inserted = 1, updated = 1, deleted = 1))
   }
+
+  test("parser: USING subquery and INSERT VALUES nest parentheses to any depth") {
+    // three levels in the source (the subquery, TABLE(, GENERATOR(), three
+    // in the VALUES list (the list, COALESCE(, UPPER()
+    val m = graft.emulator.MergeParser.parse(
+      """MERGE INTO t USING (SELECT SEQ4() AS id FROM TABLE(GENERATOR(ROWCOUNT => 60))) s
+         ON t.id = s.id
+         WHEN MATCHED THEN UPDATE SET t.name = 'x)'
+         WHEN NOT MATCHED THEN INSERT (id, name) VALUES (s.id, COALESCE(s.a, UPPER(s.b)))""")
+    assert(m.source == "(SELECT SEQ4() AS id FROM TABLE(GENERATOR(ROWCOUNT => 60)))")
+    assert(m.sourceAlias.contains("s"))
+    assert(m.onCondition == "t.id = s.id")
+    assert(m.whenClauses.map(_.action) == Seq(
+      graft.emulator.MergeParser.UpdateAction(Seq("t.name" -> "'x)'")),
+      graft.emulator.MergeParser.InsertAction(Seq("id", "name"),
+        Seq("s.id", "COALESCE(s.a, UPPER(s.b))"))))
+    // a quoted parenthesis does not close the group
+    val q = graft.emulator.MergeParser.parse(
+      """MERGE INTO t USING (SELECT ')' AS p) s ON t.p = s.p
+         WHEN NOT MATCHED THEN INSERT VALUES ('(', s.p)""")
+    assert(q.source == "(SELECT ')' AS p)")
+    assert(q.whenClauses.map(_.action) ==
+      Seq(graft.emulator.MergeParser.InsertAction(Nil, Seq("'('", "s.p"))))
+  }
+
+  test("MERGE statement: TABLE(GENERATOR(ROWCOUNT => 60)) source, nested VALUES expressions") {
+    import graft.emulator._
+    val executor = new Executor(new Catalog(spark),
+      new graft.stage.StageManager(java.nio.file.Files.createTempDirectory("graft_stages")),
+      new WarehouseManager(), new QueryHistory())
+    executor.catalog.createDatabase("MERGE_GEN_DB")
+    val ctx = Executor.Context("merge-gen", "MERGE_GEN_DB", "PUBLIC")
+    def exec(sql: String) = executor.execute(ctx, sql)
+    exec("CREATE TABLE mg_t (id INTEGER, name VARCHAR(20))")
+    exec("INSERT INTO mg_t VALUES (0, 'zero')")
+    val r = exec(
+      """MERGE INTO mg_t t
+         USING (SELECT SEQ4() AS id, CAST(NULL AS VARCHAR(20)) AS a, 'x' || SEQ4() AS b
+                FROM TABLE(GENERATOR(ROWCOUNT => 60))) s
+         ON t.id = s.id
+         WHEN NOT MATCHED THEN INSERT (id, name) VALUES (s.id, COALESCE(s.a, UPPER(s.b)))""")
+    assert(r.rows.head == Seq(59L, 0L, 0L), r.rows) // inserted, updated, deleted
+    assert(exec("SELECT COUNT(*) FROM mg_t").rows.head.head == 60L)
+    assert(exec("SELECT name FROM mg_t WHERE id = 7").rows.head.head == "X7")
+    assert(exec("SELECT name FROM mg_t WHERE id = 0").rows.head.head == "zero")
+  }
 }
